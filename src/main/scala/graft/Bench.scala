@@ -287,27 +287,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val load0 = loadavg
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Partition-count posture is DATA-scale-bound, not core-bound: the
-      // round-9 sf10 probe measured q_ann_ivf 158→93 s by raising AQE's
-      // initial partitions (ceiling partitions spill at ×100 the bench
-      // SF), but the SAME raise costs ×3-4 on the iterative/materializer
-      // family at sf0.1 (128 tasks per tiny exchange). So the default
-      // stays Spark's (initial = shuffle.partitions) and scale probes
-      // opt in explicitly — a deployment knob, like executor count.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS", cpus))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // tmpfs shuffle scratch: /tmp's virtio latency bursts randomly
-      // added 20-30 s to whichever query was mid-shuffle (see
-      // GraftSession.scratchRoot)
-      .config("spark.local.dir", GraftSession.scratchRoot)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // untimed warmup: JIT/codegen/parquet-reader paths, so the first
     // timed query doesn't absorb one-time JVM costs.
     //

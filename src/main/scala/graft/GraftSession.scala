@@ -6,16 +6,16 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.functions.{CountMinSketchAgg, DotProductF, PolyHashExpr, ShingleHashesExpr, StopCountExpr, TokenCountExpr, TokenHashesExpr}
 
-/** Library entry points: SQL function registration + a session builder
-  * with the engine's recommended configuration.
+/** Library entry points: the SQL function surface and the one session
+  * configuration every main, the test suite and the benchmark run under.
   *
   * [[GraftExtensions]] makes the custom Catalyst expressions callable
   * from SQL (`SELECT dot_f(a, b)`, `poly_hash(text)`, …) in any session
   * created with
   * `--conf spark.sql.extensions=graft.GraftExtensions`, the standard
-  * plugin mechanism — no code changes to the application. The same
-  * registrations are applied directly by [[GraftSession.builder]] for
-  * programmatic use.
+  * plugin mechanism — no code changes to the application.
+  * [[GraftSession.builder]] sets that conf, so every session built
+  * through it has the functions from construction on.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
@@ -59,11 +59,13 @@ object GraftExtensions {
       })))
 }
 
+/** The only place a [[SparkSession]] is built. [[builder]] carries the
+  * engine configuration; [[local]] adds the local-mode deployment
+  * settings the mains share. Keeping both here means the tests, the
+  * correctness dump (`Verify`) and the timers (`Bench`, `Profile`,
+  * `perfbench`) cannot drift apart in serializer, time zone, scratch
+  * root or function surface. */
 object GraftSession {
-  /** Register the function surface on an already-running session. */
-  def register(spark: SparkSession): Unit =
-    org.apache.spark.sql.graft.Bridge.registerFunctions(spark, GraftExtensions.functions)
-
   /** RAM-backed scratch root for shuffle + materialization temp files.
     *
     * Local-mode shuffle spills land under `spark.local.dir` (default
@@ -102,7 +104,24 @@ object GraftSession {
       // events.parquet carries TIMESTAMP(NANOS) — see Tables.events
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 
-  /** Local session for tests/tools. */
-  def local(cores: Int): SparkSession =
-    builder(cores).master(s"local[$cores]").getOrCreate()
+  /** The local session every main runs under: [[builder]] on
+    * `local[SPARK_GRAFT_CPUS]` (default 4), UI off, log level WARN.
+    *
+    * SPARK_GRAFT_INIT_PARTS sets AQE's initial shuffle partitions
+    * (default: the core count). Partition posture is bound to DATA
+    * scale, not cores: raising it took q_ann_ivf from 158 to 93 s at
+    * sf10 but cost ×3-4 on the iterative/materializer family at sf0.1
+    * (128 tasks per tiny exchange), so scale probes opt in explicitly —
+    * a deployment knob, like executor count. */
+  def local(): SparkSession = {
+    val cores = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.toInt)
+    val spark = builder(cores)
+      .master(s"local[$cores]")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS", cores.toString))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Physical-plan audit: prints `explain("formatted")` for each registered
   * query so partitioning/shuffle/broadcast/pushdown decisions are
   * reviewable (and diffable across rounds).
@@ -12,15 +10,10 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // a typo'd name must fail loudly, not silently drop out of the audit
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val spark = GraftSession.local()
     // dump materialized subtrees too (see Materializer.materialize), and
     // clear between queries so every dump is self-contained — a shared
     // tag (candidx …) would otherwise print only under the first query.
@@ -29,11 +22,9 @@ object PlanAudit {
     System.setProperty("graft.plan.dump", "1")
     try {
       names.foreach { name =>
-        SparkEntry.queries.get(name).foreach { fn =>
-          println(s"\n===== $name =====")
-          fn(spark, sfDir).explain("formatted")
-          Materializer.clear()
-        }
+        println(s"\n===== $name =====")
+        SparkEntry.queries(name)(spark, sfDir).explain("formatted")
+        Materializer.clear()
       }
     } finally {
       System.clearProperty("graft.plan.dump")

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: run one registered query and attribute wall-clock to Spark
   * stages. Usage: `runMain graft.Profile <query> [sfDir] [reps]`.
@@ -20,19 +19,7 @@ object Profile {
     val reps = if (args.length > 2) args(2).toInt else 2
     names.foreach(n =>
       require(SparkEntry.queries.contains(n), s"unknown query: $n"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // honor the same scale knob Bench honors, so profile stage
-      // attribution runs under the bench harness's plan shape
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS", cpus))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.local.dir", GraftSession.scratchRoot)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     case class St(id: Int, name: String, tasks: Int, runMs: Long, cpuMs: Long,
                   gcMs: Long, wallMs: Long,
                   inRows: Long, outRows: Long, shRdRows: Long, shRdMb: Long,

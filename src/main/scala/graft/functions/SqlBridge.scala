@@ -15,17 +15,4 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** Register functions on an ALREADY-RUNNING session (the
-    * spark.sql.extensions conf only applies at session construction).
-    * sessionState is private[sql], hence here. */
-  def registerFunctions(
-      spark: org.apache.spark.sql.SparkSession,
-      fns: Seq[(String,
-        org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
-        Seq[Expression] => Expression)]): Unit =
-    fns.foreach { case (name, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
-    }
 }

@@ -147,9 +147,8 @@ object Dedup {
   // low-df shingles, so the filtered jaccard is within noise of the
   // unfiltered one. The cap/join/score core is the shared
   // [[NearDup.cappedJaccardPairs]] — count-in-the-aggregate, NOT the
-  // AllPairs prefix variant ([[NearDup.prefixJaccardJoin]]): measured
-  // at sf10, this corpus's candidate density refutes the prefix+verify
-  // shape (see the adjudication on that method).
+  // AllPairs prefix variant: measured at sf10, this corpus's candidate
+  // density refutes the prefix+verify shape (see ROUND14_NOTES.md).
   def ngramJaccard(spark: SparkSession, dir: String): DataFrame =
     NearDup.cappedJaccardPairs(shingleIndex(spark, dir), "sh", DF_CAP,
       JACCARD_T, "jaccard", Materializer.tagFor("candidx", dir),
@@ -193,7 +192,7 @@ object Dedup {
     * partition), so the cost is two hash passes over the fanout — the
     * same Σ df²-bounded volume every exact containment join pays; the
     * AllPairs prefix variant was measured and refuted for this corpus
-    * (candidate density — see [[NearDup.prefixJaccardJoin]]). */
+    * (candidate density — see ROUND14_NOTES.md). */
   def containment(spark: SparkSession, dir: String): DataFrame = {
     val st = NearDup.cappedPairStats(shingleIndex(spark, dir), "sh", DF_CAP,
       Materializer.tagFor("candidx", dir), col("a.doc_id") < col("b.doc_id"),

@@ -226,105 +226,6 @@ object NearDup {
       .select(col(c1), col(c2), col("common"), col("n1"), col("n2"))
   }
 
-  // ---------------------------------------------- prefix-filtered path
-  // AllPairs/SSJoin prefix filtering (Bayardo et al., "Scaling Up All
-  // Pairs Similarity Search", WWW'07; Xiao et al. PPJoin) re-expressed
-  // relationally: under ONE global total order on keys (ascending long
-  // value), a pair with jaccard ≥ t must share its SMALLEST common key
-  // within the first n − ⌈t·n⌉ + 1 keys of BOTH docs' sorted key lists.
-  // Proof: j ≥ t ⇒ overlap o ≥ t(n1+n2)/(1+t) ≥ t·max(n1,n2) (the last
-  // step needs min ≥ t·max, which any pair that can pass already
-  // satisfies — the size gate); let k* be the smallest common key; in
-  // doc i the o−1 other common keys all sort AFTER k*, so k*'s rank
-  // ≤ nᵢ − o + 1 ≤ nᵢ − ⌈t·nᵢ⌉ + 1. So joining only each doc's PREFIX
-  // posting rows generates a candidate superset of the true pair set —
-  // at t = 0.5 the prefix is ~half the posting list, quartering the
-  // pair-join fanout — and exact verification restores precision. The
-  // prefix length is computed as n − floor(t·n) + 1 ≥ n − ⌈t·n⌉ + 1 so
-  // double rounding in fl(t·n) can only LENGTHEN the prefix:
-  // conservative, never lossy.
-  //
-  // MEASURED AND NOT ADOPTED for the registry queries (round 14, sf10,
-  // 32cpu): this corpus's candidate DENSITY defeats the shape. The
-  // prefix join emitted 45.8 M fanout rows that deduped to 43.1 M
-  // candidate pairs — background pairs share ~1 sub-cap shingle each,
-  // so candidates ≈ fanout and per-candidate verification cost is the
-  // whole game. Verifying by joining each candidate to its two sorted
-  // key arrays shuffled ~300 B/pair (12.9 GB written + 13 GB read at
-  // sf10 — the stage-26/32 profile), where the relational twin counts
-  // `common` inside the SAME hash aggregate that consumes the 20 B/row
-  // fanout: q_ngram_jaccard 82.7 → 123.7 s, q_dedup_clusters 85.9 →
-  // 426.6 s. The halved fanout cannot pay for array-sized candidate
-  // rows unless candidates are SPARSE relative to fanout (high
-  // threshold, heavy-tailed key sharing). Kept, spec-pinned
-  // (PrefixJaccardSpec proves bit-equality), as the variant for that
-  // regime; the registry rides [[cappedJaccardJoin]].
-
-  /** The per-doc capped key SET as one canonically-sorted array row:
-    * (doc_id, ks ASC-sorted ARRAY<BIGINT>, n = |ks|). Materialized —
-    * it is the substrate for prefix generation AND both verification
-    * probes. Ascending order doubles as the prefix-filter total order
-    * and the linear-merge order for exact intersection counts. */
-  def docSetArrays(postings: DataFrame, key: String, dfCap: Int,
-                   tag: String, inputMaterialized: Boolean = false): DataFrame =
-    Materializer.materialize(tag + "-arr",
-      cappedPostings(postings, key, dfCap, tag, inputMaterialized)
-        .groupBy(col("doc_id"))
-        .agg(graft.functions.SortedIntersect.sortedLongs(
-            collect_list(col(key))).as("ks"),
-          count(lit(1)).as("n")))
-
-  /** Prefix-filtered equivalent of [[cappedJaccardPairs]] — identical
-    * output, pinned by PrefixJaccardSpec against the relational twin. */
-  def prefixJaccardPairs(postings: DataFrame, key: String, dfCap: Int,
-                         threshold: Double, scoreName: String, tag: String,
-                         inputMaterialized: Boolean = false): DataFrame =
-    prefixJaccardJoin(postings, key, dfCap, threshold, scoreName, tag,
-      col("a.doc_id") < col("b.doc_id"), "d1", "d2", inputMaterialized)
-
-  /** Prefix-filtered equivalent of [[cappedJaccardJoin]]. Candidates
-    * come from a self-join of the PREFIX posting list only (plus the
-    * size gate — needed for the prefix bound's o ≥ t·max step anyway);
-    * verification is a linear merge over the two docs' sorted key
-    * arrays instead of a second posting-list join, so the candidate
-    * pair set — already prefix-thinned — is the last large relation in
-    * the plan. `pairCond` may reference `a.doc_id` / `b.doc_id`. */
-  def prefixJaccardJoin(postings: DataFrame, key: String, dfCap: Int,
-                        threshold: Double, scoreName: String, tag: String,
-                        pairCond: Column, c1: String, c2: String,
-                        inputMaterialized: Boolean = false): DataFrame = {
-    val arrs = docSetArrays(postings, key, dfCap, tag, inputMaterialized)
-    val plen = (col("n") - floor(col("n").cast("double") * lit(threshold))
-      .cast("long") + lit(1L)).cast("int")
-    val pfx = arrs.select(col("doc_id"), col("n"),
-      explode(slice(col("ks"), lit(1), plen)).as(key))
-    // SHUFFLE_HASH + the same provably-exact size gate as
-    // cappedJaccardJoin (see there for the fl()-monotonicity argument)
-    val cands = pfx.as("a").hint("shuffle_hash").join(pfx.as("b"),
-        col(s"a.$key") === col(s"b.$key") && pairCond &&
-          least(col("a.n"), col("b.n")).cast("double") /
-            greatest(col("a.n"), col("b.n")) >= threshold)
-      .select(col("a.doc_id").as(c1), col("b.doc_id").as(c2))
-      .distinct()
-    // verification probes: candidate-set-sized joins against the doc
-    // arrays (AQE broadcasts the small side), one generated linear
-    // merge per pair — same `common` as the posting self-join count
-    // (both count distinct shared capped keys), same score arithmetic
-    // as the relational twin, so the output hashes identically
-    cands
-      .join(arrs.as("s1"), col(c1) === col("s1.doc_id"))
-      .join(arrs.as("s2"), col(c2) === col("s2.doc_id"))
-      .select(col(c1), col(c2),
-        graft.functions.SortedIntersect.intersectCountSorted(
-          col("s1.ks"), col("s2.ks")).as("common"),
-        col("s1.n").as("n1"), col("s2.n").as("n2"))
-      .select(col(c1), col(c2), col("common"),
-        (col("common").cast("double") / (col("n1") + col("n2") - col("common")))
-          .as(scoreName))
-      .filter(col(scoreName) >= threshold)
-      .orderBy(c1, c2)
-  }
-
   /** Oracle-SQL twin of [[cappedJaccardPairs]]: CTE suffix + final
     * SELECT, given the name of a prior CTE holding the `(doc_id, key)`
     * posting list. Callers append it after `WITH <src> AS (...),`. */

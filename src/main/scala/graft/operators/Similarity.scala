@@ -138,26 +138,20 @@ object Similarity {
       .select(col("query_id"), (col("p") + 1).cast("int").as("rnk"),
         col("s.id").as("neighbor_id"), col("s.score").as(scoreName))
 
-  /** Test-only branch override (env vars can't be set in-process):
-    * Some(true) forces the relational twins, Some(false) the kernels,
-    * None defers to the env knob + bound. KernelBranchABSpec uses it to
-    * A/B the WHOLE registry functions — not just the *At helpers — on a
-    * corpus above the driver SFs, so the relational fallback can't rot
-    * untested (VERDICT r12 #4). */
+  /** Test-only branch override: Some(true) forces the relational twins,
+    * Some(false) the kernels, None defers to the size bound.
+    * KernelBranchABSpec uses it to A/B the WHOLE registry functions —
+    * not just the *At helpers — on a corpus above the driver SFs, so the
+    * relational fallback can't rot untested (VERDICT r12 #4). */
   private[graft] var forceRelationalForTest: Option[Boolean] = None
 
   /** Whether the query subset is small enough to collect/broadcast —
     * the bounded-anchor-batch contract every exact-scan operator
-    * declares (see [[QUERY_BROADCAST_MAX]]). Probe runs can set
-    * SPARK_GRAFT_FORCE_RELATIONAL=1 to exercise the relational
-    * (join-formulated) twins at any size — the A/B knob the round-12
-    * kernel-vs-join measurements use. */
+    * declares (see [[QUERY_BROADCAST_MAX]]). */
   private def queryBatchBounded(spark: SparkSession, dir: String): Boolean =
     forceRelationalForTest match {
       case Some(forceRel) => !forceRel
-      case None =>
-        !sys.env.get("SPARK_GRAFT_FORCE_RELATIONAL").contains("1") &&
-          nVecOf(spark, dir) / QUERY_MOD <= QUERY_BROADCAST_MAX
+      case None => nVecOf(spark, dir) / QUERY_MOD <= QUERY_BROADCAST_MAX
     }
 
   /** Driver-collected bounded query batch (id, vec, nrm), sorted by id —

@@ -355,7 +355,7 @@ object TextOps {
   // space, mirrored exactly in the oracle. The cap/join/score core is
   // the shared [[NearDup.cappedJaccardPairs]] (count-in-the-aggregate;
   // the AllPairs prefix variant was measured and refuted at sf10 — see
-  // [[NearDup.prefixJaccardJoin]]).
+  // ROUND14_NOTES.md).
   private val WDF_CAP = 20
   private val WJACCARD_T = 0.5
 

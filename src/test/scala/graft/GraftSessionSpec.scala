@@ -6,7 +6,6 @@ class GraftSessionSpec extends AnyFunSuite {
   import SparkTestSession._
 
   test("custom expressions are callable from SQL once registered") {
-    GraftSession.register(spark)
     val r = spark.sql(
       """SELECT poly_hash('hello') AS p,
         |       dot_f(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)),
@@ -27,7 +26,6 @@ class GraftSessionSpec extends AnyFunSuite {
   }
 
   test("non-string input to text expressions fails at analysis, not execution") {
-    GraftSession.register(spark)
     // checkInputDataTypes: an INT child must be rejected when the plan is
     // analyzed — previously it surfaced as a ClassCastException mid-task
     for (call <- Seq("token_count(42)", "stop_count(42, 'the')", "poly_hash(42)")) {
@@ -39,11 +37,14 @@ class GraftSessionSpec extends AnyFunSuite {
   }
 
   test("GraftSession.builder carries the engine configuration") {
-    val b = GraftSession.builder(4)
-    // builder is config-only; constructing a full second session in-JVM
-    // is not supported under a shared test session, so assert via the
-    // extensions class being instantiable and the conf keys present.
-    assert(new GraftExtensions() != null)
+    // the suite's session is built by GraftSession.builder(4), so its
+    // conf is the configuration every main and the benchmark run under
+    def conf(k: String): Option[String] = spark.conf.getOption(k)
+    assert(conf("spark.serializer").contains("org.apache.spark.serializer.KryoSerializer"))
+    assert(conf("spark.sql.session.timeZone").contains("UTC"))
+    assert(conf("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
+    assert(conf("spark.sql.extensions").contains(classOf[GraftExtensions].getName))
+    assert(conf("spark.sql.shuffle.partitions").contains("4"))
     assert(GraftExtensions.functions.map(_._1).toSet ==
       Set("dot_f", "poly_hash", "token_hashes", "shingle_hashes", "cms_sketch",
         "token_count", "stop_count"))

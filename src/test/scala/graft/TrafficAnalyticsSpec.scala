@@ -6,15 +6,14 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.TrafficAnalytics
 
+/** The suite's one session: the engine configuration every main runs
+  * under ([[GraftSession.builder]]), pinned to 4 cores so results and
+  * plan shapes don't depend on the host. */
 object SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
+  lazy val spark: SparkSession = GraftSession.builder(4)
     .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
     .config("spark.ui.enabled", "false")
+    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
     .getOrCreate()
   val sf = "/root/testdata/sf0.001"
 }
