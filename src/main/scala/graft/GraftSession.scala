@@ -89,10 +89,32 @@ object GraftSession {
     root.toString
   }
 
+  /** Generated classes Spark's codegen cache keeps (default 100).
+    *
+    * The cache is an LRU keyed by generated source. One warm
+    * stream-replay micro-batch (three streaming queries, four
+    * foreachBatch sinks) cycles through about 115 distinct classes, so
+    * at 100 entries nearly every lookup missed and each batch paid
+    * about 110 Janino compiles plus the JIT work on each fresh class;
+    * at 1000 a warm batch compiles 12. 1000 is ~9× the working set:
+    * room for several concurrent pipelines before the LRU thrashes
+    * again, and still a bound on the classes (and metaspace) the cache
+    * pins. The value is static: the first session of the JVM fixes it. */
+  val CodegenCacheEntries = 1000
+
   /** Builder preloaded with the engine's recommended configuration.
     * `cores` sizes local parallelism AND shuffle partitions — on a real
     * cluster pass shufflePartitions ≈ 2-3× total executor cores instead
-    * and drop the master override. */
+    * and drop the master override.
+    *
+    * The `file:` scheme resolves to [[ForkFreeLocalFileSystem]] and
+    * [[ForkFreeLocalFs]]: without libhadoop, Hadoop's own local
+    * filesystem starts a `chmod` per created file and a `readlink` per
+    * rename side, thousands per streaming run. Hadoop caches a
+    * `FileSystem` per scheme and user, not per configuration, so build
+    * the session before anything in the JVM calls `FileSystem.get` on a
+    * `file:` path; an instance cached earlier stays the stock one
+    * (still correct, only slower). `FileContext` is not cached. */
   def builder(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession.Builder =
     SparkSession.builder()
       .config("spark.sql.extensions", classOf[GraftExtensions].getName)
@@ -103,6 +125,9 @@ object GraftSession {
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       // events.parquet carries TIMESTAMP(NANOS) — see Tables.events
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[ForkFreeLocalFs].getName)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
 
   /** The local session every main runs under: [[builder]] on
     * `local[SPARK_GRAFT_CPUS]` (default 4), UI off, log level WARN.

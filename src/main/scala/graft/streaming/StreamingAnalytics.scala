@@ -419,9 +419,13 @@ object StreamingAnalytics {
       .option("checkpointLocation", checkpointDir)
     val w = trigger.fold(w0)(w0.trigger)
     w.foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (!batch.isEmpty) {
-          batch.persist()
-          try {
+        // persist BEFORE the emptiness check: the batch is a plan over
+        // the incremental execution's RDD, so an uncached isEmpty runs
+        // the upstream (a stateful join loads and commits its state)
+        // and the first write runs it again
+        batch.persist()
+        try {
+          if (!batch.isEmpty) {
             val e = lit(epochId)
             withProcessingLatency(batch).withColumn("epoch_id", e)
               .write.mode("append").parquet(s"$outDir/streaming_metrics")
@@ -431,8 +435,8 @@ object StreamingAnalytics {
               .write.mode("append").parquet(s"$outDir/session_categories")
             engagementWindowed(batch).withColumn("epoch_id", e)
               .write.mode("append").parquet(s"$outDir/engagement_scores")
-          } finally { batch.unpersist(); () }
-        }
+          }
+        } finally { batch.unpersist(); () }
         ()
       }
       .start()

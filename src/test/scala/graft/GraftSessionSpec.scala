@@ -1,5 +1,9 @@
 package graft
 
+import java.net.URI
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileContext, FileSystem}
 import org.scalatest.funsuite.AnyFunSuite
 
 class GraftSessionSpec extends AnyFunSuite {
@@ -45,8 +49,33 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(conf("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
     assert(conf("spark.sql.extensions").contains(classOf[GraftExtensions].getName))
     assert(conf("spark.sql.shuffle.partitions").contains("4"))
+    assert(conf("spark.hadoop.fs.file.impl").contains(classOf[ForkFreeLocalFileSystem].getName))
+    assert(conf("spark.hadoop.fs.AbstractFileSystem.file.impl")
+      .contains(classOf[ForkFreeLocalFs].getName))
+    assert(conf("spark.sql.codegen.cache.maxEntries")
+      .contains(GraftSession.CodegenCacheEntries.toString))
     assert(GraftExtensions.functions.map(_._1).toSet ==
       Set("dot_f", "poly_hash", "token_hashes", "shingle_hashes", "cms_sketch",
         "token_count", "stop_count"))
+  }
+
+  test("file: paths resolve to the fork-free filesystem through both Hadoop clients") {
+    val hconf = spark.sessionState.newHadoopConf()
+    assert(FileSystem.get(URI.create("file:///"), hconf).isInstanceOf[ForkFreeLocalFileSystem])
+    assert(FileContext.getLocalFSFileContext(hconf).getDefaultFileSystem
+      .isInstanceOf[ForkFreeLocalFs])
+  }
+
+  test("the session must come before the first cached file: filesystem") {
+    // Hadoop caches one FileSystem per scheme and user and ignores the
+    // conf of later calls: once the session's filesystem is cached, a
+    // conf that never heard of it gets the same instance...
+    val cached = FileSystem.get(URI.create("file:///"), spark.sessionState.newHadoopConf())
+    assert(cached.isInstanceOf[ForkFreeLocalFileSystem])
+    assert(FileSystem.get(URI.create("file:///"), new Configuration()) eq cached)
+    // ...and in the other order the stock class would stick: an
+    // uncached instance from a plain conf is not the fork-free one
+    val stock = FileSystem.newInstance(URI.create("file:///"), new Configuration())
+    try assert(!stock.isInstanceOf[ForkFreeLocalFileSystem]) finally stock.close()
   }
 }

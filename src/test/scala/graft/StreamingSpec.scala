@@ -120,6 +120,35 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("multi-sink runs the 3-way stateful join once per data batch") {
+    // foreachBatch hands over a plan on the incremental execution's RDD:
+    // an emptiness check before persist() ran the join (loading and
+    // committing its state stores) and the first write ran it again.
+    // A counter above the join sees every row the join emits, each time
+    // it is computed, so it must equal the rows joined, batch by batch.
+    val stream = MemoryStream[Ev](Encoders.product[Ev], spark.sqlContext)
+    val work = Files.createTempDirectory("graft_join_once").toString
+    val emitted = spark.sparkContext.longAccumulator("join rows emitted")
+    val tally = udf { (id: Long) => emitted.add(1L); id }.asNondeterministic()
+    val ev = stream.toDF()
+    val joined = StreamingAnalytics.threewayJoin(
+        ev.select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
+          floor(col("value") / 10).cast("int").as("page_views")),
+        ev.select(col("event_id"), col("ts"), col("value").as("session_duration")),
+        ev.select(col("event_id"), col("ts"), (col("value") * 0.5).as("time_on_page")))
+      .select(tally(col("event_id")).as("event_id"), col("ts"), col("user_id"),
+        col("event_type"), col("session_duration").as("value"))
+    val q = StreamingAnalytics.runMultiSink(joined, s"$work/out", s"$work/ckpt")
+    val rows = mkEvents(600)
+    try {
+      rows.grouped(200).zipWithIndex.foreach { case (b, i) =>
+        stream.addData(b); q.processAllAvailable()
+        assert(emitted.value == 200L * (i + 1), s"join rows computed after batch $i")
+      }
+    } finally q.stop()
+    assert(spark.read.parquet(s"$work/out/streaming_metrics").count() == 600)
+  }
+
   test("restart from checkpoint resumes exactly where the stopped query left off (K7)") {
     val work = Files.createTempDirectory("graft_ckpt_rec").toString
     val incoming = s"$work/incoming"
@@ -757,7 +786,15 @@ class StreamingSpec extends AnyFunSuite {
       val deadline = System.nanoTime() + 20L * 1000000000L
       while (joinedCount.get() < ratePerSec * 2 && System.nanoTime() < deadline)
         Thread.sleep(250)
-    } finally { q.stop(); q.awaitTermination() }
+    } finally {
+      // stop between triggers: an interrupt that lands while Spark builds
+      // the join operator (its constructor broadcasts the Hadoop conf)
+      // reaches the query wrapped in an InvocationTargetException, which
+      // Spark reports as a query failure instead of a stop
+      val idleBy = System.nanoTime() + 5L * 1000000000L
+      while (q.status.isTriggerActive && System.nanoTime() < idleBy) Thread.sleep(1)
+      q.stop(); q.awaitTermination()
+    }
     val n = joinedCount.get()
     assert(n > 0, "paced replay produced no joined rows at all in 20 s")
     if (quietBox)
