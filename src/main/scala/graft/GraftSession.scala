@@ -62,8 +62,8 @@ object GraftExtensions {
 /** The only place a [[SparkSession]] is built. [[builder]] carries the
   * engine configuration; [[local]] adds the local-mode deployment
   * settings the mains share. Keeping both here means the tests, the
-  * correctness dump (`Verify`) and the timers (`Bench`, `Profile`,
-  * `perfbench`) cannot drift apart in serializer, time zone, scratch
+  * correctness dump (`Verify`) and the timers (`Bench`, `perfbench`)
+  * cannot drift apart in serializer, time zone, scratch
   * root or function surface. */
 object GraftSession {
   /** RAM-backed scratch root for shuffle + materialization temp files.

@@ -32,6 +32,11 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   */
 object Materializer {
 
+  /** Set by `Bench --plans` so each materialized subtree, where the
+    * shuffle, join and cap decisions live, prints its plan before the
+    * write; the query's own plan shows only a scan of the copy. */
+  @volatile private[graft] var dumpPlans = false
+
   private val live =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.FutureTask[String]]()
   @volatile private var rootDir: Path = _
@@ -106,10 +111,7 @@ object Materializer {
   def materialize(tag: String, df: DataFrame): DataFrame = {
     val task = new java.util.concurrent.FutureTask[String](() => {
       val p = root.resolve(tag).toString
-      // PlanAudit sets graft.plan.dump so the materialized SUBTREES —
-      // where the interesting shuffle/join/cap decisions live — appear
-      // in the dumped plans, not just the final scan-of-parquet tail
-      if (System.getProperty("graft.plan.dump") != null) {
+      if (dumpPlans) {
         println(s"----- materialize[${tag.replaceAll("-[0-9a-f]{12,}", "")}] -----")
         println(df.queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
@@ -121,7 +123,7 @@ object Materializer {
     // Plan-dump coverage depends on clear() between queries: a tag
     // materialized earlier in the session is reused and its subtree plan
     // is NOT re-dumped — say so, so an incomplete dump is visible.
-    if (prior != null && System.getProperty("graft.plan.dump") != null)
+    if (prior != null && dumpPlans)
       println(s"----- materialize[${tag.replaceAll("-[0-9a-f]{12,}", "")}]: reused, plan not dumped -----")
     val winner = if (prior == null) { task.run(); task } else prior
     val path =
