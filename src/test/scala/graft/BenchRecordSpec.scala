@@ -11,7 +11,7 @@ class BenchRecordSpec extends AnyFunSuite {
   private val names = SparkEntry.queries.keys.toSeq.sorted
   private val meta = """"loadavg_start":0.35,"loadavg_end":2.10,"gc_ms":4588,""" +
     """"peak_heap_mib":3515,"method":"""" + Bench.Method + """","head":"6fdb186cb92c",""" +
-    """"src":"a2af3b438bb6","sf":"/root/testdata/sf0.1""""
+    """"src":"a2af3b438bb6","sf":"testdata/sf0.1""""
 
   private def okRec(name: String, warm: Double, rows: Long = 10): Rec =
     Rec(name, Seq(warm * 1.5) ++ Seq.fill(Bench.Reps - 1)(warm), Seq.fill(Bench.Reps)(rows))
@@ -82,7 +82,7 @@ class BenchRecordSpec extends AnyFunSuite {
     // the single-shot record format, which carries no method stamp
     val singleShot = """{"metric":"total","value":237.86,"unit":"sec","n":197,""" +
       """"queries":{"q1_pricing_summary":2.34},"failed":[],"noise_ratio":0.95,""" +
-      """"forcing":"toRdd.count/v2","head":"2eda73a7a94f","src":"a2af3b438bb6","sf":"/root/testdata/sf0.1"}"""
+      """"forcing":"toRdd.count/v2","head":"2eda73a7a94f","src":"a2af3b438bb6","sf":"testdata/sf0.1"}"""
     assert(Bench.replaces(singleShot, 197, "a2af3b438bb6", 9.0))
     assert(!Bench.replaces(singleShot, 196, "a2af3b438bb6", 0.0))
   }
