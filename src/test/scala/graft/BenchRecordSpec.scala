@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the bench harness's pure parts: the per-query summary, the rule
-  * for replacing `bench_full.json`, and the stdout line the driver reads
+  * for replacing `bench_full.json`, and the stdout line that callers read
   * from the last 2000 characters of output. */
 class BenchRecordSpec extends AnyFunSuite {
   import Bench.{Rec, Run}
