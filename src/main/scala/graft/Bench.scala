@@ -34,6 +34,11 @@ import org.apache.spark.sql.SparkSession
   *    not, and a median ignores one stalled rep.
   *  - `value` is the sum of the warm medians: the cold reps' one-time
   *    costs land in `cold_total` and stay out of it.
+  *  - Each rep also records the JVM's CPU seconds; `cpu` is their warm
+  *    median and `cpu_total` the sum over queries (full record only):
+  *    wall totals of one source moved 1.9× between machine windows with
+  *    CPU steal, and CPU time does not count the time other guests held
+  *    the machine.
   *  - `spread` is the range of a query's warm reps, and for the run the
   *    range of its rep-by-rep warm totals: each record states its own
   *    noise.
@@ -58,20 +63,23 @@ object Bench {
     * which is all the driver keeps. */
   private[graft] val LineMax = 2000
 
-  /** One query's reps: seconds and output rows per rep, or the error
-    * that ended them. */
-  private[graft] final case class Rec(name: String, secs: Seq[Double], rows: Seq[Long],
-      error: Option[String] = None) {
+  /** One query's reps: wall seconds, process CPU seconds and output rows
+    * per rep, or the error that ended them. */
+  private[graft] final case class Rec(name: String, secs: Seq[Double], cpuSecs: Seq[Double],
+      rows: Seq[Long], error: Option[String] = None) {
     def failure: Option[String] = error.orElse(
       if (rows.distinct.size > 1) Some(s"rows differ across reps: ${rows.mkString(",")}")
       else None)
     def ok: Boolean = failure.isEmpty
     def cold: Double = secs.head
-    def warm: Double = { // median of reps 2..k
-      val w = secs.tail.sorted
-      (w((w.size - 1) / 2) + w(w.size / 2)) / 2
-    }
+    def warm: Double = median(secs.tail)
+    def cpu: Double = median(cpuSecs.tail)
     def spread: Double = secs.tail.max - secs.tail.min
+  }
+
+  private def median(xs: Seq[Double]): Double = {
+    val w = xs.sorted
+    (w((w.size - 1) / 2) + w(w.size / 2)) / 2
   }
 
   private[graft] final case class Run(recs: Seq[Rec]) {
@@ -79,6 +87,7 @@ object Bench {
     val failed: Seq[String] = recs.filterNot(_.ok).map(_.name)
     def warmTotal: Double = ok.map(_.warm).sum
     def coldTotal: Double = ok.map(_.cold).sum
+    def cpuTotal: Double = ok.map(_.cpu).sum
     def spread: Double = {
       val totals = (1 until Reps).map(i => ok.map(_.secs(i)).sum)
       totals.max - totals.min
@@ -104,15 +113,17 @@ object Bench {
       s""""k":$Reps,"cold_total":${f2(run.coldTotal)},"spread":${f2(run.spread)},$extra,""" +
       s""""queries":${queries.mkString("{", ",", "}")}}"""
 
-  /** The full record: every query with cold, warm, spread, rows and
-    * each rep's seconds, or its failure. */
+  /** The full record: every query with cold, warm, spread, warm CPU,
+    * rows and each rep's wall and CPU seconds, or its failure. */
   private[graft] def fullRecord(run: Run, meta: String): String =
-    record(run, s""""failed":${jsList(run.failed)},$meta""", run.recs.map { r =>
-      js(r.name) + ":" + r.failure.fold(
-        s"""{"cold":${f2(r.cold)},"warm":${f2(r.warm)},"spread":${f2(r.spread)},"rows":${r.rows.head},""" +
-          s""""secs":${r.secs.map(f2).mkString("[", ",", "]")}}""")(
-        e => s"""{"error":${js(e)}}""")
-    })
+    record(run, s""""cpu_total":${f2(run.cpuTotal)},"failed":${jsList(run.failed)},$meta""",
+      run.recs.map { r =>
+        js(r.name) + ":" + r.failure.fold(
+          s"""{"cold":${f2(r.cold)},"warm":${f2(r.warm)},"spread":${f2(r.spread)},"cpu":${f2(r.cpu)},""" +
+            s""""rows":${r.rows.head},"secs":${r.secs.map(f2).mkString("[", ",", "]")},""" +
+            s""""cpu_secs":${r.cpuSecs.map(f2).mkString("[", ",", "]")}}""")(
+          e => s"""{"error":${js(e)}}""")
+      })
 
   /** The stdout line, at most [[LineMax]] characters: failed names first
     * (a failure must not drop out of view), then the slowest warm times;
@@ -154,15 +165,31 @@ object Bench {
     n > priorN || n == priorN && (stale || field("spread").forall(spread <= _.toDouble))
   }
 
+  /** CPU seconds of every thread of this JVM so far, as `perfbench`
+    * reads them: on a shared machine, wall time also counts the time
+    * other guests held the CPU. */
+  private def processCpuSeconds: Double =
+    java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean].getProcessCpuTime / 1e9
+
   /** Runs `name` [[Reps]] times, stopping at the first error. `beforeRep`
-    * runs before each rep (the profile mode clears its stage log). */
+    * runs before each rep (the profile mode clears its stage log). Each
+    * rep's jobs carry the call site "`name` rep i", short and long form,
+    * so a stage's name and details name the query: AQE submits stages
+    * from its own threads, where the long form Spark derives from the
+    * stack shows only thread-pool frames. */
   private def measure(spark: SparkSession, sfDir: String, name: String, beforeRep: () => Unit): Rec = {
     val fn = SparkEntry.queries(name)
     val secs = ArrayBuffer[Double]()
+    val cpuSecs = ArrayBuffer[Double]()
     val rows = ArrayBuffer[Long]()
     var error: Option[String] = None
     while (error.isEmpty && secs.size < Reps) {
       beforeRep()
+      val site = s"$name rep ${secs.size + 1}"
+      spark.sparkContext.setCallSite(site)
+      spark.sparkContext.setLocalProperty("callSite.long", site) // Spark's CallSite.LONG_FORM
+      val cpu0 = processCpuSeconds
       val t0 = System.nanoTime()
       try rows += fn(spark, sfDir).queryExecution.toRdd.count()
       catch {
@@ -170,10 +197,12 @@ object Bench {
           e.printStackTrace()
           error = Some(e.toString.linesIterator.nextOption().getOrElse("").take(300))
       }
+      finally spark.sparkContext.clearCallSite()
       secs += (System.nanoTime() - t0) / 1e9
+      cpuSecs += processCpuSeconds - cpu0
       Materializer.clear()
     }
-    Rec(name, secs.toSeq, rows.toSeq, error)
+    Rec(name, secs.toSeq, cpuSecs.toSeq, rows.toSeq, error)
   }
 
   /** `--plans`: prints each query's formatted plan and the plans of the
@@ -372,7 +401,8 @@ object Bench {
           Run(selected.map { name =>
             val r = measure(spark, sfDir, name, () => stages.foreach(_.clear()))
             System.err.println(r.failure.fold(
-              f"[bench] $name%-28s cold ${r.cold}%7.2f s  warm ${r.warm}%7.2f s  spread ${r.spread}%5.2f  rows ${r.rows.head}")(
+              f"[bench] $name%-28s cold ${r.cold}%7.2f s  warm ${r.warm}%7.2f s  spread ${r.spread}%5.2f  " +
+                f"cpu ${r.cpu}%7.2f s  rows ${r.rows.head}")(
               e => s"[bench] $name FAILED: $e"))
             stages.foreach(s => printStages(name, s.asScala))
             r

@@ -1,9 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming layer: the reference's streaming pipeline
@@ -31,8 +34,14 @@ import org.apache.spark.sql.types._
   * Scale notes: the stateful aggregates keep one row of state per open
   * (window × key); the 1-minute watermark bounds join/agg state exactly
   * as in the reference (`spark_streaming_new.py:79-81`). The 3-way join
-  * co-partitions all sides on the join key — Spark plans
-  * StreamingSymmetricHashJoinExec with watermark-driven state eviction.
+  * shuffles every side once on its key into ONE keyed assembly
+  * (`flatMapGroupsWithState`, one state store per partition, one entry
+  * per live key, evicted by the watermark), not two chained
+  * `StreamingSymmetricHashJoinExec`s: the chain kept eight state stores
+  * per partition, stored the first join's output again in the second,
+  * and each planned copy of a join node broadcast a fresh Hadoop
+  * configuration, about a fifth of a stream-replay micro-batch's CPU.
+  * See [[threewayJoin]] for the equivalence contract.
   */
 object StreamingAnalytics {
 
@@ -142,17 +151,111 @@ object StreamingAnalytics {
     stream.join(broadcast(dim), keys, "left")
 
   /** J1: watermarked 3-way stream-stream inner equi-join on
-    * (event_id, ts) + engagement score (spark_streaming_new.py:89-103). */
+    * (event_id, ts) + engagement score (spark_streaming_new.py:89-103),
+    * run as one keyed assembly — the shape of the reference's own Kafka
+    * consumer, which buffers a record's parts by key until all three
+    * have arrived (kafka_consumer.py:43-56).
+    *
+    * The three watermarked sides are unioned into rows of (event_id, ts,
+    * one nullable payload struct per side) and grouped by the key in one
+    * `flatMapGroupsWithState` with `EventTimeTimeout`. A key's state
+    * holds its rows from every side until the watermark passes `ts`.
+    *
+    * Contract: batch by batch, the output is the multiset the chained
+    * inner joins `pv ⋈ sd ⋈ tp` USING (event_id, ts) emit, with the same
+    * columns (names, types, nullability, order, and the watermark mark on
+    * `ts`):
+    *  - a batch emits every one-row-per-side combination of a key that
+    *    includes at least one row new in this batch, so duplicate keys
+    *    give the joins' cross products;
+    *  - rows at or behind the previous batch's watermark are dropped, as
+    *    the joins drop them, and a key's state goes once the watermark
+    *    reaches its `ts`, as the joins evict theirs;
+    *  - rows with a null key never match and are not kept.
+    * ThreewayJoinSpec checks this against the two-join formulation with
+    * seeded schedules.
+    *
+    * Why not the two joins: each `StreamingSymmetricHashJoinExec` keeps
+    * four state stores per partition (two per side), so the chain kept
+    * eight plus a second stored copy of the first join's output, and
+    * every copy of the join node that planning makes broadcasts a fresh
+    * Hadoop configuration (about 113 KB serialized). The assembly keeps
+    * one store per partition, with one entry per live key, and shuffles
+    * each side once on the same key.
+    *
+    * The state layout differs from the joins': a checkpoint written by
+    * the two-join version of this method cannot be resumed. */
   def threewayJoin(pv: DataFrame, sd: DataFrame, tp: DataFrame): DataFrame = {
-    val p = pv.withWatermark("ts", "1 minute")
-    val s = sd.withWatermark("ts", "1 minute")
-    val t = tp.withWatermark("ts", "1 minute")
-    p.join(s, Seq("event_id", "ts"), "inner")
-      .join(t, Seq("event_id", "ts"), "inner")
+    val keys = Seq("event_id", "ts")
+    val sides = Seq(pv, sd, tp).map(_.withWatermark("ts", "1 minute"))
+    // the joins' output columns: the USING keys as the first side has
+    // them, then each side's other columns in order
+    val fields = keys.map(sides.head.schema(_)) ++
+      sides.flatMap(_.schema.filterNot(f => keys.contains(f.name)))
+    val payloads = sides.map(s => StructType(s.schema.filterNot(f => keys.contains(f.name))
+      .map(_.copy(metadata = Metadata.empty))))
+    val union = sides.zipWithIndex.map { case (s, i) =>
+      s.filter(s("event_id").isNotNull && s("ts").isNotNull)
+        .select(s("event_id") +: s("ts") +: payloads.indices.map { j =>
+          (if (j == i) struct(payloads(i).fieldNames.toSeq.map(s(_)): _*) else lit(null))
+            .cast(payloads(j)).as(s"side$j")
+        }: _*)
+    }.reduce(_ union _)
+    val state = StructType(payloads.zipWithIndex.map { case (p, j) =>
+      StructField(s"side$j", ArrayType(p, containsNull = false), nullable = false)
+    })
+    // positional names: the sides may share a column name, as in a join
+    val flat = StructType(fields.zipWithIndex.map { case (f, i) =>
+      StructField(s"c$i", f.dataType, f.nullable)
+    })
+    union.groupBy(col("event_id"), col("ts"))
+      .as[Row, Row](Encoders.row(StructType(union.schema.take(2))), Encoders.row(union.schema))
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
+        assembleKey(sides.size) _)(Encoders.row(state), Encoders.row(flat))
+      .select(fields.zipWithIndex.map { case (f, i) => col(s"c$i").as(f.name, f.metadata) }: _*)
       .withColumn("engagement_score",
         col("page_views") * 0.4 + col("session_duration") * 0.3 +
           col("time_on_page") * 0.3)
   }
+
+  /** One key's step in [[threewayJoin]]. `rows` are (event_id, ts,
+    * side0, side1, …) with exactly one side set; the state holds the
+    * key's earlier rows, one array per side. */
+  private def assembleKey(nSides: Int)(key: Row, rows: Iterator[Row],
+                                       state: GroupState[Row]): Iterator[Row] =
+    if (state.hasTimedOut) { state.remove(); Iterator.empty }
+    else {
+      val prior = state.getOption
+      val held = Array.tabulate(nSides)(j =>
+        prior.fold(IndexedSeq.empty[Row])(_.getSeq[Row](j).toIndexedSeq))
+      val fresh = Array.fill(nSides)(ArrayBuffer.empty[Row])
+      rows.foreach { r =>
+        val j = (0 until nSides).indexWhere(j => !r.isNullAt(2 + j))
+        fresh(j) += r.getStruct(2 + j)
+      }
+      val all = Array.tabulate(nSides)(j => held(j) ++ fresh(j))
+      // the joins evict a key once ts <= watermark; the timeout fires
+      // when timeout < watermark, so timeout = ceil(ts in ms) - 1
+      // (at least 1: Spark rejects a timeout that is not positive)
+      val tsMicros = key.get(1) match {
+        case t: java.sql.Timestamp => DateTimeUtils.fromJavaTimestamp(t)
+        case t: java.time.Instant => DateTimeUtils.instantToMicros(t)
+        case t: java.time.LocalDateTime => DateTimeUtils.localDateTimeToMicros(t)
+      }
+      if (tsMicros <= state.getCurrentWatermarkMs() * 1000L) state.remove()
+      else {
+        state.update(Row.fromSeq(all.toSeq.map(_.toSeq)))
+        state.setTimeoutTimestamp(math.max(1L, Math.floorDiv(tsMicros - 1, 1000L)))
+      }
+      // what the symmetric hash joins emit: new rows meet held and new
+      // rows of the other sides, held rows meet only new ones
+      def combos(j: Int, prefix: Seq[Any], anyFresh: Boolean): Iterator[Row] =
+        if (j == nSides) {
+          if (anyFresh) Iterator.single(Row.fromSeq(key.toSeq ++ prefix)) else Iterator.empty
+        } else all(j).indices.iterator.flatMap(i =>
+          combos(j + 1, prefix ++ all(j)(i).toSeq, anyFresh || i >= held(j).size))
+      combos(0, Vector.empty, anyFresh = false)
+    }
 
   /** Stream-stream INTERVAL join — last-touch attribution: each purchase
     * pairs with the same user's clicks in the preceding

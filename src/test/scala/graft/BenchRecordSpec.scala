@@ -14,9 +14,10 @@ class BenchRecordSpec extends AnyFunSuite {
     """"src":"a2af3b438bb6","sf":"testdata/sf0.1""""
 
   private def okRec(name: String, warm: Double, rows: Long = 10): Rec =
-    Rec(name, Seq(warm * 1.5) ++ Seq.fill(Bench.Reps - 1)(warm), Seq.fill(Bench.Reps)(rows))
+    Rec(name, Seq(warm * 1.5) ++ Seq.fill(Bench.Reps - 1)(warm),
+      Seq(warm * 3) ++ Seq.fill(Bench.Reps - 1)(warm * 2), Seq.fill(Bench.Reps)(rows))
   private def failedRec(name: String): Rec =
-    Rec(name, Seq(0.5), Nil, Some(s"java.lang.IllegalStateException: $name broke"))
+    Rec(name, Seq(0.5), Seq(0.4), Nil, Some(s"java.lang.IllegalStateException: $name broke"))
 
   /** A full record of `n` queries on sources `src` with run spread `spread`. */
   private def prior(n: Int, src: String, spread: Double): String = {
@@ -33,28 +34,45 @@ class BenchRecordSpec extends AnyFunSuite {
 
   test("cold is rep 1, warm the median of the rest, spread their range") {
     val r = Rec("q", Seq(3.0, 1.0, 2.0, 1.5).take(Bench.Reps) ++ Seq.fill(Bench.Reps - 4)(1.5),
+      Seq(9.0, 4.0, 6.0, 5.0).take(Bench.Reps) ++ Seq.fill(Bench.Reps - 4)(5.0),
       Seq.fill(Bench.Reps)(7L))
-    assert(r.ok && r.cold == 3.0 && r.warm == 1.5 && r.spread == 1.0)
+    assert(r.ok && r.cold == 3.0 && r.warm == 1.5 && r.spread == 1.0 && r.cpu == 5.0)
   }
 
   test("the run's spread is the range of its rep-by-rep warm totals") {
-    val a = Rec("a", Seq(9.0, 1.0, 2.0, 1.0) ++ Seq.fill(Bench.Reps - 4)(1.0), Seq.fill(Bench.Reps)(1L))
-    val b = Rec("b", Seq(9.0, 2.0, 1.0, 1.0) ++ Seq.fill(Bench.Reps - 4)(1.0), Seq.fill(Bench.Reps)(1L))
+    val cpu = Seq.fill(Bench.Reps)(1.0)
+    val a = Rec("a", Seq(9.0, 1.0, 2.0, 1.0) ++ Seq.fill(Bench.Reps - 4)(1.0), cpu, Seq.fill(Bench.Reps)(1L))
+    val b = Rec("b", Seq(9.0, 2.0, 1.0, 1.0) ++ Seq.fill(Bench.Reps - 4)(1.0), cpu, Seq.fill(Bench.Reps)(1L))
     assert(Run(Seq(a, b)).spread == 1.0) // per-rep totals 3, 3, 2
     assert(Run(Seq(a, b)).warmTotal == 2.0 && Run(Seq(a, b)).coldTotal == 18.0)
   }
 
   test("a query whose reps return different row counts is failed and sets no time") {
-    val changed = Rec("q_changed", Seq.fill(Bench.Reps)(1.0), Seq(4L, 4L, 5L) ++ Seq.fill(Bench.Reps - 3)(4L))
+    val changed = Rec("q_changed", Seq.fill(Bench.Reps)(1.0), Seq.fill(Bench.Reps)(1.0),
+      Seq(4L, 4L, 5L) ++ Seq.fill(Bench.Reps - 3)(4L))
     assert(!changed.ok && changed.failure.get.contains("rows differ"))
     val run = Run(Seq(changed, okRec("q_fine", 2.0, rows = 42)))
     assert(run.failed == Seq("q_changed") && run.warmTotal == 2.0)
     val full = Bench.fullRecord(run, meta)
     assert(full.contains(""""n":1,"""))
     val secs = (Seq("3.00") ++ Seq.fill(Bench.Reps - 1)("2.00")).mkString("[", ",", "]")
-    assert(full.contains(s""""q_fine":{"cold":3.00,"warm":2.00,"spread":0.00,"rows":42,"secs":$secs}"""))
+    val cpuSecs = (Seq("6.00") ++ Seq.fill(Bench.Reps - 1)("4.00")).mkString("[", ",", "]")
+    assert(full.contains(s""""q_fine":{"cold":3.00,"warm":2.00,"spread":0.00,"cpu":4.00,"rows":42,""" +
+      s""""secs":$secs,"cpu_secs":$cpuSecs}"""))
     assert(full.contains(""""q_changed":{"error":"rows differ across reps: 4,4,5"""))
     assert(failedIn(Bench.stdoutLine(run, meta)) == Seq("q_changed"))
+  }
+
+  test("the full record carries each rep's CPU seconds, their warm median and the run's CPU total") {
+    val a = Rec("q_a", Seq(4.0, 1.0, 1.0, 1.0), Seq(7.0, 2.0, 3.0, 2.5), Seq.fill(4)(5L))
+    val b = Rec("q_b", Seq(4.0, 1.0, 1.0, 1.0), Seq(5.0, 1.0, 1.0, 1.0), Seq.fill(4)(5L))
+    val full = Bench.fullRecord(Run(Seq(a, b, failedRec("q_c"))), meta)
+    assert(a.cpu == 2.5 && b.cpu == 1.0)
+    assert(num(full, "cpu_total") == 3.5)
+    assert(full.contains(""""q_a":{"cold":4.00,"warm":1.00,"spread":0.00,"cpu":2.50,"rows":5,""" +
+      """"secs":[4.00,1.00,1.00,1.00],"cpu_secs":[7.00,2.00,3.00,2.50]}"""))
+    // the stdout line keeps its format; CPU is in the full record only
+    assert(!Bench.stdoutLine(Run(Seq(a, b)), meta).contains("cpu"))
   }
 
   test("a subset run never replaces a fuller record, however steady") {

@@ -787,10 +787,13 @@ class StreamingSpec extends AnyFunSuite {
       while (joinedCount.get() < ratePerSec * 2 && System.nanoTime() < deadline)
         Thread.sleep(250)
     } finally {
-      // stop between triggers: an interrupt that lands while Spark builds
-      // the join operator (its constructor broadcasts the Hadoop conf)
-      // reaches the query wrapped in an InvocationTargetException, which
-      // Spark reports as a query failure instead of a stop
+      // stop between triggers: an interrupt that lands mid-trigger can
+      // reach the query wrapped in another exception, which Spark reports
+      // as a query failure instead of a stop. The two-join formulation
+      // hit this when planning copied a join node (each copy broadcast
+      // the Hadoop conf from its constructor, so the interrupt came back
+      // as an InvocationTargetException); waiting for an idle trigger
+      // keeps the stop clean whatever the operators do while planning
       val idleBy = System.nanoTime() + 5L * 1000000000L
       while (q.status.isTriggerActive && System.nanoTime() < idleBy) Thread.sleep(1)
       q.stop(); q.awaitTermination()
