@@ -1,12 +1,13 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.executor.TaskMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, StageInfo}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.SparkSession
 
 /** The one measurement main:
@@ -39,6 +40,10 @@ import org.apache.spark.sql.SparkSession
   *    wall totals of one source moved 1.9× between machine windows with
   *    CPU steal, and CPU time does not count the time other guests held
   *    the machine.
+  *  - Each rep also counts the Spark jobs it launched; `jobs` is their
+  *    warm median and `jobs_total` the sum over queries (full record
+  *    only): the registry's cost tracks its job count, about 38 ms of
+  *    driver gap per job.
   *  - `spread` is the range of a query's warm reps, and for the run the
   *    range of its rep-by-rep warm totals: each record states its own
   *    noise.
@@ -64,9 +69,9 @@ object Bench {
   private[graft] val LineMax = 2000
 
   /** One query's reps: wall seconds, process CPU seconds and output rows
-    * per rep, or the error that ended them. */
+    * per rep, or the error that ended them; `jobs` per rep once counted. */
   private[graft] final case class Rec(name: String, secs: Seq[Double], cpuSecs: Seq[Double],
-      rows: Seq[Long], error: Option[String] = None) {
+      rows: Seq[Long], error: Option[String] = None, jobs: Seq[Int] = Nil) {
     def failure: Option[String] = error.orElse(
       if (rows.distinct.size > 1) Some(s"rows differ across reps: ${rows.mkString(",")}")
       else None)
@@ -74,6 +79,7 @@ object Bench {
     def cold: Double = secs.head
     def warm: Double = median(secs.tail)
     def cpu: Double = median(cpuSecs.tail)
+    def warmJobs: Int = jobs.tail.sorted.apply((jobs.size - 2) / 2) // lower median
     def spread: Double = secs.tail.max - secs.tail.min
   }
 
@@ -88,6 +94,8 @@ object Bench {
     def warmTotal: Double = ok.map(_.warm).sum
     def coldTotal: Double = ok.map(_.cold).sum
     def cpuTotal: Double = ok.map(_.cpu).sum
+    /** None until every timed query has its job counts. */
+    def jobsTotal: Option[Int] = if (ok.forall(_.jobs.nonEmpty)) Some(ok.map(_.warmJobs).sum) else None
     def spread: Double = {
       val totals = (1 until Reps).map(i => ok.map(_.secs(i)).sum)
       totals.max - totals.min
@@ -114,14 +122,18 @@ object Bench {
       s""""queries":${queries.mkString("{", ",", "}")}}"""
 
   /** The full record: every query with cold, warm, spread, warm CPU,
-    * rows and each rep's wall and CPU seconds, or its failure. */
+    * rows, each rep's wall and CPU seconds and, once counted, its warm
+    * and per-rep jobs; or its failure. */
   private[graft] def fullRecord(run: Run, meta: String): String =
-    record(run, s""""cpu_total":${f2(run.cpuTotal)},"failed":${jsList(run.failed)},$meta""",
+    record(run, s""""cpu_total":${f2(run.cpuTotal)},""" +
+      run.jobsTotal.fold("")(n => s""""jobs_total":$n,""") + s""""failed":${jsList(run.failed)},$meta""",
       run.recs.map { r =>
         js(r.name) + ":" + r.failure.fold(
           s"""{"cold":${f2(r.cold)},"warm":${f2(r.warm)},"spread":${f2(r.spread)},"cpu":${f2(r.cpu)},""" +
             s""""rows":${r.rows.head},"secs":${r.secs.map(f2).mkString("[", ",", "]")},""" +
-            s""""cpu_secs":${r.cpuSecs.map(f2).mkString("[", ",", "]")}}""")(
+            s""""cpu_secs":${r.cpuSecs.map(f2).mkString("[", ",", "]")}""" +
+            (if (r.jobs.isEmpty) "" else s""","jobs":${r.warmJobs},"rep_jobs":${r.jobs.mkString("[", ",", "]")}""") +
+            "}")(
           e => s"""{"error":${js(e)}}""")
       })
 
@@ -172,6 +184,10 @@ object Bench {
     java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean].getProcessCpuTime / 1e9
 
+  /** The call site of rep `i` of `name`: it names the query in stage
+    * details and keys the rep's job count. */
+  private def site(name: String, i: Int): String = s"$name rep $i"
+
   /** Runs `name` [[Reps]] times, stopping at the first error. `beforeRep`
     * runs before each rep (the profile mode clears its stage log). Each
     * rep's jobs carry the call site "`name` rep i", short and long form,
@@ -186,9 +202,9 @@ object Bench {
     var error: Option[String] = None
     while (error.isEmpty && secs.size < Reps) {
       beforeRep()
-      val site = s"$name rep ${secs.size + 1}"
-      spark.sparkContext.setCallSite(site)
-      spark.sparkContext.setLocalProperty("callSite.long", site) // Spark's CallSite.LONG_FORM
+      val repSite = site(name, secs.size + 1)
+      spark.sparkContext.setCallSite(repSite)
+      spark.sparkContext.setLocalProperty("callSite.long", repSite) // Spark's CallSite.LONG_FORM
       val cpu0 = processCpuSeconds
       val t0 = System.nanoTime()
       try rows += fn(spark, sfDir).queryExecution.toRdd.count()
@@ -215,6 +231,20 @@ object Bench {
       try SparkEntry.queries(name)(spark, sfDir).explain("formatted")
       finally Materializer.clear()
     } finally Materializer.dumpPlans = false
+  }
+
+  /** Jobs started per short call site. Jobs carry the submitting
+    * thread's local properties, AQE's stage jobs included, so each job
+    * of a rep counts under that rep's [[site]]. Complete only once the
+    * listener bus has drained, which `spark.stop()` waits for. */
+  private def jobLog(spark: SparkSession): java.util.concurrent.ConcurrentHashMap[String, AtomicInteger] = {
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, AtomicInteger]()
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty("callSite.short"))) // CallSite.SHORT_FORM
+          .foreach(s => jobs.computeIfAbsent(s, _ => new AtomicInteger).incrementAndGet())
+    })
+    jobs
   }
 
   /** `--profile`: collects completed stages; the caller clears it per rep. */
@@ -392,7 +422,8 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val load0 = loadavg
     val spark = GraftSession.local()
-    val run =
+    val jobs = jobLog(spark)
+    val timed =
       try {
         if (mode == "--plans") { plans(spark, sfDir, selected); Run(Nil) }
         else {
@@ -409,6 +440,8 @@ object Bench {
           })
         }
       } finally spark.stop()
+    val run = Run(timed.recs.map(r =>
+      r.copy(jobs = r.secs.indices.map(i => Option(jobs.get(site(r.name, i + 1))).fold(0)(_.get)))))
     if (mode == "") {
       val src = sourceStamp(Paths.get("."))
       val meta = s""""loadavg_start":${f2(load0)},"loadavg_end":${f2(loadavg)},""" +

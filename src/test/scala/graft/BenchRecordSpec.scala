@@ -75,6 +75,24 @@ class BenchRecordSpec extends AnyFunSuite {
     assert(!Bench.stdoutLine(Run(Seq(a, b)), meta).contains("cpu"))
   }
 
+  test("the full record carries each query's warm and per-rep job counts and the run's job total") {
+    val a = Rec("q_a", Seq(4.0, 1.0, 1.0, 1.0), Seq.fill(4)(1.0), Seq.fill(4)(5L), jobs = Seq(9, 6, 7, 6))
+    val b = Rec("q_b", Seq(4.0, 1.0, 1.0, 1.0), Seq.fill(4)(1.0), Seq.fill(4)(5L), jobs = Seq(3, 2, 2, 2))
+    val c = failedRec("q_c").copy(jobs = Seq(4))
+    assert(a.warmJobs == 6 && b.warmJobs == 2)
+    val run = Run(Seq(a, b, c))
+    assert(run.jobsTotal.contains(8))
+    val full = Bench.fullRecord(run, meta)
+    assert(num(full, "jobs_total") == 8)
+    assert(full.contains(""""q_a":{"cold":4.00,"warm":1.00,"spread":0.00,"cpu":1.00,"rows":5,""" +
+      """"secs":[4.00,1.00,1.00,1.00],"cpu_secs":[1.00,1.00,1.00,1.00],"jobs":6,"rep_jobs":[9,6,7,6]}"""))
+    assert(full.contains(""""q_c":{"error":"java.lang.IllegalStateException: q_c broke"}"""))
+    // uncounted runs carry no job fields; the stdout line never does
+    assert(Run(Seq(okRec("q_a", 1.0))).jobsTotal.isEmpty)
+    assert(!Bench.fullRecord(Run(Seq(okRec("q_a", 1.0))), meta).contains("jobs"))
+    assert(!Bench.stdoutLine(run, meta).contains("jobs"))
+  }
+
   test("a subset run never replaces a fuller record, however steady") {
     val full = prior(names.size, "a2af3b438bb6", 5.0)
     assert(!Bench.replaces(full, names.size - 1, "a2af3b438bb6", 0.0))
