@@ -25,8 +25,15 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
     df = df.sort_values(by=list(df.columns)).reset_index(drop=True)
     return df
 
+# DuckDB's defaults take 80% of RAM and every core; capped, an oracle that
+# needs more fails its query (a FAIL below) instead of starving a JVM that
+# runs beside the check.
+DUCKDB_MEMORY_LIMIT = "3GB"
+DUCKDB_THREADS = 2
+
 def main(sf_dir, out_dir):
-    con = duckdb.connect()
+    con = duckdb.connect(config={"memory_limit": DUCKDB_MEMORY_LIMIT,
+                                 "threads": DUCKDB_THREADS})
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):

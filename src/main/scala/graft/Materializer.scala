@@ -145,21 +145,29 @@ object Materializer {
     df.sparkSession.read.schema(schema).parquet(path)
   }
 
-  /** Materialize a small final result, then sort it globally.
+  /** Materialize a final result that grows with the data, then sort it
+    * globally.
     *
-    * A range-partitioned global sort (`orderBy`) executes its child
-    * plan TWICE — once inside RangePartitioner's boundary sampling,
-    * once for the real exchange. For a query whose final result is
-    * small but whose child is the expensive part of the plan (a
-    * candidate-pair aggregate, a full-corpus scan+hash), the sample
-    * pass re-runs that work just to pick range bounds for a few
-    * hundred rows: the sf10 q_dedup_clusters profile measured the
-    * sample pass alone at 227 executor-run seconds, re-aggregating
-    * 94.5 M partial rows for a 25.6 k-row sort. Materialized first,
-    * both sort passes read a tiny parquet instead. Use ONLY where the
-    * result is small relative to its plan; a corpus-sized result
-    * should keep the plain orderBy (writing it out first would double
-    * its own IO instead). */
+    * A range-partitioned global sort (`orderBy`) runs a job of its own
+    * to sample range bounds before the real exchange. Under AQE that
+    * sample re-runs only the tail after the last exchange, but for a
+    * pair or cluster list that tail is the expensive part (the
+    * candidate-pair aggregate, the verification join): the sf10
+    * q_dedup_clusters profile measured the sample pass alone at 227
+    * executor-run seconds, re-aggregating 94.5 M partial rows for a
+    * 25.6 k-row sort. Materialized first, both sort passes read a small
+    * parquet instead.
+    *
+    * Use it ONLY for a result that grows with the data yet stays small
+    * relative to its plan, or where the copy also keeps a fact table
+    * from being scanned again (q_leakage_safe_split). A result bounded
+    * by construction (a per-source or per-bucket rollup) is sorted in
+    * one task instead, `coalesce(1).orderBy(...)`: over one partition
+    * the sort needs no range exchange, so there is no sample job, and
+    * no write job or read-back either, while every stage below the
+    * final aggregate's exchange stays parallel. A corpus-sized result
+    * keeps the plain orderBy (writing it out first would double its own
+    * IO). */
   def sortedSmall(tag: String, df: DataFrame, by: String*): DataFrame =
     materialize(tag, df)
       .orderBy(by.map(org.apache.spark.sql.functions.col): _*)

@@ -1091,36 +1091,49 @@ object Dedup {
     * docs: per content-hash group the per-source counts are aggregated
     * first, and pair counts are ARITHMETIC on those counts (ca·cb
     * cross-source, C(n,2) within) — the pair space never materializes,
-    * so a million-copy group costs one row per source it touches. The
-    * (hash, source) self-join fans out by sources-per-group (≤ the
-    * source enum), not group size. */
+    * so a million-copy group costs one row per source it touches.
+    *
+    * One corpus scan: each hash group collects its ≤|S| (source, count)
+    * entries and emits its (a ≤ b) source pairs in place, so the fan-out
+    * per group is the self-join's without a second scan to join against.
+    * The diagonal is emitted even at zero pairs so every source reaches
+    * the (a, b) aggregate; that ≤|S|²-row aggregate is then collected
+    * into one row and expanded into the full a ≤ b matrix with explicit
+    * zeros ("no cross-source duplication" is a finding, not an empty
+    * result), sorted in that one task. Null texts share no content and
+    * null sources pair with nothing, as in the SQL oracle's join. */
   def crossSourceDups(spark: SparkSession, dir: String): DataFrame = {
     val hs = documents(spark, dir)
+      .filter(col("source").isNotNull)
       .select(md5(col("text")).as("h"), col("source"))
       .groupBy(col("h"), col("source")).agg(count(lit(1)).as("c"))
-    val m = hs.as("a").join(hs.as("b"),
-        col("a.h") === col("b.h") && col("a.source") <= col("b.source"))
-      .select(col("a.source").as("source_a"), col("b.source").as("source_b"),
-        when(col("a.source") === col("b.source"),
-          expr("a.c * (a.c - 1) div 2"))
-          .otherwise(col("a.c") * col("b.c")).as("pairs"))
-      .filter(col("pairs") > 0)
+    val m = hs.groupBy(col("h"))
+      .agg(collect_list(struct(col("source"), col("c"))).as("sc"))
+      .select(inline(expr(
+        """flatten(transform(sc, x -> transform(filter(sc, y -> y.source >= x.source),
+          |  y -> named_struct('source_a', x.source, 'source_b', y.source, 'pairs',
+          |    CASE WHEN h IS NULL THEN 0L
+          |         WHEN x.source = y.source THEN x.c * (x.c - 1) div 2
+          |         ELSE x.c * y.c END))))""".stripMargin)))
       .groupBy(col("source_a"), col("source_b"))
-      .agg(sum(col("pairs")).as("n_dup_pairs"), count(lit(1)).as("n_groups"))
-    // full (a ≤ b) matrix with explicit zeros: "no cross-source
-    // duplication" is a finding, not an empty result — and the |S|²/2
-    // spine is constant-size by construction
-    val src = documents(spark, dir).select(col("source")).distinct()
-    // sortedSmall: the sort's child re-scans and re-hashes the whole
-    // corpus (md5 per text) — a plain orderBy would run it twice
-    Materializer.sortedSmall(Materializer.tagFor("xsrcres", dir),
-      src.as("x").join(src.as("y"), col("x.source") <= col("y.source"))
-        .select(col("x.source").as("source_a"), col("y.source").as("source_b"))
-        .join(m, Seq("source_a", "source_b"), "left")
-        .select(col("source_a"), col("source_b"),
-          coalesce(col("n_dup_pairs"), lit(0L)).as("n_dup_pairs"),
-          coalesce(col("n_groups"), lit(0L)).as("n_groups")),
-      "source_a", "source_b")
+      .agg(sum(col("pairs")).as("n_dup_pairs"),
+        count_if(col("pairs") > 0).as("n_groups"))
+    // at most |sources|² cells: one row, one task — no copy, no range sort
+    // (see Materializer.sortedSmall). try_element_at: a pair that shares
+    // no group has no cell, and element_at throws on a missing key
+    m.coalesce(1)
+      .agg(collect_list(struct(col("source_a"), col("source_b"),
+        col("n_dup_pairs"), col("n_groups"))).as("cells"))
+      .select(
+        expr("array_sort(transform(filter(cells, x -> x.source_a = x.source_b), x -> x.source_a))").as("s"),
+        expr("""map_from_entries(transform(cells, x -> struct(
+          |  named_struct('a', x.source_a, 'b', x.source_b), struct(x.n_dup_pairs, x.n_groups))))""".stripMargin).as("cell"))
+      .select(inline(expr(
+        """flatten(transform(s, a -> transform(filter(s, b -> b >= a),
+          |  b -> named_struct('source_a', a, 'source_b', b,
+          |    'n_dup_pairs', coalesce(try_element_at(cell, named_struct('a', a, 'b', b)).n_dup_pairs, 0L),
+          |    'n_groups', coalesce(try_element_at(cell, named_struct('a', a, 'b', b)).n_groups, 0L)))))""".stripMargin)))
+      .orderBy("source_a", "source_b")
   }
 
   val crossSourceDupsSql: String =
@@ -1161,19 +1174,18 @@ object Dedup {
       // min_by is hash-aggregable and deterministic here (doc_id unique)
       .agg(count(lit(1)).as("n_docs"), sum(col("nt")).as("tok_all"),
         min_by(col("nt"), col("doc_id")).as("keep_nt"))
-    // sortedSmall: the sort's child re-scans the corpus (md5 + token
-    // count per text) — a plain orderBy would run it twice
-    Materializer.sortedSmall(Materializer.tagFor("savingsres", dir),
-      g.groupBy(col("source"))
-        .agg(sum(col("n_docs")).as("n_docs"),
-          count(lit(1)).as("n_unique"),
-          sum(col("tok_all")).as("n_tokens"),
-          sum(col("keep_nt")).as("n_tokens_kept"))
-        .select(col("source"), col("n_docs"), col("n_unique"),
-          col("n_tokens"), col("n_tokens_kept"),
-          (lit(1.0) - col("n_tokens_kept").cast("double") / col("n_tokens"))
-            .as("savings_frac")),
-      "source")
+    // at most |sources| rows: sorted in one task (see
+    // Materializer.sortedSmall for why no copy and no range sort)
+    g.groupBy(col("source"))
+      .agg(sum(col("n_docs")).as("n_docs"),
+        count(lit(1)).as("n_unique"),
+        sum(col("tok_all")).as("n_tokens"),
+        sum(col("keep_nt")).as("n_tokens_kept"))
+      .select(col("source"), col("n_docs"), col("n_unique"),
+        col("n_tokens"), col("n_tokens_kept"),
+        (lit(1.0) - col("n_tokens_kept").cast("double") / col("n_tokens"))
+          .as("savings_frac"))
+      .coalesce(1).orderBy("source")
   }
 
   val dedupSavingsSql: String =
@@ -1530,18 +1542,18 @@ object Dedup {
       .agg(count(lit(1)).as("n_sh"),
         sum((col("first_doc") === col("doc_id")).cast("long")).as("n_novel"))
     val maxId = perDoc.agg(max(col("doc_id")).as("mx"))
-    // sortedSmall: the sort's child re-runs the first-seer join over
-    // the posting index — a plain orderBy would run it twice
-    Materializer.sortedSmall(Materializer.tagFor("noveltyres", dir),
-      perDoc.crossJoin(broadcast(maxId))
-        .groupBy(floor(col("doc_id") * NOVELTY_BUCKETS / (col("mx") + 1))
-          .cast("long").as("bucket"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_sh")).as("n_shingles"),
-          sum(col("n_novel")).as("n_novel"),
-          floor(sum(col("n_novel")).cast("double") * 1000000.0 /
-            sum(col("n_sh")).cast("double")).cast("long").as("novelty_ppm")),
-      "bucket")
+    // NOVELTY_BUCKETS rows: sorted in one task (see
+    // Materializer.sortedSmall for why no copy and no range sort)
+    perDoc.crossJoin(broadcast(maxId))
+      .select(col("n_sh"), col("n_novel"),
+        floor(col("doc_id") * NOVELTY_BUCKETS / (col("mx") + 1)).cast("long").as("bucket"))
+      .groupBy(col("bucket"))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(col("n_sh")).as("n_shingles"),
+        sum(col("n_novel")).as("n_novel"),
+        floor(sum(col("n_novel")).cast("double") * 1000000.0 /
+          sum(col("n_sh")).cast("double")).cast("long").as("novelty_ppm"))
+      .coalesce(1).orderBy("bucket")
   }
 
   val ngramNoveltySql: String =

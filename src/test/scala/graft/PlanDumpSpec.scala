@@ -14,8 +14,8 @@ class PlanDumpSpec extends AnyFunSuite {
   }
 
   test("--plans prints each materialized subtree's plan") {
-    val out = captured(Bench.plans(spark, sf, Seq("q_dedup_savings")))
-    assert(out.contains("===== q_dedup_savings ====="))
+    val out = captured(Bench.plans(spark, sf, Seq("q_semantic_dedup")))
+    assert(out.contains("===== q_semantic_dedup ====="))
     assert(out.contains("----- materialize["), out.take(2000))
     assert(out.contains("== Physical Plan =="))
     assert(!Materializer.dumpPlans, "the plan flag must be cleared when --plans ends")
@@ -23,14 +23,14 @@ class PlanDumpSpec extends AnyFunSuite {
 
   test("a normal build prints no plans") {
     val out = captured {
-      try SparkEntry.queries("q_dedup_savings")(spark, sf).queryExecution.toRdd.count()
+      try SparkEntry.queries("q_semantic_dedup")(spark, sf).queryExecution.toRdd.count()
       finally Materializer.clear()
     }
     assert(!out.contains("materialize["), out.take(2000))
   }
 
   test("the plan flag is cleared when a query fails under --plans") {
-    intercept[Exception](captured(Bench.plans(spark, "/nonexistent/sf", Seq("q_dedup_savings"))))
+    intercept[Exception](captured(Bench.plans(spark, "/nonexistent/sf", Seq("q_semantic_dedup"))))
     assert(!Materializer.dumpPlans)
   }
 }

@@ -59,9 +59,6 @@ class PlanGuardSpec extends AnyFunSuite {
     // q_label_centroids: a<b join over the |labels|-row centroid
     // aggregate — constant pair space by construction
     "q_label_centroids",
-    // q_cross_source_dups: a<=b spine over the |sources|-row distinct
-    // relation — constant pair space by construction (the matrix rows)
-    "q_cross_source_dups",
     // q_jl_projection: a<b join over the |queries|-subset only — the
     // declared bounded pair space of the distortion audit
     "q_jl_projection",

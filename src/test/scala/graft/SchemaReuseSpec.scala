@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Path, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 import scala.util.Try
@@ -10,8 +9,6 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -26,31 +23,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class SchemaReuseSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  private val ProbeKey = "graft.test.jobProbe"
-
-  /** `body`'s result and the Spark jobs this thread launched while it
-    * ran. Jobs carry the submitting thread's local properties, so a
-    * fresh probe value tells them apart from other threads' jobs; the
-    * listener bus is drained before the count is read. */
-  private def jobsOf[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val probe = java.util.UUID.randomUUID().toString
-    val n = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(ProbeKey) == probe) n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(ProbeKey, probe)
-    try {
-      val a = body
-      ListenerBusDrain(sc)
-      (a, n.get)
-    } finally {
-      sc.setLocalProperty(ProbeKey, null)
-      sc.removeSparkListener(listener)
-    }
-  }
+  private def jobsOf[A](body: => A): (A, Int) = JobProbe.jobsOf(spark)(body)
 
   /** Writes `df` as the single parquet file `dir/<name>.parquet`,
     * replacing any file there: the layout of the generated inputs. */
