@@ -300,7 +300,7 @@ object Bench {
         .groupBy(col("k")).agg(max(col("rn")).as("m"), sum(col("s")).as("s"))
         .orderBy(col("k"))
         .queryExecution.toRdd.count()
-      Materializer.materialize("warmup-scratch", agg).queryExecution.toRdd.count()
+      Materializer.materialize(agg).queryExecution.toRdd.count()
     } catch { case _: Throwable => () }
     finally Materializer.clear()
 

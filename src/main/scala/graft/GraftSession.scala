@@ -78,7 +78,7 @@ object GraftSession {
     * 126 GiB here) is the local-mode stand-in with that cost model.
     * Falls back to the JVM temp dir when no writable tmpfs exists.
     * Everything written here is session-scoped temp state (Spark's own
-    * spark-/blockmgr- dirs and [[Materializer]]'s tagged copies), all
+    * spark-/blockmgr- dirs and [[Materializer]]'s copies), all
     * removed by their owners' shutdown hooks. */
   lazy val scratchRoot: String = {
     val shm = java.nio.file.Paths.get("/dev/shm")

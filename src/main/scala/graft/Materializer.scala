@@ -2,8 +2,12 @@ package graft
 
 import java.nio.file.{Files, Path}
 import java.util.Comparator
+import java.util.concurrent.{ConcurrentHashMap, ExecutionException, FutureTask}
+import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.StructType
 
 /** Explicit disk materialization for shared plan subtrees.
@@ -28,12 +32,34 @@ import org.apache.spark.sql.types.StructType
   * footer the schema the engine has just written (120 of the 2,034 jobs
   * of a warm registry run at sf0.01). On a cluster the temp root
   * would sit on the job's scratch filesystem; in local mode it is a
-  * `java.io.tmpdir` session directory.
+  * `graft-mat-` directory under [[GraftSession.scratchRoot]].
   *
-  * Lifecycle: tags are session-scoped. `clear()` deletes all materialized
-  * copies — [[Bench]] and [[Verify]] call it after every query so nothing
+  * What keys a copy: the subtree itself, as Spark's `CacheManager` keys
+  * its reuse — the canonicalized analyzed plan (expression ids
+  * normalized, so two builds of one subtree, or two reads of one path,
+  * compare equal) — together with the plan's output schema and
+  * [[Tables.inputStamp]] of the input files the plan's own file-source
+  * relations list. The schema is part of the key because
+  * canonicalization erases alias names: `x AS a` and `x AS b`
+  * canonicalize equal, and the copy is read back by name with the
+  * schema it was written with. Two different subtrees never share a
+  * copy, and no caller names one.
+  *
+  * What invalidates a copy: any change in that stamp — a file's path,
+  * size or nanosecond modification time, or the file count — the same
+  * rule [[Tables.table]] applies to its kept schemas. An input rewritten
+  * in place (or gaining a file) makes a new key, so the next call writes
+  * a fresh copy from the new rows instead of serving the old one. Not
+  * seen: a rewrite that keeps every file's path, size and nanosecond
+  * mtime, which takes a deliberate `utimensat`, not a normal write.
+  *
+  * Lifecycle: copies are session-scoped. `clear()` deletes all of them —
+  * [[Bench]] and [[Verify]] call it after every query so nothing
   * (disk OR block-manager state) leaks into the next query's measurement;
-  * a JVM shutdown hook removes the temp root regardless.
+  * a JVM shutdown hook removes the temp root regardless. Call `clear()`
+  * before stopping a session that materialized: each key holds its
+  * canonicalized plan, whose file relations hold the session, so the
+  * map keeps a stopped session reachable until the next `clear()`.
   */
 object Materializer {
 
@@ -42,8 +68,16 @@ object Materializer {
     * write; the query's own plan shows only a scan of the copy. */
   @volatile private[graft] var dumpPlans = false
 
-  private val live =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.FutureTask[(String, StructType)]]()
+  /** A subtree (canonicalized), its output names and types, and the
+    * stamp of the files it reads. */
+  private final case class Key(plan: LogicalPlan, schema: StructType,
+                               inputs: Seq[(String, Long, Long)])
+
+  /** A copy's directory and its write, which yields the written schema. */
+  private final case class Copy(path: Path, written: FutureTask[StructType])
+
+  private val live = new ConcurrentHashMap[Key, Copy]()
+  private val nextId = new AtomicLong()
   @volatile private var rootDir: Path = _
 
   private def root: Path = synchronized {
@@ -58,91 +92,65 @@ object Materializer {
     rootDir
   }
 
-  /** Stable per-(subtree, input-data) key: the same logical content
-    * always maps to the same tag, so repeated builds within one query
-    * (or one test suite) reuse one on-disk copy instead of re-deriving
-    * it. The dir is folded in as a full MD5 digest — a 32-bit
-    * String.hashCode would let two distinct input dirs collide within
-    * one session and silently serve the wrong dataset's
-    * materialization — and so is every input file's (path, size,
-    * mtime): a session that REWRITES the input dir in place gets a new
-    * tag and a fresh materialization, making staleness invalidation a
-    * mechanism rather than a clear()-discipline convention (Bench and
-    * Verify clear between queries, but a long-lived interactive session
-    * has no such referee). The walk is a metadata-only listing of the
-    * input dir (~10 files at any SF) — never a content read.
-    *
-    * Mtimes hash at NANOSECOND granularity and the regular-file count is
-    * folded in, so an in-place rewrite landing within the same
-    * millisecond, or an add/remove of a zero-length file, still flips
-    * the tag. Residual window (accepted, documented): a rewrite that
-    * preserves every file's path, size, AND nanosecond mtime — only
-    * possible with a deliberate utimensat, not a normal write. */
-  def tagFor(name: String, dir: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.update(dir.getBytes("UTF-8"))
-    val p = java.nio.file.Paths.get(dir)
-    var nFiles = 0L
-    if (Files.isDirectory(p)) {
-      val s = Files.walk(p)
-      try {
-        val it = s.filter(f => Files.isRegularFile(f)).sorted().iterator()
-        while (it.hasNext) {
-          val f = it.next()
-          nFiles += 1
-          md.update(f.toString.getBytes("UTF-8"))
-          md.update(java.nio.ByteBuffer.allocate(16)
-            .putLong(Files.size(f))
-            .putLong(Files.getLastModifiedTime(f)
-              .to(java.util.concurrent.TimeUnit.NANOSECONDS)).array())
-        }
-      } finally s.close()
-    }
-    md.update(java.nio.ByteBuffer.allocate(8).putLong(nFiles).array())
-    val hex = md.digest().map("%02x".format(_)).mkString
-    s"$name-$hex"
+  /** Whether `plan` is a bare scan of one of this JVM's copies. */
+  private def isCopy(plan: LogicalPlan): Boolean = plan match {
+    case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) if rootDir != null =>
+      val paths = fs.location.rootPaths
+      paths.nonEmpty && paths.forall(p =>
+        p.toUri.getScheme == "file" && java.nio.file.Paths.get(p.toUri).startsWith(rootDir))
+    case _ => false
   }
 
-  /** Materialize `df` under `tag` — eager parquet write on first call,
-    * reuse on subsequent calls — and return a scan of the on-disk copy.
-    * Values are preserved exactly (long/double/string columns round-trip
-    * bit-identically through parquet); only physical lineage changes.
-    * The scan is given the schema the copy was written with instead of
-    * inferring it, which runs no job; the file source makes a given
-    * schema nullable exactly as it does an inferred one, so the scan's
-    * schema is the one inference would give (SchemaReuseSpec).
-    * Locking is genuinely per tag: the map holds a FutureTask per tag
+  /** Materialize `df` — eager parquet write on the first call for its
+    * subtree and inputs, reuse on later calls — and return a scan of the
+    * on-disk copy. A `df` that already scans a copy is returned as it
+    * is. Values are preserved exactly (long/double/string columns
+    * round-trip bit-identically through parquet); only physical lineage
+    * changes. The scan is given the schema the copy was written with
+    * instead of inferring it, which runs no job; the file source makes a
+    * given schema nullable exactly as it does an inferred one, so the
+    * scan's schema is the one inference would give (SchemaReuseSpec).
+    * Locking is per key: the map holds a FutureTask per key
     * (registration via `putIfAbsent` is O(1), never blocking a bin for
     * the write's duration), the WINNING caller runs the parquet write
-    * OUTSIDE any map lock, same-tag callers await that one future, and
-    * distinct tags write fully concurrently. A failed write removes its
-    * task so a later call can retry. */
-  def materialize(tag: String, df: DataFrame): DataFrame = {
-    val task = new java.util.concurrent.FutureTask[(String, StructType)](() => {
-      val p = root.resolve(tag).toString
-      if (dumpPlans) {
-        println(s"----- materialize[${tag.replaceAll("-[0-9a-f]{12,}", "")}] -----")
-        println(df.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+    * OUTSIDE any map lock, same-key callers await that one future, and
+    * distinct keys write fully concurrently. A failed write removes its
+    * entry and partial files so a later call can retry. */
+  def materialize(df: DataFrame): DataFrame = {
+    val plan = df.queryExecution.analyzed
+    if (isCopy(plan)) df
+    else {
+      val key = Key(plan.canonicalized, plan.schema, Tables.inputStamp(plan))
+      val path = root.resolve(s"copy-${nextId.incrementAndGet()}")
+      val fresh = Copy(path, new FutureTask[StructType](() => {
+        if (dumpPlans) {
+          println(s"----- materialize[${path.getFileName}] -----")
+          println(df.queryExecution.explainString(
+            org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+        }
+        df.write.mode(SaveMode.Overwrite).parquet(path.toString)
+        df.schema
+      }))
+      val copy = Option(live.putIfAbsent(key, fresh)) match {
+        case None => fresh.written.run(); fresh
+        case Some(prior) =>
+          // Plan-dump coverage depends on clear() between queries: a
+          // subtree materialized earlier in the session is reused and
+          // its plan is NOT re-dumped — say so, so an incomplete dump
+          // is visible.
+          if (dumpPlans)
+            println(s"----- materialize[${prior.path.getFileName}]: reused, plan not dumped -----")
+          prior
       }
-      df.write.mode(SaveMode.Overwrite).parquet(p)
-      (p, df.schema)
-    })
-    val prior = live.putIfAbsent(tag, task)
-    // Plan-dump coverage depends on clear() between queries: a tag
-    // materialized earlier in the session is reused and its subtree plan
-    // is NOT re-dumped — say so, so an incomplete dump is visible.
-    if (prior != null && dumpPlans)
-      println(s"----- materialize[${tag.replaceAll("-[0-9a-f]{12,}", "")}]: reused, plan not dumped -----")
-    val winner = if (prior == null) { task.run(); task } else prior
-    val (path, schema) =
-      try winner.get()
-      catch {
-        case e: java.util.concurrent.ExecutionException =>
-          live.remove(tag, winner)
-          throw e.getCause
-      }
-    df.sparkSession.read.schema(schema).parquet(path)
+      val schema =
+        try copy.written.get()
+        catch {
+          case e: ExecutionException =>
+            if (live.remove(key, copy)) deleteQuietly(copy.path)
+            throw e.getCause
+        }
+      df.sparkSession.read.schema(schema).parquet(copy.path.toString)
+    }
   }
 
   /** Materialize a final result that grows with the data, then sort it
@@ -168,29 +176,30 @@ object Materializer {
     * final aggregate's exchange stays parallel. A corpus-sized result
     * keeps the plain orderBy (writing it out first would double its own
     * IO). */
-  def sortedSmall(tag: String, df: DataFrame, by: String*): DataFrame =
-    materialize(tag, df)
-      .orderBy(by.map(org.apache.spark.sql.functions.col): _*)
+  def sortedSmall(df: DataFrame, by: String*): DataFrame =
+    materialize(df).orderBy(by.map(org.apache.spark.sql.functions.col): _*)
+
+  /** The copies written (or being written) since the last `clear()`. */
+  private[graft] def liveCopies: Int = live.size
 
   /** Drop every materialized copy. Safe to call between queries; the next
-    * `materialize` for a tag simply recomputes. An in-flight write is
+    * `materialize` of a subtree simply recomputes. An in-flight write is
     * awaited first — unregistering it without awaiting would let the write
     * complete later and orphan its directory past this clear(). A failed
-    * write still gets a best-effort delete of its deterministic path
-    * (root/tag), since an aborted Spark write can leave partial files. */
+    * write's directory is deleted too, since an aborted Spark write can
+    * leave partial files. */
   def clear(): Unit = {
-    val it = live.entrySet().iterator()
+    val it = live.values().iterator()
     while (it.hasNext) {
-      val e = it.next()
+      val c = it.next()
       it.remove()
-      val path =
-        try e.getValue.get()._1
-        catch { case _: Exception => if (rootDir != null) rootDir.resolve(e.getKey).toString else null }
-      if (path != null)
-        try deleteTree(java.nio.file.Paths.get(path))
-        catch { case _: Exception => () }
+      try c.written.get() catch { case _: Exception => () }
+      deleteQuietly(c.path)
     }
   }
+
+  private def deleteQuietly(p: Path): Unit =
+    try deleteTree(p) catch { case _: Exception => () }
 
   private def deleteTree(p: Path): Unit =
     if (Files.exists(p)) {

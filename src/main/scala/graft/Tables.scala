@@ -1,6 +1,11 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.BasicFileAttributes
+import java.util.concurrent.TimeUnit
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -19,19 +24,20 @@ import org.apache.spark.sql.types._
   * session and input, and a re-read of the unchanged input passes that
   * schema to `read.schema`, so it runs no job. A kept schema is dropped
   * and inferred again when
-  *  - the input's files changed: any file's path, size or modification
-  *    time, or the file count (the [[Materializer.tagFor]] rule, at the
-  *    millisecond mtimes Hadoop lists). The stamp comes from the listing
-  *    Spark's file index already made for this read, so a re-read
-  *    lists the input once, as before (twice only after a change);
+  *  - the input's [[inputStamp]] changed: any file's path, size or
+  *    nanosecond modification time, or the file count. It is the one
+  *    staleness rule of the package: [[Materializer]] keys its copies
+  *    on it too. The file list is the one Spark's file index already
+  *    made for this read, so a re-read lists the input once, as before
+  *    (twice only after a change);
   *  - a parquet conf of the session changed since it was inferred
   *    (inference depends on them: `nanosAsLong`, `binaryAsString`, …).
   * A schema is never shared across sessions, and the store holds its
   * sessions weakly, so a stopped session is not kept alive.
   */
 object Tables {
-  /** An inferred schema, the files it was inferred from as sorted
-    * (path, size, mtime), and the session's parquet confs at the time. */
+  /** An inferred schema, the [[inputStamp]] of the files it was
+    * inferred from, and the session's parquet confs at the time. */
   private final case class Known(schema: StructType, stamp: Seq[(String, Long, Long)],
       confs: Map[String, String])
 
@@ -41,11 +47,22 @@ object Tables {
   private def parquetConfs(spark: SparkSession): Map[String, String] =
     spark.conf.getAll.filter(_._1.contains("parquet"))
 
-  /** The files `df` scans, from the listing its file index holds. */
-  private def stamp(df: DataFrame): Seq[(String, Long, Long)] =
-    df.queryExecution.analyzed.collect { case r: LogicalRelation => r.relation }.flatMap {
+  /** The input files `plan`'s file-source relations list, as sorted
+    * (path, size, modification time in nanoseconds); the length is the
+    * file count. Paths come from the listing each relation's file index
+    * holds; a local file's size and mtime are read from the file itself,
+    * since Hadoop lists mtimes in milliseconds and a rewrite can land
+    * within one. */
+  private[graft] def inputStamp(plan: LogicalPlan): Seq[(String, Long, Long)] =
+    plan.collectWithSubqueries { case r: LogicalRelation => r.relation }.flatMap {
       case HadoopFsRelation(index: PartitioningAwareFileIndex, _, _, _, _, _) =>
-        index.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+        index.allFiles().map { f =>
+          val path = f.getPath
+          if (path.toUri.getScheme == "file") {
+            val a = Files.readAttributes(Paths.get(path.toUri), classOf[BasicFileAttributes])
+            (path.toString, a.size, a.lastModifiedTime.to(TimeUnit.NANOSECONDS))
+          } else (path.toString, f.getLen, TimeUnit.MILLISECONDS.toNanos(f.getModificationTime))
+        }
       case _ => Nil
     }.sorted
 
@@ -55,11 +72,11 @@ object Tables {
     val confs = parquetConfs(spark)
     val reused = Option(bySession.get(path)).filter(_.confs == confs).flatMap { k =>
       val df = spark.read.schema(k.schema).parquet(path)
-      if (stamp(df) == k.stamp) Some(df) else None
+      if (inputStamp(df.queryExecution.analyzed) == k.stamp) Some(df) else None
     }
     reused.getOrElse {
       val df = spark.read.parquet(path)
-      val files = stamp(df)
+      val files = inputStamp(df.queryExecution.analyzed)
       if (files.nonEmpty) bySession.put(path, Known(df.schema, files, confs))
       df
     }
@@ -119,6 +136,16 @@ object Tables {
   /** DuckDB oracle fragments mirroring dsum/davg. */
   def sqlDsum(col: String): String =
     s"CAST(sum(CAST($col AS DECIMAL(18,2))) AS DOUBLE)"
+
+  /** DuckDB oracle cast of an exact value (DECIMAL or HUGEINT) to DOUBLE,
+    * rounded once, as Spark's cast rounds it. DuckDB's direct cast of a
+    * wide value rounds twice: a DECIMAL(38,4) sum of squares
+    * 2224071148386123.1690 becomes …123.0, not the nearest double
+    * …123.2, and a HUGEINT −19399967019787510 becomes
+    * −1.9399967019787508e16, not −1.939996701978751e16. Its exact
+    * decimal text parses to the nearest double. */
+  def sqlExactDouble(e: String): String =
+    s"CAST(CAST($e AS VARCHAR) AS DOUBLE)"
   def sqlDavg(col: String): String =
     s"CAST(sum(CAST($col AS DECIMAL(18,2))) AS DOUBLE) / count($col)"
 

@@ -126,7 +126,6 @@ object CorpusOps {
     * flags a source the mixture would repeat — the oversampling audit. */
   def sourceMix(spark: SparkSession, dir: String): DataFrame = {
     val per = graft.Materializer.materialize(
-      graft.Materializer.tagFor("srcmix", dir),
       documents(spark, dir)
         .select(col("source"), tokenCountFast(col("text")).as("nt"))
         .groupBy(col("source"))
@@ -445,7 +444,7 @@ object CorpusOps {
     * materialized here: [[pmiBigrams]] consumes it exactly once (into
     * the materialized cxy counts), so a write would be pure overhead;
     * [[bigramSurprise]], which references the pairs twice, materializes
-    * this under the `bgpairs` tag. */
+    * this. */
   private def bigramPairsRaw(spark: SparkSession, dir: String): DataFrame =
     documents(spark, dir)
       .select(col("doc_id"), tokens(col("text")).as("toks"))
@@ -457,8 +456,7 @@ object CorpusOps {
       .select(col("doc_id"), col("p.x").as("x"), col("p.y").as("y"))
 
   private def bigramPairs(spark: SparkSession, dir: String): DataFrame =
-    Materializer.materialize(Materializer.tagFor("bgpairs", dir),
-      bigramPairsRaw(spark, dir))
+    Materializer.materialize(bigramPairsRaw(spark, dir))
 
   def pmiBigrams(spark: SparkSession, dir: String): DataFrame = {
     def lnMu(c: Column): Column =
@@ -467,9 +465,9 @@ object CorpusOps {
     // both count relations are multiply referenced (cx: two annotation
     // joins + the totals agg; cxy: totals + main) — materialize so the
     // corpus scan/shuffle runs once per relation, not once per reference
-    val cxy = Materializer.materialize(Materializer.tagFor("pmicxy", dir),
+    val cxy = Materializer.materialize(
       pairs.groupBy(col("x"), col("y")).agg(count(lit(1)).as("cxy")))
-    val cx = Materializer.materialize(Materializer.tagFor("pmicx", dir),
+    val cx = Materializer.materialize(
       documents(spark, dir)
         .select(explode(tokens(col("text"))).as("tok"))
         .groupBy(col("tok")).agg(count(lit(1)).as("c")))
@@ -570,21 +568,21 @@ object CorpusOps {
     * is needed: every scored pair exists in the corpus counts by
     * construction.
     *
-    * Reuses the PMI materialized count relations (same Materializer
-    * tags ⇒ a full-registry run builds them once). One scan-local pair
+    * Reuses the PMI materialized count relations (the same subtrees,
+    * so the same Materializer copies). One scan-local pair
     * explode + two vocab-keyed equi-joins + one doc rollup; micro-unit
     * lns make the per-doc sum an exact long. */
   def bigramSurprise(spark: SparkSession, dir: String): DataFrame = {
     def lnMu(c: Column): Column =
       floor(log(c.cast("double")) * 1000000.0 + lit(0.5)).cast("long")
     val pairs = bigramPairs(spark, dir)
-    val cxy = Materializer.materialize(Materializer.tagFor("pmicxy", dir),
+    val cxy = Materializer.materialize(
       pairs.groupBy(col("x"), col("y")).agg(count(lit(1)).as("cxy")))
-    val cx = Materializer.materialize(Materializer.tagFor("pmicx", dir),
+    val cx = Materializer.materialize(
       documents(spark, dir)
         .select(explode(tokens(col("text"))).as("tok"))
         .groupBy(col("tok")).agg(count(lit(1)).as("c")))
-    val perDoc = Materializer.materialize(Materializer.tagFor("bgsdoc", dir),
+    val perDoc = Materializer.materialize(
       pairs
         .join(cxy, Seq("x", "y"))
         .join(cx.select(col("tok"), col("c").as("cxc")), col("x") === col("tok"))
@@ -642,7 +640,7 @@ object CorpusOps {
   def tfidfTerms(spark: SparkSession, dir: String): DataFrame = {
     def lnMu(c: Column): Column =
       floor(log(c.cast("double")) * 1000000.0 + lit(0.5)).cast("long")
-    val tf = Materializer.materialize(Materializer.tagFor("tfidftf", dir),
+    val tf = Materializer.materialize(
       documents(spark, dir)
         .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
         .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("c")))

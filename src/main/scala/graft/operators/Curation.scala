@@ -74,7 +74,7 @@ object Curation {
     * uniform; the exploded span table is materialized once (Materializer)
     * because the plan references it on both sides of the join. */
   def boilerplateSpans(spark: SparkSession, dir: String): DataFrame = {
-    val spans = Materializer.materialize(Materializer.tagFor("bpspans", dir),
+    val spans = Materializer.materialize(
       documents(spark, dir)
         .select(col("doc_id"),
           spanHashArr(tokenHashesFast(col("text"))).as("spans"))
@@ -95,7 +95,7 @@ object Curation {
     // bigram-surprise refutation in OPTIMIZATION_r14.md: an inline
     // agg+filter subtree carries the unfiltered aggregate's stats and
     // loses the broadcast)
-    val hot = Materializer.materialize(Materializer.tagFor("bphot", dir),
+    val hot = Materializer.materialize(
       spans.groupBy(col("sh"))
         .agg(countDistinct(col("doc_id")).as("df"))
         .filter(col("df") >= BP_DF)
@@ -221,7 +221,7 @@ object Curation {
     val tf = occ.groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
     val tot = tf.agg(
       floor(log(sum(col("cnt")).cast("double")) * 1000000.0 + lit(0.5)).as("lnn"))
-    val perDoc = Materializer.materialize(Materializer.tagFor("pplnll", dir),
+    val perDoc = Materializer.materialize(
       occ.join(tf, "tok")
         .select(col("doc_id"),
           floor(log(col("cnt").cast("double")) * 1000000.0 + lit(0.5)).as("lnc"))
@@ -290,7 +290,7 @@ object Curation {
         (pmod(charHashFast(col("text")), lit(10)) === Dedup.EVAL_RESIDUE)
           .cast("long").as("is_target"),
         explode(tokens(col("text"))).as("tok"))
-    val tf = Materializer.materialize(Materializer.tagFor("dsirtf", dir),
+    val tf = Materializer.materialize(
       occ.groupBy(col("tok")).agg(
         sum(col("is_target")).as("ct"),
         sum(lit(1L) - col("is_target")).as("cr")))
@@ -300,7 +300,7 @@ object Curation {
     val stats = tf.agg(
       (lnMu(sum(col("ct")) + count(lit(1))) -
         lnMu(sum(col("cr")) + count(lit(1)))).as("dmu"))
-    val perDoc = Materializer.materialize(Materializer.tagFor("dsirdoc", dir),
+    val perDoc = Materializer.materialize(
       occ.filter(col("is_target") === 0L)
         .join(tf, "tok")
         .select(col("doc_id"),

@@ -44,16 +44,16 @@ object Dedup {
 
   /** Jaccard threshold for near-dup (testdata planted pairs sit at ~0.99,
     * background pairs < 0.1 — see calibration at round 1). */
-  private val JACCARD_T = 0.5
+  private[graft] val JACCARD_T = 0.5
 
   /** MinHash params: k=16 permutations (a*x+b mod P), 4 bands × 4 rows. */
-  private val A = Seq(7L, 11L, 13L, 17L, 19L, 23L, 29L, 31L, 37L, 41L, 43L, 47L, 53L, 59L, 61L, 67L)
-  private val B = Seq(3L, 5L, 101L, 211L, 307L, 401L, 503L, 601L, 701L, 809L, 907L, 1009L, 1103L, 1201L, 1301L, 1409L)
-  private val BANDS = 4
-  private val ROWS_PER_BAND = 4
+  private[graft] val A = Seq(7L, 11L, 13L, 17L, 19L, 23L, 29L, 31L, 37L, 41L, 43L, 47L, 53L, 59L, 61L, 67L)
+  private[graft] val B = Seq(3L, 5L, 101L, 211L, 307L, 401L, 503L, 601L, 701L, 809L, 907L, 1009L, 1103L, 1201L, 1301L, 1409L)
+  private[graft] val BANDS = 4
+  private[graft] val ROWS_PER_BAND = 4
   /** Positional weights (31^r) folding one band's minhashes into one
     * order-independent signature. */
-  private val POW31 = Seq(1L, 31L, 961L, 29791L)
+  private[graft] val POW31 = Seq(1L, 31L, 961L, 29791L)
 
   // ---------------------------------------------------------------- exact
   // Exact dedup: md5 content hash → keeper = min doc_id per hash group.
@@ -104,7 +104,7 @@ object Dedup {
     * eviction-bimodal). Computed once, scanned per reference, deleted by
     * Bench/Verify after each query. */
   private[graft] def shingleIndex(spark: SparkSession, dir: String): DataFrame =
-    Materializer.materialize(Materializer.tagFor("shingles", dir),
+    Materializer.materialize(
       docsParallel(spark, dir)
         .select(col("doc_id"),
           explode(graft.functions.DistinctLongs.distinctLongs(
@@ -122,22 +122,6 @@ object Dedup {
     * documents. */
   private val DF_CAP = 20
 
-  /** Exact Jaccard for candidate pairs (d1 < d2) given the inverted index:
-    * |A∩B| from the shingle equi-join, sizes from a groupBy. */
-  private def jaccardOf(cands: DataFrame, sh: DataFrame): DataFrame = {
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val common = cands
-      .join(sh.as("a"), col("d1") === col("a.doc_id"))
-      .join(sh.as("b"), col("d2") === col("b.doc_id") && col("a.sh") === col("b.sh"))
-      .groupBy(col("d1"), col("d2")).agg(count(lit(1)).as("common"))
-    common
-      .join(sizes.as("s1"), col("d1") === col("s1.doc_id"))
-      .join(sizes.as("s2"), col("d2") === col("s2.doc_id"))
-      .select(col("d1"), col("d2"), col("common"),
-        (col("common").cast("double") / (col("s1.n") + col("s2.n") - col("common")))
-          .as("jaccard"))
-  }
-
   // ------------------------------------------------------- n-gram Jaccard
   // Near-dup via the inverted index (no LSH), computed over the
   // STOP-SHINGLE-FILTERED space: shingles with df > DF_CAP are excluded
@@ -151,8 +135,7 @@ object Dedup {
   // density refutes the prefix+verify shape (see ROUND14_NOTES.md).
   def ngramJaccard(spark: SparkSession, dir: String): DataFrame =
     NearDup.cappedJaccardPairs(shingleIndex(spark, dir), "sh", DF_CAP,
-      JACCARD_T, "jaccard", Materializer.tagFor("candidx", dir),
-      inputMaterialized = true)
+      JACCARD_T, "jaccard")
 
   /** The near-dup pair SET without [[ngramJaccard]]'s final global sort
     * — what the clustering/split/audit consumers actually need. Reading
@@ -161,8 +144,7 @@ object Dedup {
     * redundant second on-disk copy of the same pairs ("ndpairs"). */
   private def ngramJaccardUnsorted(spark: SparkSession, dir: String): DataFrame =
     NearDup.cappedJaccardPairsUnsorted(shingleIndex(spark, dir), "sh", DF_CAP,
-      JACCARD_T, "jaccard", Materializer.tagFor("candidx", dir),
-      inputMaterialized = true)
+      JACCARD_T, "jaccard")
 
   val ngramJaccardSql: String =
     s"""WITH ex AS ($sqlShingleIndex),
@@ -179,7 +161,7 @@ object Dedup {
     * runs HALF-SPACE (a < b) via [[NearDup.cappedPairStats]]; both
     * directions then derive from one candidate row (a→b = c/n1,
     * b→a = c/n2) by a scan-local 2-struct explode. Reuses the
-    * `candidx` materialized capped index.
+    * materialized capped shingle index.
     *
     * Scale adjudication (round-14 sf10 profile, 32cpu): this is the
     * registry's pair-volume FLOOR query and its cost is inherent. The
@@ -195,12 +177,12 @@ object Dedup {
     * (candidate density — see ROUND14_NOTES.md). */
   def containment(spark: SparkSession, dir: String): DataFrame = {
     val st = NearDup.cappedPairStats(shingleIndex(spark, dir), "sh", DF_CAP,
-      Materializer.tagFor("candidx", dir), col("a.doc_id") < col("b.doc_id"),
-      "d1", "d2", inputMaterialized = true)
+      col("a.doc_id") < col("b.doc_id"),
+      "d1", "d2")
     // sortedSmall: the sort's child is the full pair aggregate — the
     // adjudicated pair-volume floor (124 M fanout rows at sf10) — and a
     // plain orderBy would run it twice (boundary sample + real pass)
-    Materializer.sortedSmall(Materializer.tagFor("containres", dir),
+    Materializer.sortedSmall(
       st.select(explode(array(
           struct(col("d1").as("inner_doc"), col("d2").as("outer_doc"),
             col("common"), (col("common").cast("double") / col("n1")).as("containment")),
@@ -265,10 +247,11 @@ object Dedup {
     // index) shuffled 500 M (doc_id, sh) rows at the sf100 probe to
     // compute a per-doc projection. Minima over the positional shingle
     // multiset ≡ minima over the distinct index; MinhashKernelSpec pins
-    // the bands relation and the full query bit-exact against the
-    // retained relational twin. The only shuffled relation is the
-    // (doc_id, band, sig) table — the 100 TB write-time shape.
-    val bands = Materializer.materialize(Materializer.tagFor("bands", dir),
+    // the full query bit-exact against the relational twin
+    // (MinhashLshReference, in the test sources). The only shuffled
+    // relation is the (doc_id, band, sig) table — the 100 TB
+    // write-time shape.
+    val bands = Materializer.materialize(
       docsParallel(spark, dir)
         .select(col("doc_id"),
           graft.functions.MinhashSig.bandSigs(
@@ -278,46 +261,14 @@ object Dedup {
     // SHUFFLE_HASH: per-(band, sig) bucket groups are near-dup-sized
     // and the candidate distinct downstream is hash-based — the SMJ
     // sort of the bands table bought nothing (same reasoning as
-    // NearDup.cappedPairStats; the relational twin below stays
-    // un-hinted as the plan-independent equality reference)
+    // NearDup.cappedPairStats; the relational twin stays un-hinted as
+    // the plan-independent equality reference)
     bands.as("x").hint("shuffle_hash").join(bands.as("y"),
         col("x.band") === col("y.band") && col("x.sig") === col("y.sig") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
       .distinct()
   }
-
-  /** The superseded index-groupBy formulation — retained as
-    * MinhashKernelSpec's equality reference (separate materializer tag
-    * so the A/B never aliases the kernel's cache). */
-  private[graft] def lshCandidatesRelational(spark: SparkSession, dir: String): DataFrame = {
-    val sh = shingleIndex(spark, dir)
-    val mhAggs = A.indices.map(i =>
-      min((col("sh") * A(i) + B(i)) % P).as(s"mh$i"))
-    val mh = sh.groupBy(col("doc_id")).agg(mhAggs.head, mhAggs.tail: _*)
-    // sig_b = (Σ_r mh[b*4+r] · 31^r) mod P; partial sums < 4·P·31³ « 2^63,
-    // so sum-then-mod equals the oracle's incremental-mod fold.
-    val sigCols = (0 until BANDS).map { b =>
-      (0 until ROWS_PER_BAND)
-        .map(r => col(s"mh${b * ROWS_PER_BAND + r}") * POW31(r))
-        .reduce(_ + _) % P
-    }
-    val bands = Materializer.materialize(Materializer.tagFor("bandsrel", dir),
-      mh.select(col("doc_id"),
-        posexplode(array(sigCols: _*)).as(Seq("band", "sig"))))
-    bands.as("x").join(bands.as("y"),
-        col("x.band") === col("y.band") && col("x.sig") === col("y.sig") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("d1"), col("y.doc_id").as("d2"))
-      .distinct()
-  }
-
-  /** Full production query over the relational candidate twin (spec
-    * reference for [[minhashLsh]]). */
-  private[graft] def minhashLshRelational(spark: SparkSession, dir: String): DataFrame =
-    jaccardOf(lshCandidatesRelational(spark, dir), shingleIndex(spark, dir))
-      .filter(col("jaccard") >= JACCARD_T)
-      .orderBy("d1", "d2")
 
   def minhashLsh(spark: SparkSession, dir: String): DataFrame = {
     // Verification index restricted to CANDIDATE docs (round 13): the
@@ -329,14 +280,13 @@ object Dedup {
     // the sf100 corpus; LSH banding is the filter doing its job). The
     // left-semi join keeps the index build proportional to CANDIDATE
     // volume — row-linear by the banding+distinct construction — not
-    // corpus volume. Output is bit-identical (jaccardOf only joins on
-    // candidate doc ids; MinhashKernelSpec pins equality vs the
-    // full-index relational twin).
-    val cands = Materializer.materialize(Materializer.tagFor("lshcands", dir),
-      lshCandidates(spark, dir))
+    // corpus volume. Output is bit-identical (the twin's verification
+    // only joins on candidate doc ids; MinhashKernelSpec pins equality
+    // vs the full-index relational twin).
+    val cands = Materializer.materialize(lshCandidates(spark, dir))
     val candDocs = cands.select(col("d1").as("doc_id"))
       .unionByName(cands.select(col("d2").as("doc_id"))).distinct()
-    val vIdx = Materializer.materialize(Materializer.tagFor("candshingles", dir),
+    val vIdx = Materializer.materialize(
       docsParallel(spark, dir)
         .join(candDocs, Seq("doc_id"), "left_semi")
         .select(col("doc_id"),
@@ -353,7 +303,7 @@ object Dedup {
     // bit-identical output, no probabilistic estimate involved
     // (MinhashKernelSpec pins equality vs the ungated relational twin).
     // Sizes ride along through the aggregate, saving the two post-agg
-    // size joins jaccardOf paid.
+    // size joins the twin's verification pays.
     val sizes = vIdx.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val gated = cands
       .join(sizes.as("s1"), col("d1") === col("s1.doc_id"))
@@ -364,7 +314,7 @@ object Dedup {
     // sortedSmall: the sort's child is the verification intersection
     // join + aggregate — the query's dominant cost — and a plain
     // orderBy would run it twice (boundary sample + real pass)
-    Materializer.sortedSmall(Materializer.tagFor("minhashres", dir),
+    Materializer.sortedSmall(
       gated
         .join(vIdx.as("a"), col("d1") === col("a.doc_id"))
         .join(vIdx.as("b"), col("d2") === col("b.doc_id") && col("a.sh") === col("b.sh"))
@@ -520,14 +470,14 @@ object Dedup {
     // (and faster); DuckDB mirrors with (simhash >> (9*c)) & 511.
     // Unpivoted with posexplode of the 7 chunk expressions — no join.
     // materialized: both sides of the chunk self-join reference it
-    val chunks = Materializer.materialize(Materializer.tagFor("chunks", dir),
+    val chunks = Materializer.materialize(
       simhash.select(col("doc_id"), col("simhash"),
         posexplode(array((0 until CHUNKS).map(c =>
           expr(s"shiftright(simhash, ${9 * c}) & 511")): _*)).as(Seq("c", "chunk"))))
     // sortedSmall: the sort's child is the chunk-collision self-join +
     // distinct — the query's fanout cost — and a plain orderBy would
     // run it twice (boundary sample + real pass)
-    Materializer.sortedSmall(Materializer.tagFor("simhashres", dir),
+    Materializer.sortedSmall(
       chunks.as("x").join(chunks.as("y"),
           col("x.c") === col("y.c") && col("x.chunk") === col("y.chunk") &&
             col("x.doc_id") < col("y.doc_id"))
@@ -586,12 +536,11 @@ object Dedup {
   def incrementalNearDup(spark: SparkSession, dir: String): DataFrame = {
     val newA = pmod(col("a.doc_id"), lit(10)) === NEW_RESIDUE
     val newB = pmod(col("b.doc_id"), lit(10)) === NEW_RESIDUE
-    // tag "candidx" — the capped index is identical to [[ngramJaccard]]'s
-    // (same postings, key, cap), so a full-registry run builds it once
+    // the capped index is [[ngramJaccard]]'s (same postings, key and
+    // cap, so the same plans and the same Materializer copies)
     NearDup.cappedJaccardJoin(shingleIndex(spark, dir), "sh", DF_CAP,
-      JACCARD_T, "jaccard", Materializer.tagFor("candidx", dir),
-      newA && (!newB || col("a.doc_id") < col("b.doc_id")),
-      "new_doc", "other_doc", inputMaterialized = true)
+      JACCARD_T, "jaccard", newA && (!newB || col("a.doc_id") < col("b.doc_id")),
+      "new_doc", "other_doc")
   }
 
   val incrementalNearDupSql: String =
@@ -699,7 +648,7 @@ object Dedup {
     // folded into the same aggregate job that enumerates the nodes —
     // pair-shaped clusters (the common case) converge here and pay only
     // the single verification round below
-    var labels = Materializer.materialize(Materializer.tagFor("ndlbl0", dir),
+    var labels = Materializer.materialize(
       edges.select(col("a").as("d"), col("b").as("lbl"))
         .unionByName(edges.select(col("a").as("d"), col("a").as("lbl")))
         .groupBy(col("d")).agg(min(col("lbl")).as("lbl")))
@@ -723,7 +672,7 @@ object Dedup {
         .filter(col("nlbl") < col("lbl"))
       changed = delta.count()
       if (changed > 0)
-        labels = Materializer.materialize(Materializer.tagFor(s"ndlbl$iter", dir),
+        labels = Materializer.materialize(
           labels.as("o").join(delta.as("u"), col("o.d") === col("u.a"), "left")
             .select(col("o.d").as("d"),
               least(col("o.lbl"), coalesce(col("u.nlbl"), col("o.lbl"))).as("lbl")))
@@ -822,8 +771,7 @@ object Dedup {
     // k-gram index by kg to attach a count whose hot-key set is tiny —
     // the same cost NearDup.cappedPostings removed from the shingle
     // family (see there for the measured numbers)
-    val idx = NearDup.cappedPostings(kg, "kg", DF_CAP,
-      Materializer.tagFor("spanidx", dir))
+    val idx = NearDup.cappedPostings(kg, "kg", DF_CAP)
     val m = idx.as("a").join(idx.as("b"),
         col("a.kg") === col("b.kg") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"),
@@ -834,7 +782,7 @@ object Dedup {
     // sortedSmall: the sort's child is the positional pair join + run
     // grouping — the query's fanout cost — and a plain orderBy would
     // run it twice (boundary sample + real pass)
-    Materializer.sortedSmall(Materializer.tagFor("spanres", dir),
+    Materializer.sortedSmall(
       m.withColumn("grp", col("pa") - row_number().over(w))
         .groupBy(col("da"), col("db"), col("diag"), col("grp"))
         .agg(min(col("pa")).as("start_a"), min(col("pb")).as("start_b"),
@@ -931,7 +879,7 @@ object Dedup {
     * both Spark and DuckDB, so the distances hash-match as plain ints. */
   def editNearDup(spark: SparkSession, dir: String): DataFrame = {
     // Candidates come from the shared df-capped shingle index (the same
-    // `candidx` materialization the jaccard/containment family reuses),
+    // materialization the jaccard/containment family reuses),
     // NOT from a (lang, length-band) self-join: the round-9 sf1 slope
     // probe measured the band-blocked form at 77.8× for a ×10 row step
     // (linear would be 10×) — length bands are content-blind, so block
@@ -954,8 +902,7 @@ object Dedup {
       expr(s"n_chars DIV $EDIT_BAND").as("band"),
       explode(graft.functions.DistinctLongs.distinctLongs(
         shingleHashesFast(col("text")))).as("sh"))
-    val capped = NearDup.cappedPostings(posts, "sh", DF_CAP,
-      Materializer.tagFor("editposts", dir))
+    val capped = NearDup.cappedPostings(posts, "sh", DF_CAP)
     // SHUFFLE_HASH for the same reason as NearDup.cappedPairStats: the
     // per-key groups are ≤ DF_CAP rows and nothing downstream needs the
     // SMJ sort order — the sorts were the join stages' dominant cost
@@ -976,7 +923,7 @@ object Dedup {
     val segCapped = NearDup.cappedPostings(
       d.select(col("doc_id"), col("lang"), col("band"),
         explode(array(segs: _*)).as("segk")),
-      "segk", DF_CAP, Materializer.tagFor("editsegs", dir))
+      "segk", DF_CAP)
     val secondary = segCapped.as("sa").hint("shuffle_hash").join(segCapped.as("sb"),
         col("sa.segk") === col("sb.segk") && col("sa.doc_id") < col("sb.doc_id") &&
           col("sa.lang") === col("sb.lang") && col("sa.band") === col("sb.band"))
@@ -985,7 +932,7 @@ object Dedup {
     // sortedSmall: the sort's child is the candidate join + banded
     // edit-distance verification — the query's dominant cost — and a
     // plain orderBy would run it twice (boundary sample + real pass)
-    Materializer.sortedSmall(Materializer.tagFor("editres", dir),
+    Materializer.sortedSmall(
       cand
         .join(d.as("a"), col("d1") === col("a.doc_id"))
         .join(d.as("b"), col("d2") === col("b.doc_id") &&
@@ -1212,13 +1159,13 @@ object Dedup {
     * threshold inside a dense decile is unstable (small score drift
     * moves many pairs across it); a healthy planted-dup corpus shows
     * the bimodal shape — background mass in the low deciles, dups at
-    * the top, empty middle. Reuses the shared `candidx` materialized
+    * the top, empty middle. Reuses the shared materialized capped
     * index; the curve itself is one ≤10-row aggregate, and the
     * cumulative tail runs over that CONSTANT-size relation. */
   def dedupSweep(spark: SparkSession, dir: String): DataFrame = {
     val st = NearDup.cappedPairStats(shingleIndex(spark, dir), "sh", DF_CAP,
-      Materializer.tagFor("candidx", dir), col("a.doc_id") < col("b.doc_id"),
-      "d1", "d2", inputMaterialized = true)
+      col("a.doc_id") < col("b.doc_id"),
+      "d1", "d2")
     val b = st.select(least(floor(
         (col("common").cast("double") / (col("n1") + col("n2") - col("common"))) * 10)
         .cast("int"), lit(9)).as("bucket"))
@@ -1280,7 +1227,7 @@ object Dedup {
     // back to a shuffled equi-join on doc_id otherwise.
     // sortedSmall: the sort's child re-derives the corpus-wide split
     // hash (a full text scan) — a plain orderBy would run it twice
-    Materializer.sortedSmall(Materializer.tagFor("leakres", dir),
+    Materializer.sortedSmall(
       ngramJaccardUnsorted(spark, dir)
         .join(sp.select(col("doc_id").as("d1"), col("split").as("split_1")), "d1")
         .join(sp.select(col("doc_id").as("d2"), col("split").as("split_2")), "d2")
@@ -1339,8 +1286,8 @@ object Dedup {
     // to (side, key) rows scan-locally, so one shuffle + one tiny
     // materialized table replaces two separate aggregate jobs + writes
     // over the same input.
-    val kgm = Materializer.materialize(Materializer.tagFor("stitchkg", dir), kg)
-    val hot = Materializer.materialize(Materializer.tagFor("stitchhot", dir),
+    val kgm = Materializer.materialize(kg)
+    val hot = Materializer.materialize(
       kgm.select(explode(array(
           struct(lit(0).as("side"), col("head").as("key")),
           struct(lit(1).as("side"), col("tail").as("key")))).as("r"))
@@ -1355,7 +1302,7 @@ object Dedup {
         Seq("tail"), "left_anti")
     // sortedSmall: the sort's child is the boundary self-join — a plain
     // orderBy would run it twice (boundary sample + real pass)
-    Materializer.sortedSmall(Materializer.tagFor("stitchres", dir),
+    Materializer.sortedSmall(
       capped.as("a").join(capped.as("b"),
           col("a.tail") === col("b.head") && col("a.doc_id") =!= col("b.doc_id"))
         .select(col("a.doc_id").as("left_doc"), col("b.doc_id").as("right_doc"),
@@ -1408,7 +1355,7 @@ object Dedup {
       .orderBy(col("q_mu").desc, col("doc_id").asc)
     // sortedSmall: the sort's child re-scans documents and re-scores
     // quality — a plain orderBy would run it twice
-    Materializer.sortedSmall(Materializer.tagFor("keeperres", dir),
+    Materializer.sortedSmall(
       scored
         .withColumn("rk", row_number().over(w))
         .groupBy(col("cluster_id"))
@@ -1483,7 +1430,7 @@ object Dedup {
       .agg(count(lit(1)).as("cross_pairs"))
     // sortedSmall: the sort's child re-scans documents (token counts +
     // split assignment) — a plain orderBy would run it twice
-    Materializer.sortedSmall(Materializer.tagFor("lssres", dir),
+    Materializer.sortedSmall(
       assigned.groupBy(col("split"))
         .agg(countDistinct(col("gk")).as("n_groups"),
           count(lit(1)).as("n_docs"),

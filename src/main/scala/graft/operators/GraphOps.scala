@@ -78,7 +78,7 @@ object GraphOps {
     // materialize edges ⋈ groupBy(src).sum) paid a full write+read
     // round trip plus a two-sided join for the same rows. Node set and
     // every iteration round read the one materialized relation.
-    val ann = Materializer.materialize(Materializer.tagFor("prann", dir),
+    val ann = Materializer.materialize(
       transitionEdges(spark, dir).withColumn("wtot",
         sum(col("w")).over(Window.partitionBy(col("src")))))
     val nodes = ann.select(col("src").as("node"))
@@ -86,7 +86,7 @@ object GraphOps {
     // round 1 folded: from the uniform init every source holds exactly
     // INIT_MU, so the first round's contribution is a constant formula
     // over the edge list — no rank join and no materialized r0
-    var ranks = Materializer.materialize(Materializer.tagFor("pr1", dir),
+    var ranks = Materializer.materialize(
       nodes.join(
         ann.select(col("dst"), prContrib(INIT_MU.toString).as("c"))
           .groupBy(col("dst").as("node")).agg(sum(col("c")).as("cin")),
@@ -99,7 +99,7 @@ object GraphOps {
           prContrib("r_mu").as("c"))
         .groupBy(col("dst").as("node"))
         .agg(sum(col("c")).as("cin"))
-      ranks = Materializer.materialize(Materializer.tagFor(s"pr$i", dir),
+      ranks = Materializer.materialize(
         nodes.join(contrib, Seq("node"), "left")
           .select(col("node"),
             (lit(JUMP_MU) + coalesce(col("cin"), lit(0L))).as("r_mu")))
@@ -179,8 +179,7 @@ object GraphOps {
     * one full-outer id join + one self-join on reversed edges for the
     * reciprocated weight — all key-hashed, linear in |E|. */
   def graphDegrees(spark: SparkSession, dir: String): DataFrame = {
-    val edges = Materializer.materialize(Materializer.tagFor("predges", dir),
-      transitionEdges(spark, dir))
+    val edges = Materializer.materialize(transitionEdges(spark, dir))
     val out = edges.groupBy(col("src").as("node"))
       .agg(sum(col("w")).as("out_w"), count(lit(1)).as("out_deg"))
     val in = edges.groupBy(col("dst").as("node"))
@@ -243,7 +242,7 @@ object GraphOps {
     // the directed edge list is referenced ONCE here (unlike pageRank /
     // graphDegrees), so it folds straight into the undirected-dedup
     // materialization — one write+read round trip instead of two (r15)
-    val und = Materializer.materialize(Materializer.tagFor("undedges", dir),
+    val und = Materializer.materialize(
       transitionEdges(spark, dir)
         .select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b")).distinct())
@@ -306,8 +305,7 @@ object GraphOps {
     * 2⁶³ (r10 overflow class); the division is one fixed IEEE chain,
     * and the final H_mu is an exact long per page. */
   def transitionEntropy(spark: SparkSession, dir: String): DataFrame =
-    entropyFromEdges(Materializer.materialize(
-      Materializer.tagFor("predges", dir), transitionEdges(spark, dir)))
+    entropyFromEdges(Materializer.materialize(transitionEdges(spark, dir)))
 
   /** Entropy rollup over a prebuilt (src, dst, w) edge relation — split
     * out so the overflow sweep can drive it with 10¹¹-count hot edges. */

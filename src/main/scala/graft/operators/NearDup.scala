@@ -22,20 +22,19 @@ import graft.Materializer
 object NearDup {
 
   /** df-capped jaccard near-dup pairs over a `(doc_id, key)` posting
-    * list. The posting list is materialized under `tag` (unless the
-    * caller says it already is) — it is referenced three times (sizes +
-    * both self-join sides) and Spark has no cross-reference subtree
-    * reuse. Output: (d1, d2, common, `scoreName`) for pairs with
-    * score ≥ `threshold`, d1 < d2.
+    * list. The posting list is materialized (unless it already is a
+    * Materializer copy) — it is referenced three times (sizes + both
+    * self-join sides) and Spark has no cross-reference subtree reuse.
+    * Output: (d1, d2, common, `scoreName`) for pairs with score ≥
+    * `threshold`, d1 < d2.
     *
     * Scale shape: one tiny hot-key aggregate (df cap), one self-join on
     * key with per-key fan-out bounded by dfCap², one aggregate on the
     * pair key — never the O(n²) pair space. */
   def cappedJaccardPairs(postings: DataFrame, key: String, dfCap: Int,
-                         threshold: Double, scoreName: String, tag: String,
-                         inputMaterialized: Boolean = false): DataFrame =
-    cappedJaccardJoin(postings, key, dfCap, threshold, scoreName, tag,
-      col("a.doc_id") < col("b.doc_id"), "d1", "d2", inputMaterialized)
+                         threshold: Double, scoreName: String): DataFrame =
+    cappedJaccardJoin(postings, key, dfCap, threshold, scoreName,
+      col("a.doc_id") < col("b.doc_id"), "d1", "d2")
 
   /** [[cappedJaccardPairs]] without the final global sort — for
     * consumers (clustering, splits, audits) that only need the pair SET
@@ -43,11 +42,10 @@ object NearDup {
     * reference just to discard the order. Returns the materialized
     * scored relation directly. */
   def cappedJaccardPairsUnsorted(postings: DataFrame, key: String, dfCap: Int,
-                                 threshold: Double, scoreName: String, tag: String,
-                                 inputMaterialized: Boolean = false): DataFrame =
-    cappedScoredPairs(postings, key, dfCap, threshold, scoreName, tag,
+                                 threshold: Double, scoreName: String): DataFrame =
+    cappedScoredPairs(postings, key, dfCap, threshold, scoreName,
       col("a.doc_id") < col("b.doc_id"), "d1", "d2",
-      jaccardScore, jaccardGate(threshold), inputMaterialized)
+      jaccardScore, jaccardGate(threshold))
 
   private def jaccardScore: (Column, Column, Column) => Column =
     (common, n1, n2) => common.cast("double") / (n1 + n2 - common)
@@ -69,26 +67,23 @@ object NearDup {
     * new-side × existing-side). Output (`c1`, `c2`, common,
     * `scoreName`), ordered by (c1, c2). */
   def cappedJaccardJoin(postings: DataFrame, key: String, dfCap: Int,
-                        threshold: Double, scoreName: String, tag: String,
-                        pairCond: Column, c1: String, c2: String,
-                        inputMaterialized: Boolean = false): DataFrame =
-    cappedScoredJoin(postings, key, dfCap, threshold, scoreName, tag,
-      pairCond, c1, c2, jaccardScore,
-      gate = jaccardGate(threshold), inputMaterialized = inputMaterialized)
+                        threshold: Double, scoreName: String,
+                        pairCond: Column, c1: String, c2: String): DataFrame =
+    cappedScoredJoin(postings, key, dfCap, threshold, scoreName,
+      pairCond, c1, c2, jaccardScore, gate = jaccardGate(threshold))
 
   /** Fully general form: `score(common, n1, n2)` plugs the similarity
     * formula (jaccard = c/(n1+n2−c); containment = c/n1; overlap
     * coefficient = c/least(n1,n2); …) over the same capped-posting-list
     * candidate skeleton. */
   def cappedScoredJoin(postings: DataFrame, key: String, dfCap: Int,
-                       threshold: Double, scoreName: String, tag: String,
+                       threshold: Double, scoreName: String,
                        pairCond: Column, c1: String, c2: String,
                        score: (Column, Column, Column) => Column,
-                       gate: (Column, Column) => Column = (_, _) => lit(true),
-                       inputMaterialized: Boolean = false)
+                       gate: (Column, Column) => Column = (_, _) => lit(true))
       : DataFrame =
-    cappedScoredPairs(postings, key, dfCap, threshold, scoreName, tag,
-      pairCond, c1, c2, score, gate, inputMaterialized)
+    cappedScoredPairs(postings, key, dfCap, threshold, scoreName,
+      pairCond, c1, c2, score, gate)
       .orderBy(c1, c2)
 
   /** The materialized scored pair relation BEFORE the final orderBy.
@@ -101,29 +96,22 @@ object NearDup {
     * executor-run seconds re-aggregating 94.5 M partial rows to produce
     * boundaries for a 25.6 k-row sort). Materialized, both sort passes
     * read a tiny parquet — and unsorted consumers (clustering, splits)
-    * skip the sort entirely. The tag folds in every parameter that
-    * distinguishes callers sharing a posting-list tag (incremental vs
-    * symmetric dedup both ride "candidx"): threshold, score/column
-    * names, and the pair condition's expression string. */
+    * skip the sort entirely. The copy is keyed by its plan and output
+    * schema, so callers over one posting list (incremental and
+    * symmetric dedup both read the shingle index) share it only when
+    * threshold, score, pair condition and output column names agree
+    * too. */
   def cappedScoredPairs(postings: DataFrame, key: String, dfCap: Int,
-                        threshold: Double, scoreName: String, tag: String,
+                        threshold: Double, scoreName: String,
                         pairCond: Column, c1: String, c2: String,
                         score: (Column, Column, Column) => Column,
-                        gate: (Column, Column) => Column = (_, _) => lit(true),
-                        inputMaterialized: Boolean = false)
-      : DataFrame = {
-    val scoredTag = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      md.update(s"$threshold|$scoreName|$c1|$c2|$pairCond".getBytes("UTF-8"))
-      tag + "-scored-" + md.digest().map("%02x".format(_)).mkString.take(12)
-    }
-    Materializer.materialize(scoredTag,
-      cappedPairStats(postings, key, dfCap, tag, pairCond, c1, c2, gate,
-        inputMaterialized)
+                        gate: (Column, Column) => Column = (_, _) => lit(true))
+      : DataFrame =
+    Materializer.materialize(
+      cappedPairStats(postings, key, dfCap, pairCond, c1, c2, gate)
         .select(col(c1), col(c2), col("common"),
           score(col("common"), col("n1"), col("n2")).as(scoreName))
         .filter(col(scoreName) >= threshold))
-  }
 
   /** The df-capped posting list — the shared candidate substrate every
     * consumer (jaccard, containment, edit-verify, …) builds its pair
@@ -159,18 +147,14 @@ object NearDup {
     * round trip ≈ 0.3 s of the bench's per-query fixed cost across the
     * whole family; at sf100 the anti-join probe is a no-op beside the
     * scan it rides). What IS materialized is the INPUT posting list
-    * (under `tag + "-post"`) when the caller says it isn't already:
-    * without that, the raw posting pipeline (winnow windows, k-gram
-    * hashing) would re-run once per consumer — the hot aggregate plus
-    * every self-join side. Callers whose postings are already a
-    * materialized scan (the shared shingle index) pass
-    * `inputMaterialized = true` and skip the copy. */
-  def cappedPostings(postings: DataFrame, key: String, dfCap: Int,
-                     tag: String, inputMaterialized: Boolean = false): DataFrame = {
-    val post =
-      if (inputMaterialized) postings
-      else Materializer.materialize(tag + "-post", postings)
-    val hot = Materializer.materialize(tag + "-hot",
+    * — without that, the raw posting pipeline (winnow windows, k-gram
+    * hashing) would re-run once per consumer: the hot aggregate plus
+    * every self-join side. Postings that already are a materialized scan
+    * (the shared shingle index) pass through [[Materializer.materialize]]
+    * as they are. */
+  def cappedPostings(postings: DataFrame, key: String, dfCap: Int): DataFrame = {
+    val post = Materializer.materialize(postings)
+    val hot = Materializer.materialize(
       post.groupBy(col(key)).agg(count(lit(1)).as("df"))
         .filter(col("df") > dfCap)
         .select(col(key)))
@@ -178,12 +162,10 @@ object NearDup {
   }
 
   def cappedPairStats(postings: DataFrame, key: String, dfCap: Int,
-                      tag: String, pairCond: Column,
-                      c1: String, c2: String,
-                      gate: (Column, Column) => Column = (_, _) => lit(true),
-                      inputMaterialized: Boolean = false)
+                      pairCond: Column, c1: String, c2: String,
+                      gate: (Column, Column) => Column = (_, _) => lit(true))
       : DataFrame = {
-    val capped = cappedPostings(postings, key, dfCap, tag, inputMaterialized)
+    val capped = cappedPostings(postings, key, dfCap)
     // Per-doc sizes attach to the POSTING LIST before the pair join and
     // ride through the aggregate as grouping columns (functionally
     // dependent on the doc ids — same groups), instead of joining the
@@ -202,7 +184,7 @@ object NearDup {
     // small, the ordinary co-partitioned join when a corpus outgrows
     // the threshold. The pair shuffle widens by 16 bytes per row —
     // strictly cheaper than re-shuffling the pair set twice.
-    val sizes = Materializer.materialize(tag + "-sizes",
+    val sizes = Materializer.materialize(
       capped.groupBy(col("doc_id")).agg(count(lit(1)).as("n")))
     val withN = capped.join(sizes, Seq("doc_id"))
     // SHUFFLE_HASH, not sort-merge: SMJ sorts BOTH shuffled sides by

@@ -277,10 +277,10 @@ object Relational {
   private def sqlDecCorr(x: String, y: String): String = {
     def d(c: String) = s"CAST($c AS DECIMAL(18,2))"
     val n = "CAST(count(*) AS DOUBLE)"
-    val sx = s"CAST(sum(${d(x)}) AS DOUBLE)"; val sy = s"CAST(sum(${d(y)}) AS DOUBLE)"
-    val sxx = s"CAST(sum(${d(x)} * ${d(x)}) AS DOUBLE)"
-    val syy = s"CAST(sum(${d(y)} * ${d(y)}) AS DOUBLE)"
-    val sxy = s"CAST(sum(${d(x)} * ${d(y)}) AS DOUBLE)"
+    val sx = sqlExactDouble(s"sum(${d(x)})"); val sy = sqlExactDouble(s"sum(${d(y)})")
+    val sxx = sqlExactDouble(s"sum(${d(x)} * ${d(x)})")
+    val syy = sqlExactDouble(s"sum(${d(y)} * ${d(y)})")
+    val sxy = sqlExactDouble(s"sum(${d(x)} * ${d(y)})")
     s"($n * $sxy - $sx * $sy) / (sqrt($n * $sxx - $sx * $sx) * sqrt($n * $syy - $sy * $sy))"
   }
 
@@ -864,8 +864,8 @@ object Relational {
   }
 
   val revenueTrendSql: String = {
-    val slope = "(CAST(CAST(n_days AS HUGEINT) * sxy - sx * sy AS DOUBLE)" +
-      " / CAST(CAST(n_days AS HUGEINT) * sxx - sx * sx AS DOUBLE))"
+    val slope = s"(${sqlExactDouble("CAST(n_days AS HUGEINT) * sxy - sx * sy")}" +
+      s" / ${sqlExactDouble("CAST(n_days AS HUGEINT) * sxx - sx * sx")})"
     s"""WITH daily AS (
        |  SELECT c_mktsegment,
        |         CAST(date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS BIGINT) AS xd,
@@ -879,7 +879,7 @@ object Relational {
        |              CAST(sum(CAST(xd AS HUGEINT) * xd) AS HUGEINT) AS sxx
        |       FROM daily GROUP BY 1)
        |SELECT c_mktsegment, n_days,
-       |       CAST(sy AS DOUBLE) / n_days / 100.0 AS avg_daily_revenue,
+       |       ${sqlExactDouble("sy")} / n_days / 100.0 AS avg_daily_revenue,
        |       $slope / 100.0 AS trend_per_day
        |FROM mo ORDER BY 1""".stripMargin
   }
@@ -1475,7 +1475,7 @@ object Relational {
     // value) so the counting pass needs no second bounds crossJoin;
     // written to parquet, thr's true size (|types| rows) makes the
     // static planner broadcast it into the counting join.
-    val thr = graft.Materializer.materialize(graft.Materializer.tagFor("psithr", dir),
+    val thr = graft.Materializer.materialize(
       ranked
         .filter(qs.map(q => col("rk") === rankAt(q)).reduce(_ || _))
         .groupBy(col("event_type"))
@@ -1706,7 +1706,6 @@ object Relational {
     // recompute its two fact passes per reference; read from parquet it
     // broadcasts into every dev derivation for free.
     val med = graft.Materializer.materialize(
-      graft.Materializer.tagFor("madmed", dir),
       bandedQuantiles(rev, "c_mktsegment", "cents", "o_orderkey",
         CENTS_BAND, Seq((0.5, "med"))))
     // un-hinted: med reads back from parquet — true 5-row size drives
@@ -2317,7 +2316,7 @@ object Relational {
     // SCAN-LOCALLY from each order's sorted brand set — per-order fanout
     // is bounded by basket width, never a join. The set relation is
     // materialized once (two consumers: pair counts + brand marginals).
-    val sets = graft.Materializer.materialize(graft.Materializer.tagFor("basketsets", dir),
+    val sets = graft.Materializer.materialize(
       lineitem(spark, dir)
         .join(broadcast(part(spark, dir)), col("l_partkey") === col("p_partkey"))
         .groupBy(col("l_orderkey").as("okey"))

@@ -157,8 +157,7 @@ object ScalePatterns {
     // Materialized: the HOT_N-row set is referenced 3× (probe tag + build
     // filter + probe filter) and an un-materialized subtree would re-scan
     // the fact table's key column per reference.
-    val hot = Materializer.materialize(
-      Materializer.tagFor("skewhot", dir), hotKeysPlan(spark, dir))
+    val hot = Materializer.materialize(hotKeysPlan(spark, dir))
     val tagged = ev.join(broadcast(hot), col("user_id") === col("hot_key"), "left")
     val cold = tagged.filter(col("hot_key").isNull).drop("hot_key")
       .join(ords, col("user_id") === col("o_custkey"))

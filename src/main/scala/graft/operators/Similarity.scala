@@ -238,25 +238,21 @@ object Similarity {
       s"(CASE WHEN ${sqlDot(emb, sqlPlane(j))} > 0 THEN ${1 << j} ELSE 0 END)")
       .mkString(" + ")
 
-  /** vec_id, embedding, nrm, pmask, bucket — the shared substrate of the
-    * sign-LSH family: norms once, the corpus-adaptive plane mask
-    * broadcast from a 1-row count aggregate (the standard agg-bounded
-    * BNLJ shape, machine-checked by PlanGuardSpec), and the masked
-    * bucket id. */
-  /** Per-dir corpus counts, cached per JVM — a parquet footer count, run
-    * once at first LSH/IVF-family build against a dir: makes mask
-    * saturation LOUD and sizes the query-side broadcast decision (the
-    * in-plan count stays the pmask source). Known staleness (ADVICE
-    * r10, accepted): a dir whose parquet is REGENERATED within one JVM
-    * (ScaleProbe re-writing target/sf*_synth) keeps its first count, so
-    * the broadcast-vs-shuffle choice and saturation warning may use the
-    * old size — advisory-only paths; correctness never reads this cache.
-    * Probe workflows regenerate dirs across JVM runs in practice; if one
-    * ever regenerates in-process, key this on (dir, footer row-count). */
-  private val nVecSeen = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  /** Corpus counts, cached per JVM and keyed on the embeddings input's
+    * [[graft.Tables.inputStamp]] — one parquet footer count per input
+    * version, run at the first LSH/IVF-family build against it: makes
+    * mask saturation LOUD and picks the kernel or relational branch and
+    * the query-side broadcast (the in-plan count stays the pmask
+    * source). A dir regenerated in the same JVM (ScaleProbe re-writing
+    * target/sf*_synth) has a new stamp, so it is counted again. */
+  private val nVecSeen =
+    new java.util.concurrent.ConcurrentHashMap[Seq[(String, Long, Long)], java.lang.Long]()
 
-  private def nVecOf(spark: SparkSession, dir: String): Long =
-    nVecSeen.computeIfAbsent(dir, d => Long.box(embeddings(spark, d).count()))
+  private[graft] def nVecOf(spark: SparkSession, dir: String): Long = {
+    val e = embeddings(spark, dir)
+    nVecSeen.computeIfAbsent(graft.Tables.inputStamp(e.queryExecution.analyzed),
+      _ => Long.box(e.count()))
+  }
 
   /** Broadcast bound for the probed-cell query relation (ADVICE r9): the
     * IVF scale forms' query side is nq·NPROBE rows of 64-dim embeddings,
@@ -275,6 +271,11 @@ object Similarity {
   private def maybeBroadcastQ(spark: SparkSession, dir: String, q: DataFrame): DataFrame =
     if (nVecOf(spark, dir) / QUERY_MOD * NPROBE <= QUERY_BROADCAST_MAX) broadcast(q) else q
 
+  /** vec_id, embedding, nrm, pmask, bucket — the shared substrate of the
+    * sign-LSH family: norms once, the corpus-adaptive plane mask
+    * broadcast from a 1-row count aggregate (the standard agg-bounded
+    * BNLJ shape, machine-checked by PlanGuardSpec), and the masked
+    * bucket id. */
   private def withNormBucket(spark: SparkSession, dir: String): DataFrame = {
     // saturation signal (ADVICE r9): past n = LSH_OCC·2^MAX_PLANES ≈ 8.2M
     // vectors the adaptive mask pins at MAX_PLANES and bucket occupancy —
@@ -282,7 +283,7 @@ object Similarity {
     // the corpus. Don't let that return to super-linear scaling be silent
     // in probe runs: warn loudly (the fix at real scale is growing the
     // plane pool constant, not a code change).
-    val n = nVecSeen.computeIfAbsent(dir, d => Long.box(embeddings(spark, d).count()))
+    val n = nVecOf(spark, dir)
     if (n > (LSH_OCC << MAX_PLANES))
       System.err.println(
         s"[graft] WARNING: sign-LSH plane mask SATURATED for $dir — " +
@@ -778,11 +779,9 @@ object Similarity {
     * distributed. Used by AnnRecallSpec's convergence assertion. */
   def lloydConvergence(spark: SparkSession, dir: String, iters: Int): Seq[(Int, Long)] = {
     val e = withNorm(spark, dir)
-    var assigned = graft.Materializer.materialize(
-      graft.Materializer.tagFor("lloyd0", dir), ivfAssign(spark, dir))
+    var assigned = graft.Materializer.materialize(ivfAssign(spark, dir))
     (1 to iters).map { k =>
       val next = graft.Materializer.materialize(
-        graft.Materializer.tagFor(s"lloyd$k", dir),
         rankCells(e, refinedCentroids(assigned), 1))
       val changed = next.select(col("vec_id"), col("cell").as("new_cell"))
         .join(assigned.select(col("vec_id"), col("cell").as("old_cell")), "vec_id")
@@ -861,8 +860,7 @@ object Similarity {
     * and tie-breaks are all deterministic, so the oracle verifies the
     * exact keep/prune decision per vector. */
   def semanticDedup(spark: SparkSession, dir: String): DataFrame = {
-    val a = graft.Materializer.materialize(
-      graft.Materializer.tagFor("semassign", dir), ivfAssign(spark, dir))
+    val a = graft.Materializer.materialize(ivfAssign(spark, dir))
     val b = a.select(col("cell").as("b_cell"), col("vec_id").as("b_id"),
       col("embedding").as("b_e"), col("nrm").as("b_n"))
     val pruned = a.join(b,
@@ -1295,7 +1293,7 @@ object Similarity {
       .select(col("vec_id"),
         graft.functions.Sq8Decode.sq8RoundTrip(col("embedding"), mins, maxs).as("dq"))
       .select(col("vec_id"), col("dq"), normSq(col("dq")).as("nrm"))
-    val qz = Materializer.materialize(Materializer.tagFor("sq8dec", dir), decoded)
+    val qz = Materializer.materialize(decoded)
     if (queryBatchBounded(spark, dir)) {
       val qb = collectQueryBatch(qz.filter(col("vec_id") % QUERY_MOD === 0), "dq")
       scoreAllTail(kernelParallel(qz), "dq", qb, TOPK, "qcos")
@@ -1465,7 +1463,7 @@ object Similarity {
     * driver-side order is deterministic (the argmin is order-free,
     * this just keeps plans reproducible). */
   private def pqSetup(spark: SparkSession, dir: String): (DataFrame, Seq[Long], Seq[Seq[Float]]) = {
-    val d = Materializer.materialize(Materializer.tagFor("pqnorm", dir),
+    val d = Materializer.materialize(
       kernelParallel(embeddings(spark, dir))
         .select(col("vec_id"), col("embedding"),
           sqrt(normSq(col("embedding"))).as("len"))
@@ -1528,7 +1526,7 @@ object Similarity {
     // (whose struct-min round-5 form fell all the way back to a
     // single-core SortAggregate over 20M rows).
     val (d, centIds, centVecs) = pqSetup(spark, dir)
-    val codes = Materializer.materialize(Materializer.tagFor("pqcodes", dir),
+    val codes = Materializer.materialize(
       pqPacked(spark, dir, d, centIds, centVecs)
         .select(col("vec_id"), col("m"), (col("packed") % PQ_PACK).as("code")))
     // Query-side ADC table via the [[graft.functions.PqDistsExpr]]
@@ -1540,7 +1538,7 @@ object Similarity {
     // pre-computed rows
     val K = centIds.length
     val centIdLit = typedlit(centIds)
-    val qdist = Materializer.materialize(Materializer.tagFor("pqqdist", dir),
+    val qdist = Materializer.materialize(
       d.filter(col("vec_id") % QUERY_MOD === 0)
         .repartition(nPart, col("vec_id"))
         .select(col("vec_id").as("query_id"),
@@ -1882,10 +1880,10 @@ object Similarity {
           .select(col("query_id"), col("vec_id").as("neighbor_id"),
             cosine(col("qe"), col("qn"), col("embedding"), col("nrm")).as("cosine")),
         MMR_POOL)
-    val cand = Materializer.materialize(Materializer.tagFor("mmrcand", dir),
+    val cand = Materializer.materialize(
       pool0.select(col("query_id"), col("neighbor_id").as("cid"),
         floor(col("cosine") * 1000000.0 + lit(0.5)).cast("long").as("rel_mu")))
-    val sims = Materializer.materialize(Materializer.tagFor("mmrsims", dir),
+    val sims = Materializer.materialize(
       cand.select(col("query_id"), col("cid").as("c1"))
         .join(cand.select(col("query_id"), col("cid").as("c2")), "query_id")
         .filter(col("c1") =!= col("c2"))
@@ -1913,8 +1911,7 @@ object Similarity {
         .groupBy(col("query_id")).agg(min(col("s")).as("b"))
         .select(col("query_id"), col("b.cid").as("cid"),
           lit(r).as("rank"), (-col("b.ns")).as("score_num"))
-      selected = Materializer.materialize(Materializer.tagFor(s"mmrsel$r", dir),
-        selected.unionAll(pick))
+      selected = Materializer.materialize(selected.unionAll(pick))
     }
     selected
       .select(col("query_id"), col("rank"), col("cid").as("cand_id"),

@@ -361,7 +361,7 @@ object TextOps {
 
   def winnowNearDup(spark: SparkSession, dir: String): DataFrame =
     NearDup.cappedJaccardPairs(winnowPostings(spark, dir), "fp", WDF_CAP,
-      WJACCARD_T, "winnow_jaccard", Materializer.tagFor("winnowcap", dir))
+      WJACCARD_T, "winnow_jaccard")
 
   val winnowNearDupSql: String =
     s"""$sqlWinnowPostings,

@@ -203,8 +203,7 @@ object TpchDecision {
     // probe; Spark has no common-subplan reuse, so without an explicit
     // materialization the fact would be scanned twice (Materializer —
     // the project's standard shared-subtree pattern)
-    val li = graft.Materializer.materialize(
-      graft.Materializer.tagFor("q17slice", dir), q17SliceBuilder(spark, dir))
+    val li = graft.Materializer.materialize(q17SliceBuilder(spark, dir))
     val perPart = li.groupBy(col("l_partkey").as("pk"))
       .agg(davg(col("l_quantity")).as("avg_qty"))
     li.join(perPart, col("l_partkey") === col("pk") &&
@@ -266,8 +265,7 @@ object TpchDecision {
     // the rollup feeds BOTH the per-part min and the join-back probe —
     // materialized once (catalog×suppliers-sized) so the fact scans
     // exactly once
-    val supply = graft.Materializer.materialize(
-      graft.Materializer.tagFor("q2supply", dir), q2SupplyBuilder(spark, dir))
+    val supply = graft.Materializer.materialize(q2SupplyBuilder(spark, dir))
       .join(broadcast(eu), col("psk") === col("sk"))
     val best = supply.groupBy(col("pk").as("bpk"))
       .agg(min(col("cost")).as("min_cost"))
@@ -367,8 +365,7 @@ object TpchDecision {
     // materialized; the grand total RE-AGGREGATES those exact partials
     // (decimal sums are associative — bit-identical to summing the lines
     // directly) instead of scanning the fact a second time
-    val perPart = graft.Materializer.materialize(
-      graft.Materializer.tagFor("q11pp", dir), q11PerPartBuilder(spark, dir))
+    val perPart = graft.Materializer.materialize(q11PerPartBuilder(spark, dir))
     val total = perPart.agg(sum(col("value_dec")).cast(DoubleType).as("total"))
     perPart
       .select(col("l_partkey"), col("value_dec").cast(DoubleType).as("value"))
@@ -453,8 +450,7 @@ object TpchDecision {
     // ONE fact scan: the (part, supplier) rollup keeps DECIMAL sums and
     // is materialized; the per-part total RE-AGGREGATES those exact
     // partials (associative) rather than scanning the fact again
-    val perSup = graft.Materializer.materialize(
-      graft.Materializer.tagFor("q20ps", dir), q20PerSupBuilder(spark, dir))
+    val perSup = graft.Materializer.materialize(q20PerSupBuilder(spark, dir))
     val perPart = perSup.groupBy(col("l_partkey").as("pk2"))
       .agg(sum(col("sqty_dec")).cast(DoubleType).as("tqty"))
     val dominating = perSup

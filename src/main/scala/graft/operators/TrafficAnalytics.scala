@@ -345,7 +345,6 @@ object TrafficAnalytics {
     // side, max-batch bound) and Spark re-computes an un-materialized
     // subtree per reference — 3 fact-table scans instead of 1
     val partials = Materializer.materialize(
-      Materializer.tagFor(s"mismatch-$keyName", dir),
       evKeyed(spark, dir, keyName, keyExpr)
         .groupBy(col("ws"), col(keyName), col("batch_id"))
         .agg(count(lit(1)).as("c")))
@@ -379,7 +378,6 @@ object TrafficAnalytics {
   // to the direct davg).
   def engagementMismatch(spark: SparkSession, dir: String): DataFrame = {
     val partials = Materializer.materialize(
-      Materializer.tagFor("mismatch-engagement", dir),
       evKeyed(spark, dir, "value", col("value"))
         .groupBy(col("ws"), col("batch_id"))
         .agg(

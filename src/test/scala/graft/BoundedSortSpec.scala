@@ -1,10 +1,14 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
 import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.operators.Dedup
 
 /** Results bounded by construction are sorted in one task: the final
   * aggregate's hash exchange on the bounded key feeds a `Coalesce(1)`,
@@ -17,15 +21,17 @@ class BoundedSortSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   /** Query, its bounded key, the Materializer copies its plan may read,
     * and the jobs one warm build and run launches. */
-  private val pins = Seq(
-    ("q_dedup_savings", Seq("source"), Set.empty[String], 3),
-    ("q_cross_source_dups", Seq("source_a", "source_b"), Set.empty[String], 4),
+  private val pins: Seq[(String, Seq[String], Seq[(SparkSession, String) => DataFrame], Int)] = Seq(
+    ("q_dedup_savings", Seq("source"), Nil, 3),
+    ("q_cross_source_dups", Seq("source_a", "source_b"), Nil, 4),
     // the shingle index is a shared input copy, not the result's
-    ("q_ngram_novelty", Seq("bucket"), Set("shingles"), 10))
+    ("q_ngram_novelty", Seq("bucket"), Seq(Dedup.shingleIndex), 10))
 
-  /** The executed plan of `name` and the jobs its build and run launch,
-    * after one untimed run so the input's schema is already known. */
-  private def warmRun(name: String): (SparkPlan, Int) = {
+  /** The executed plan of `name`, the jobs its build and run launch,
+    * after one untimed run so the input's schema is already known, and
+    * the root paths of the run's copies that `copies` build. */
+  private def warmRun(name: String, copies: Seq[(SparkSession, String) => DataFrame])
+      : (SparkPlan, Int, Set[String]) = {
     def run(): SparkPlan = {
       val qe = SparkEntry.queries(name)(spark, sf).queryExecution
       qe.toRdd.count()
@@ -34,20 +40,28 @@ class BoundedSortSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     try {
       run()
       Materializer.clear()
-      JobProbe.jobsOf(spark)(run())
+      val (plan, n) = JobProbe.jobsOf(spark)(run())
+      // a builder called again returns the copy the run wrote
+      val paths = for {
+        build <- copies
+        fs <- build(spark, sf).queryExecution.analyzed.collect {
+          case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs
+        }
+        p <- fs.location.rootPaths
+      } yield p.toString
+      (plan, n, paths.toSet)
     } finally Materializer.clear()
   }
 
-  for ((name, key, copies, jobs) <- pins)
+  for ((name, key, builders, jobs) <- pins)
     test(s"$name sorts its bounded result in one task, in $jobs jobs") {
-      val (plan, n) = warmRun(name)
+      val (plan, n, copies) = warmRun(name, builders)
       val shuffles = collect(plan) { case e: ShuffleExchangeExec => e }
       assert(!shuffles.exists(_.outputPartitioning.isInstanceOf[RangePartitioning]),
         s"range exchange in:\n$plan")
       val read = collect(plan) { case s: FileSourceScanExec => s }
         .flatMap(_.relation.location.rootPaths.map(_.toString))
         .filter(_.contains("graft-mat-"))
-        .map(p => p.substring(p.lastIndexOf('/') + 1).replaceAll("-[0-9a-f]{32}$", ""))
       assert(read.toSet.subsetOf(copies), s"reads Materializer copies $read")
       val one = collect(plan) { case c: CoalesceExec if c.numPartitions == 1 => c }
       assert(one.size == 1, s"expected one Coalesce(1) in:\n$plan")

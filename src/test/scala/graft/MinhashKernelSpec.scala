@@ -18,7 +18,7 @@ class MinhashKernelSpec extends AnyFunSuite {
   test("kernel-banded minhashLsh ≡ index-groupBy formulation (sf0.001, sf0.01)") {
     for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
       val kernel = Dedup.queries("q_minhash_lsh")(spark, dir)
-      val relational = Dedup.minhashLshRelational(spark, dir)
+      val relational = MinhashLshReference.minhashLsh(spark, dir)
       assert(kernel.exceptAll(relational).isEmpty &&
         relational.exceptAll(kernel).isEmpty,
         s"kernel minhash != relational at $dir")

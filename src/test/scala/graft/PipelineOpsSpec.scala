@@ -245,19 +245,62 @@ class PipelineOpsSpec extends AnyFunSuite {
     } finally Materializer.clear()
   }
 
-  test("tagFor is stable for unchanged inputs and invalidates on in-place rewrite") {
+  test("materialize reuses a copy until its input's files change") {
     // the staleness mechanism: a long-lived session that rewrites its
-    // input dir must get a NEW tag (fresh materialization), never a
+    // input dir must get a fresh copy holding the new rows, never a
     // silent reuse of the copy built from the old data — Bench/Verify
     // clear() between queries, but an interactive session has no referee
-    val dir = java.nio.file.Files.createTempDirectory("graft-tagfor").toString
-    Seq(1L).toDF("x").write.mode("overwrite").parquet(s"$dir/t.parquet")
-    val t1 = Materializer.tagFor("probe", dir)
-    assert(t1 == Materializer.tagFor("probe", dir),
-      "tag not stable across calls on unchanged inputs")
-    Seq(1L, 2L).toDF("x").write.mode("overwrite").parquet(s"$dir/t.parquet")
-    val t2 = Materializer.tagFor("probe", dir)
-    assert(t1 != t2, "tag unchanged after the input dir was rewritten in place")
+    import java.nio.file.{Files, Path, StandardCopyOption}
+    import java.nio.file.attribute.FileTime
+    import java.util.concurrent.TimeUnit.NANOSECONDS
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("graft-matstale")
+    val table = dir.resolve("t.parquet")
+    def write(xs: Long*): Unit =
+      xs.toDF("x").coalesce(1).write.mode("overwrite").parquet(table.toString)
+    def partFiles(d: Path): Seq[Path] = {
+      val s = Files.list(d)
+      try s.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toList
+      finally s.close()
+    }
+    def copy(): org.apache.spark.sql.DataFrame =
+      Materializer.materialize(Tables.table(spark, dir.toString, "t").filter(col("x") > 0))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[Long] = df.as[Long].collect().toSeq.sorted
+    def copyDir(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.inputFiles.map(f => new org.apache.hadoop.fs.Path(f).getParent.toString).toSet
+    Materializer.clear()
+    try {
+      write(1L)
+      val c1 = copy()
+      assert(copyDir(copy()) == copyDir(c1), "unchanged inputs must reuse the copy")
+      // rewritten in place: new part files
+      write(1L, 2L)
+      val c2 = copy()
+      assert(rows(c2) == Seq(1L, 2L) && copyDir(c2) != copyDir(c1))
+      // same path and nanosecond mtime, other bytes: only the size differs
+      val f = partFiles(table).head
+      val (mtime, size) = (Files.getLastModifiedTime(f), Files.size(f))
+      val other = Files.createTempDirectory("graft-matstale-b").resolve("t.parquet")
+      Seq(1L, 2L, 5L).toDF("x").coalesce(1).write.parquet(other.toString)
+      val src = partFiles(other).head
+      def crc(p: Path): Path = p.resolveSibling(s".${p.getFileName}.crc")
+      Files.copy(src, f, StandardCopyOption.REPLACE_EXISTING)
+      // the local filesystem verifies the checksum sidecar on read
+      Files.copy(crc(src), crc(f), StandardCopyOption.REPLACE_EXISTING)
+      Files.setLastModifiedTime(f, mtime)
+      assert(Files.getLastModifiedTime(f) == mtime && Files.size(f) != size)
+      val c3 = copy()
+      assert(rows(c3) == Seq(1L, 2L, 5L) && copyDir(c3) != copyDir(c2))
+      // one nanosecond later, same bytes
+      val ns = Files.getLastModifiedTime(f).to(NANOSECONDS)
+      Files.setLastModifiedTime(f, FileTime.from(ns + 1, NANOSECONDS))
+      val c4 = copy()
+      assert(rows(c4) == Seq(1L, 2L, 5L) && copyDir(c4) != copyDir(c3))
+      // an added file
+      Files.move(src, table.resolve("part-added.parquet"))
+      val c5 = copy()
+      assert(rows(c5) == Seq(1L, 1L, 2L, 2L, 5L, 5L) && copyDir(c5) != copyDir(c4))
+    } finally Materializer.clear()
   }
 
   test("simhash recall on >=0.5-jaccard pairs is high (60-bit, hamming<=6)") {

@@ -478,7 +478,7 @@ class PlanGuardSpec extends AnyFunSuite {
     assert(hint.isDefined && !hintBounded(hint.get.child),
       "guard no longer rejects a broadcast over a corpus-sized projection")
     try {
-      val mat = Materializer.materialize(Materializer.tagFor("guardselftest", sf),
+      val mat = Materializer.materialize(
         Tables.documents(spark, sf).select(col("doc_id")))
       val mhint = broadcast(mat).queryExecution.analyzed.collectFirst {
         case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h

@@ -58,12 +58,11 @@ class SchemaReuseSpec extends AnyFunSuite {
     assert(!df.schema("id").nullable && !df.schema("nested").nullable, "the shape has non-nullable columns")
     Materializer.clear()
     try {
-      val tag = s"schema-spec-${System.nanoTime()}"
       val (_, writeJobs) = jobsOf(df.write.parquet(Files.createTempDirectory("graft_schema_w")
         .resolve("out").toString))
-      val (mat, matJobs) = jobsOf(Materializer.materialize(tag, df))
+      val (mat, matJobs) = jobsOf(Materializer.materialize(df))
       assert(matJobs == writeJobs, s"materialize ran $matJobs jobs, its write alone $writeJobs")
-      val (again, reuseJobs) = jobsOf(Materializer.materialize(tag, df))
+      val (again, reuseJobs) = jobsOf(Materializer.materialize(df))
       assert(reuseJobs == 0, "a reused copy is read back without a job")
       val path = new org.apache.hadoop.fs.Path(mat.inputFiles.head).getParent.toString
       val inferred = spark.read.parquet(path).schema
