@@ -105,7 +105,9 @@ object Bench {
   private def f2(v: Double): String = // Locale.ROOT: never a comma decimal point
     String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
 
-  private def js(s: String): String = "\"" + s.flatMap {
+  /** A JSON string literal: quote, backslash and every control
+    * character escaped. */
+  private[graft] def js(s: String): String = "\"" + s.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"
     case c if c < ' ' => f"\\u${c.toInt}%04x"

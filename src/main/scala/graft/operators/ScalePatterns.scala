@@ -199,7 +199,7 @@ object ScalePatterns {
     * join on cents — one domain, no data-dependent divergence
     * (RangeJoinSpec's boundary fixture pins the adversarial cases). */
   private[graft] val RANGE_W_CENTS = 10000L
-  private val CELL_W_CENTS = 20000L
+  private[graft] val CELL_W_CENTS = 20000L
 
   /** Coarse prefix-sum bucket: 10⁴ cent cells per bucket ⇒ the fixed
     * acctbal domain ([-999.99, 9999.99] ± RANGE_W) yields ~130 buckets —
@@ -213,8 +213,9 @@ object ScalePatterns {
     * distributed PREFIX SUM over the balance domain instead of
     * materializing pairs.
     *
-    * Why not the interval-bucketing pair join ([[rangeJoinPairs]], kept
-    * for when the pairs themselves are the output): with a FIXED value
+    * Why not the interval-bucketing pair join (RangeJoinSpec keeps it
+    * as its equality reference; it is the form to reach for when the
+    * pairs themselves are the output): with a FIXED value
     * domain, per-cell occupancy grows linearly with the corpus on both
     * sides, so the matched-pair volume is quadratic in rows — the
     * round-11 sf10 probe measured it at slope 89.5 (1211 s), and no
@@ -240,7 +241,7 @@ object ScalePatterns {
     * Count differences are exact longs; balance differences are exact
     * DECIMAL(28,2) partials, cast to double once — bit-identical to
     * dsum over the materialized pairs, which RangeJoinSpec pins by
-    * equating this form with [[rangeJoinPairs]] row-for-row. Cost at
+    * equating this form with the pair join row-for-row. Cost at
     * any corpus size: one scan + one domain-bounded shuffle + constant
     * domain work — the sf10 slope drops from 89.5 to scan-linear. */
   def rangeJoinBucketed(spark: SparkSession, dir: String): DataFrame = {
@@ -308,47 +309,6 @@ object ScalePatterns {
         (col("hi_cnt") - col("lo_cnt")).as("n_matches"),
         (col("hi_bal") - col("lo_bal")).cast(DoubleType).as("matched_bal"))
       .filter(col("n_matches") > 0)
-      .orderBy("s_suppkey")
-  }
-
-  /** The general interval-bucketing PAIR join — the form to reach for
-    * when the matched pairs themselves are the output (the aggregate
-    * readout above sidesteps them):
-    *
-    *  - each point lands in exactly one fixed-width cell
-    *    (floor(x / CELL_W));
-    *  - each interval is replicated to the ≤2 cells it overlaps;
-    *  - the join is then a plain EQUI-join on cell + an exact
-    *    containment post-filter.
-    *
-    * A point's cell is unique, so no pair is produced twice — no
-    * distinct needed. This turns the quadratic no-key range join into a
-    * shuffled hash join with bounded fan-out (the classic interval-
-    * bucketing pattern); Spark's own alternative is a
-    * BroadcastNestedLoopJoin, which PlanGuardSpec forbids for unbounded
-    * sides. At 100 TB the cell id is also the natural storage partition
-    * key for repeated range probes. Note the OUTPUT is inherently
-    * quadratic when the value domain is fixed (per-cell occupancy grows
-    * with rows on both sides) — that is the result's size, not plan
-    * waste. */
-  private[graft] def rangeJoinPairs(spark: SparkSession, dir: String): DataFrame = {
-    val cust = customer(spark, dir).select(
-        col("c_custkey"), col("c_acctbal"),
-        floor(col("c_acctbal") * 100.0 + lit(0.5)).cast("long").as("c_cents"))
-      .withColumn("cell", floor(col("c_cents").cast(DoubleType) / CELL_W_CENTS).cast("long"))
-    val supp = supplier(spark, dir).select(
-        col("s_suppkey"),
-        floor(col("s_acctbal") * 100.0 + lit(0.5)).cast("long").as("s_cents"))
-      .select(col("s_suppkey"),
-        (col("s_cents") - RANGE_W_CENTS).as("lo"),
-        (col("s_cents") + RANGE_W_CENTS).as("hi"))
-      .withColumn("cell", explode(sequence(
-        floor(col("lo").cast(DoubleType) / CELL_W_CENTS).cast("long"),
-        floor(col("hi").cast(DoubleType) / CELL_W_CENTS).cast("long"))))
-    cust.join(supp, Seq("cell"))
-      .filter(col("c_cents") >= col("lo") && col("c_cents") <= col("hi"))
-      .groupBy(col("s_suppkey"))
-      .agg(count(lit(1)).as("n_matches"), dsum(col("c_acctbal")).as("matched_bal"))
       .orderBy("s_suppkey")
   }
 

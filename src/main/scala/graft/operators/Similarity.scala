@@ -34,7 +34,7 @@ import graft.functions.VectorOps._
 object Similarity {
 
   private val DIM = 64
-  private val QUERY_MOD = 50 // vec_id % 50 == 0 → the query subset
+  private[graft] val QUERY_MOD = 50 // vec_id % 50 == 0 → the query subset
   private val TOPK = 5
   private val NEARDUP_T = 0.4
 
@@ -82,7 +82,7 @@ object Similarity {
     planes(j).map(v => s"$v.0").mkString("[", ",", "]")
 
   /** vec_id, embedding, nrm (squared L2 norm). */
-  private def withNorm(spark: SparkSession, dir: String): DataFrame =
+  private[graft] def withNorm(spark: SparkSession, dir: String): DataFrame =
     embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"), normSq(col("embedding")).as("nrm"))
 
@@ -104,7 +104,7 @@ object Similarity {
     * reduction in this file is partition-order-proof (integer
     * micro-unit sums, struct-argmax, count/min/max, distinct), so
     * results are bit-unchanged — the registry stays hash-verified. */
-  private def kernelParallel(df: DataFrame): DataFrame = {
+  private[graft] def kernelParallel(df: DataFrame): DataFrame = {
     val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
     df.repartition(n, col("vec_id"))
   }
@@ -112,7 +112,7 @@ object Similarity {
   private val sqlWithNorm: String =
     s"SELECT vec_id, embedding, ${sqlDot("embedding", "embedding")} AS nrm FROM embeddings"
 
-  private def cosine(qe: Column, qn: Column, ne: Column, nn: Column): Column =
+  private[graft] def cosine(qe: Column, qn: Column, ne: Column, nn: Column): Column =
     dotF(qe, ne) / (sqrt(qn) * sqrt(nn))
 
   private def sqlCosine(qe: String, qn: String, ne: String, nn: String): String =
@@ -487,7 +487,7 @@ object Similarity {
   private val KMOD_BASE_N = 2000L
   private val MAX_KSTEP = 16
   private val CENT_RESIDUE = 7
-  private val NPROBE = 3
+  private[graft] val NPROBE = 3
 
   /** kmod = KMOD·2^j, j = min{k ≤ 16 : n ≤ KMOD_BASE_N·4^k} — integer
     * comparisons only, so Spark and DuckDB agree at every n. */
@@ -513,7 +513,7 @@ object Similarity {
     * instead of the full corpus. All ranking is deterministic: cosine
     * desc, centroid/neighbor id asc tiebreak, so the DuckDB oracle
     * verifies ids AND scores. */
-  private def ivfCentroids(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def ivfCentroids(spark: SparkSession, dir: String): DataFrame = {
     val e = withNorm(spark, dir)
     val m = e.agg(count(lit(1)).as("n_vec"))
       .select(kmodCase(col("n_vec")).as("kmod"))
@@ -531,7 +531,7 @@ object Similarity {
     * hold; the [[pqSetup]] codebook precedent) and the per-vector
     * ranking runs as ONE codegen'd loop — [[graft.functions.CellRank]]
     * — inside the scan projection. The relational fan-out it replaces
-    * ([[rankCellsRelational]], kept as the spec's equality twin)
+    * (kept in CellRankSpec as its equality reference)
     * materialized n·K scored rows through a broadcast NLJ plus an
     * argmax aggregate exchange of the corpus; at sf100 (2M×625, 32
     * cores) that row machinery measured 369.50 s for q_ann_ivf where
@@ -558,50 +558,12 @@ object Similarity {
           explode(ranked).as("cell"))
   }
 
-  /** The pre-kernel relational ranking — broadcast NLJ fan-out +
-    * struct-argmax (maxRank=1) / rank window (else). Kept unregistered
-    * as CellRankSpec's equality reference; the argmax-vs-window split
-    * and its measured history live in the round-9..12 scaladoc trail:
-    * the window form shuffles all |src|·K ranked rows (the sf10
-    * 925.97 s q_ann_ivf), the struct max partial-aggregates map-side,
-    * and the kernel form above removes the fan-out rows entirely. */
-  private[graft] def rankCellsRelational(src: DataFrame, cents: DataFrame,
-                                         maxRank: Int): DataFrame = {
-    val scored = kernelParallel(src).crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("embedding"), col("nrm"), col("cent_id"),
-        cosine(col("embedding"), col("nrm"), col("ce"), col("cn")).as("cos_c"))
-    if (maxRank == 1)
-      scored
-        .groupBy(col("vec_id"))
-        .agg(first(col("embedding")).as("embedding"), first(col("nrm")).as("nrm"),
-          max(struct(col("cos_c"), (-col("cent_id")).as("neg_cent"))).as("m"))
-        .select(col("vec_id"), col("embedding"), col("nrm"),
-          (-col("m.neg_cent")).as("cell"))
-    else {
-      val wVec = Window.partitionBy(col("vec_id"))
-        .orderBy(col("cos_c").desc, col("cent_id").asc)
-      scored
-        .withColumn("rk", row_number().over(wVec))
-        .filter(col("rk") <= maxRank)
-        .select(col("vec_id"), col("embedding"), col("nrm"), col("cent_id").as("cell"))
-    }
-  }
-
   /** PUBLIC IVF assignment: (vec_id, embedding, nrm, cell) — the
     * write-time pass whose `cell` is the storage partition key at scale
     * (see `AnnStorageSpec` for the partitioned-write + pruned-probe
     * proof). */
   def ivfAssign(spark: SparkSession, dir: String): DataFrame =
     rankCells(withNorm(spark, dir), ivfCentroids(spark, dir), 1)
-
-  /** Relational-form twins for CellRankSpec's kernel-equality pins. */
-  private[graft] def ivfAssignRelational(spark: SparkSession, dir: String): DataFrame =
-    rankCellsRelational(withNorm(spark, dir), ivfCentroids(spark, dir), 1)
-  private[graft] def ivfProbeCellsRelational(spark: SparkSession, dir: String): DataFrame =
-    rankCellsRelational(withNorm(spark, dir).filter(col("vec_id") % QUERY_MOD === 0),
-        ivfCentroids(spark, dir), NPROBE)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qn"), col("cell"))
 
   /** Probe-side cell ranking for one query subset: (query_id, qe, qn,
     * cell) for the `nprobe` nearest cells of each query. */

@@ -33,12 +33,6 @@ object TextOps {
     ("fr", 2, Seq("le", "la", "et", "les", "un", "est")),
     ("zh", 1, Seq("的", "是", "在", "了", "和", "有")))
 
-  /** HOF form of the stop score — kept as the executable spec / oracle
-    * mirror; hot paths use the codegen'd `stopCountFast` (identical
-    * values, asserted in PipelineOpsSpec). */
-  private[graft] def stopScore(toks: Column, words: Seq[String]): Column =
-    size(filter(toks, t => array_contains(array(words.map(lit): _*), t)))
-
   private[graft] def stopWordsAll: Seq[String] = langs.flatMap(_._3).distinct
 
   private def sqlStopScore(toks: String, words: Seq[String]): String =
@@ -283,7 +277,7 @@ object TextOps {
   // index-based near-dup at scale: the posting list (fp → docs) plays
   // the same role as Dedup's inverted index but is w× smaller. All
   // array work is per-row scan-local; rows out = distinct fingerprints.
-  private val WINNOW_W = 8
+  private[graft] val WINNOW_W = 8
 
   /** The distinct (doc_id, fp) winnow posting list — shared by the
     * fingerprint dump and the near-dup candidate join. SCAN-LOCAL since
@@ -302,25 +296,6 @@ object TextOps {
       .repartition(n, col("doc_id"))
       .select(col("doc_id"), explode(graft.functions.Winnow.winnowFps(
         shingleHashesFast(col("text")), WINNOW_W)).as("fp"))
-  }
-
-  /** The superseded relational formulation — retained verbatim as
-    * WinnowKernelSpec's equality reference (explode once, sliding
-    * window-frame min, relational distinct). */
-  private[graft] def winnowPostingsRelational(spark: SparkSession, dir: String): DataFrame = {
-    val n = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val exploded = documents(spark, dir)
-      .repartition(n, col("doc_id"))
-      .select(col("doc_id"), posexplode(shingleHashesFast(col("text"))).as(Seq("pos", "h")))
-    val wFrame = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      .rowsBetween(Window.currentRow, WINNOW_W - 1)
-    val byDoc = Window.partitionBy(col("doc_id"))
-    exploded
-      .withColumn("wmin", min(col("h")).over(wFrame))
-      .withColumn("nsh", count(lit(1)).over(byDoc))
-      .filter(col("pos") <= greatest(col("nsh") - WINNOW_W, lit(0)))
-      .select(col("doc_id"), col("wmin").as("fp"))
-      .distinct()
   }
 
   def winnowFingerprint(spark: SparkSession, dir: String): DataFrame =

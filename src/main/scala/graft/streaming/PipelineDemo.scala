@@ -27,29 +27,13 @@ object PipelineDemo {
 
     val stream = StreamingAnalytics.eventsFileStream(spark, s"$work/incoming")
 
+    val drain = Some(Trigger.AvailableNow())
     // correct stateful mode → parquet
-    val q1 = StreamingAnalytics
-      .engagementWindowed(stream.withWatermark("ts", "1 minute"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", s"$work/ckpt1")
-      .trigger(Trigger.AvailableNow())
-      .format("parquet").option("path", s"$work/stateful")
-      .start()
-    // reference-faithful foreachBatch mode → parquet
-    val q2 = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$work/ckpt2")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, epochId: Long) =>
-        if (!batch.isEmpty)
-          StreamingAnalytics.withPercentage(StreamingAnalytics.pageViewsCounts(batch))
-            .withColumn("epoch_id", lit(epochId))
-            .write.mode("append").parquet(s"$work/perbatch")
-        ()
-      }
-      .start()
+    StreamingAnalytics.runStateful(stream, s"$work/stateful", s"$work/ckpt1", drain)
+    // reference-faithful foreachBatch mode → the four reference tables
+    StreamingAnalytics.runMultiSink(stream, s"$work/multisink", s"$work/ckpt2", drain)
     // custom-state sessionization over the same stream (30-min gaps)
-    val q3 = Sessionize.sessions(stream.withWatermark("ts", "1 minute"))
+    Sessionize.sessions(stream.withWatermark("ts", "1 minute"))
       .writeStream.outputMode("append")
       .option("checkpointLocation", s"$work/ckpt3")
       .trigger(Trigger.AvailableNow())
@@ -59,7 +43,8 @@ object PipelineDemo {
 
     // differential comparison vs the batch path (comparision.sql shape)
     val batchCounts = StreamingAnalytics.pageViewsCounts(graft.Tables.events(spark, sfDir))
-    val streamedSums = spark.read.parquet(s"$work/perbatch")
+    val perBatch = spark.read.parquet(s"$work/multisink/page_views_distribution")
+    val streamedSums = perBatch
       .groupBy("window_start", "window_end", "page_views")
       .agg(sum("cnt").as("cnt"))
     // null-SAFE inequality: a bucket present on only one side of the
@@ -70,7 +55,7 @@ object PipelineDemo {
         Seq("window_start", "window_end", "page_views"), "full_outer")
       .filter(!(streamedSums("cnt") <=> batchCounts("cnt")))
     println(s"[pipeline] stateful windows: ${spark.read.parquet(s"$work/stateful").count()}")
-    println(s"[pipeline] per-batch rows:   ${spark.read.parquet(s"$work/perbatch").count()}")
+    println(s"[pipeline] per-batch rows:   ${perBatch.count()}")
     // AvailableNow drains then stops: sessions still open at the final
     // watermark stay in (discarded) state, so this counts CLOSED sessions
     val closedSessions =

@@ -1,6 +1,8 @@
 package graft.streaming
 
-import scala.collection.mutable.ArrayBuffer
+import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
+
+import scala.collection.mutable.{ArrayBuffer, LinkedHashSet}
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
@@ -20,8 +22,9 @@ import org.apache.spark.sql.types._
   *    watermark + stateful `groupBy(window).agg` (append mode). Each
   *    window is emitted exactly once, when the watermark passes it;
   *    late rows inside the watermark are merged into window state.
-  *  - [[runForeachBatchStyle]] — the reference-faithful variant: window
-  *    aggregates recomputed per micro-batch and appended, so one
+  *  - [[runMultiSink]] — the reference-faithful variant: one
+  *    foreachBatch recomputes the window aggregates of each micro-batch
+  *    and appends them to the reference's four tables, so one
   *    event-time window can appear multiple times with partial counts
   *    (what comparision.sql's ±10 tolerance exists to measure).
   *
@@ -280,77 +283,35 @@ object StreamingAnalytics {
       .select(c("user_id"), col("click_ts"), col("purchase_ts"), col("value"))
   }
 
-  /** Streaming heavy hitters with BOUNDED state: each micro-batch
-    * aggregates its own CountMinSketch (fixed D×W counter array — the
-    * distributed agg runs on the cluster, only the 8 KiB sketch reaches
-    * the driver), which merges into a running sketch by element-wise
+  // ------------------------------------------------------ accumulations
+
+  /** Streaming heavy hitters with bounded state: each micro-batch
+    * aggregates its own CountMinSketch (a fixed D×W counter array; the
+    * distributed agg runs on the cluster and only the 8 KiB sketch
+    * reaches the Spark driver), merged into the running sketch by element-wise
     * addition. CMS merge is exact-associative, so the streamed sketch is
-    * BIT-IDENTICAL to the batch sketch over the same rows regardless of
-    * batch boundaries — the property StreamingSpec asserts. This is the
-    * unbounded-cardinality face of streaming top-k: per-key state grows
-    * with distinct keys, the sketch never does.
-    *
-    * Returns the started query and an accessor for the running sketch
-    * (stable once the query has processed all available data). */
+    * bit-identical to the batch sketch over the same rows under any
+    * batch boundaries, which StreamingSpec asserts. Per-key state grows
+    * with distinct keys; the sketch never does. */
   def runCmsAccumulation(ev: DataFrame, key: String,
                          checkpointDir: String): (StreamingQuery, () => Array[Long]) = {
-    val acc = new java.util.concurrent.atomic.AtomicReference(
-      new Array[Long](graft.functions.CountMinSketchAgg.D *
-        graft.functions.CountMinSketchAgg.W))
-    // CMS merge is ADDITIVE, so an at-least-once foreachBatch replay
-    // (same batchId after a failed checkpoint commit) would double-count
-    // the batch — skip already-applied ids, same posture as
-    // [[runTopKAccumulation]] (ADVICE r13; KMV's set-union merge is the
-    // one accumulation here that is replay-idempotent by construction).
-    val lastMergedBatch = new java.util.concurrent.atomic.AtomicLong(-1L)
-    val q = ev.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId <= lastMergedBatch.get()) ()
-        else {
-          val sk = batch.agg(graft.functions.SketchAgg.cms(col(key)).as("s"))
-            .head().getSeq[Long](0).toArray
-          acc.updateAndGet { prev =>
-            val out = new Array[Long](prev.length)
-            var i = 0
-            while (i < out.length) { out(i) = prev(i) + sk(i); i += 1 }
-            out
-          }
-          lastMergedBatch.set(batchId)
-        }
-        ()
-      }
-      .start()
-    (q, () => acc.get())
+    val cells = graft.functions.CountMinSketchAgg.D * graft.functions.CountMinSketchAgg.W
+    accumulate(ev, checkpointDir, new Array[Long](cells), "CMS", maxKeys = 1)(
+      _.agg(graft.functions.SketchAgg.cms(col(key)).as("s"))) { (prev, rows) =>
+      val sk = rows.head.getSeq[Long](0)
+      Array.tabulate(prev.length)(i => prev(i) + sk(i))
+    }
   }
 
-  /** Streaming KMV distinct sketch — bounded-state approx-distinct per
-    * key on a stream, the distinct-count sibling of
-    * [[runCmsAccumulation]]: each micro-batch contributes its k
-    * smallest engine-neutral user-hashes per key (a distributed
-    * rank-window aggregate; only ≤ k longs per key reach the driver),
-    * merged into the running sketch by union-then-keep-k-smallest —
-    * the KMV merge. Like the CMS merge it is exact-associative over
-    * SETS (k-min(A ∪ B) = k-min(k-min(A) ∪ k-min(B))), so the streamed
-    * sketch is BIT-IDENTICAL to the batch sketch over the same rows
-    * under any batch boundaries, and state never grows with
-    * cardinality. The estimate reads off the sketch exactly as
-    * `q_kmv_distinct` does: (k−1)·M/h₍k₎ once the sketch is full.
-    *
-    * Replay safety: unlike the CMS/top-k accumulations, the KMV merge
-    * (union → distinct → keep k smallest) is IDEMPOTENT — re-merging a
-    * replayed micro-batch's sketches changes nothing — so it needs no
-    * batch-id skip under foreachBatch's at-least-once semantics.
-    *
-    * The driver-side merge is bounded BOTH ways: ≤ k longs per key
-    * (the sketch) AND ≤ `maxKeys` distinct keys per batch — an
-    * unbounded KEY cardinality would otherwise grow the collect and
-    * the accumulator without limit. The key bound is ENFORCED, not a
-    * truncation: a batch exceeding `maxKeys` keys fails the query
-    * loudly (no sketch is ever silently dropped). Callers tracking
-    * genuinely high-cardinality keys should use the stateful
-    * `transformWithState` path instead of this driver-merged demo. */
+  /** Streaming KMV distinct sketch, the distinct-count sibling of
+    * [[runCmsAccumulation]]: each micro-batch contributes its k smallest
+    * engine-neutral user-hashes per key (a distributed rank-window
+    * aggregate), merged into the running sketch by union, then keep the
+    * k smallest. That merge is exact-associative over sets
+    * (k-min(A ∪ B) = k-min(k-min(A) ∪ k-min(B))), so the streamed sketch
+    * is bit-identical to the batch sketch under any batch boundaries.
+    * The estimate reads off the sketch as `q_kmv_distinct` does:
+    * (k−1)·M/h₍k₎ once the sketch is full. */
   def runKmvAccumulation(ev: DataFrame, key: String, idCol: String,
                          checkpointDir: String,
                          k: Int = graft.operators.ScalePatterns.KMV_K,
@@ -358,147 +319,153 @@ object StreamingAnalytics {
       : (StreamingQuery, () => Map[String, Seq[Long]]) = {
     val P = graft.operators.ScalePatterns.KMV_P
     val C = graft.operators.ScalePatterns.KMV_C
-    val acc = new java.util.concurrent.atomic.AtomicReference(
-      Map.empty[String, Seq[Long]])
-    val q = ev.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val w = Window.partitionBy(col("k")).orderBy(col("h").asc)
-        val rows = batch
-          .select(col(key).cast("string").as("k"),
-            (pmod(col(idCol), lit(P)) * C % P).as("h"))
-          .distinct()
-          .withColumn("rk", row_number().over(w))
-          .filter(col("rk") <= k)
-          .groupBy(col("k"))
-          .agg(sort_array(collect_list(col("h"))).as("hs"))
-          .orderBy(col("k"))
-          .limit(maxKeys + 1)
-          .collect()
-          .map(r => r.getString(0) -> r.getSeq[Long](1))
-        require(rows.length <= maxKeys,
-          s"KMV accumulation saw > $maxKeys keys in one batch — " +
-            "use the stateful path for high-cardinality keys")
-        acc.updateAndGet { prev =>
-          rows.foldLeft(prev) { case (m, (kk, hs)) =>
-            val merged = (m.getOrElse(kk, Seq.empty) ++ hs)
-              .distinct.sorted.take(k)
-            m.updated(kk, merged)
-          }
-        }
-        ()
+    accumulate(ev, checkpointDir, Map.empty[String, Seq[Long]], "KMV", maxKeys) { batch =>
+      batch
+        .select(col(key).cast("string").as("k"),
+          (pmod(col(idCol), lit(P)) * C % P).as("h"))
+        .distinct()
+        .withColumn("rk", row_number().over(Window.partitionBy(col("k")).orderBy(col("h").asc)))
+        .filter(col("rk") <= k)
+        .groupBy(col("k"))
+        .agg(sort_array(collect_list(col("h"))).as("hs"))
+        .orderBy(col("k"))
+    } { (prev, rows) =>
+      rows.foldLeft(prev) { (m, r) =>
+        val kk = r.getString(0)
+        m.updated(kk, (m.getOrElse(kk, Seq.empty) ++ r.getSeq[Long](1)).distinct.sorted.take(k))
       }
-      .start()
-    (q, () => acc.get())
+    }
   }
 
-  /** Streaming per-group top-k — the ranking face of the bounded-state
-    * accumulation family ([[runCmsAccumulation]] /
-    * [[runKmvAccumulation]]): each micro-batch folds its rows into
-    * ≤k-entry selections via the mergeable
-    * [[graft.functions.TopKByScoreAgg]] kernel (the distributed agg
-    * runs on the cluster; only ≤k (id, score) entries per group reach
-    * the driver), merged into the running selection by the SAME
-    * comparator the batch kernel uses. A multiset's top-k under a
-    * strict total order ((score DESC, id ASC); NaN first, like both
-    * engines' sort) is unique, so the merge is exact-associative and
-    * the streamed selection is BIT-IDENTICAL to the batch top-k over
-    * the same rows under any batch boundaries — the mergeability claim
-    * the batch kernel's shuffle shape rests on, proven end-to-end in a
-    * micro-batch loop by StreamingSpec.
-    *
-    * Driver-side state is bounded both ways, like the KMV demo:
-    * ≤k entries per group, and ≤ `maxKeys` distinct groups per batch —
-    * ENFORCED loudly, never truncated. High-cardinality groups belong
-    * on the stateful `transformWithState` path. */
+  /** Streaming per-group top-k, the ranking member of the family: each
+    * micro-batch folds its rows into ≤k-entry selections with the
+    * mergeable [[graft.functions.TopKByScoreAgg]] kernel, merged into the
+    * running selection by [[mergeTopK]], which uses the batch kernel's
+    * comparator. A multiset's top-k under a strict total order ((score
+    * DESC, id ASC); NaN first, like both engines' sort) is unique, so the
+    * merge is exact-associative and the streamed selection is
+    * bit-identical to the batch top-k under any batch boundaries: the
+    * mergeability the batch kernel's shuffle shape rests on. */
   def runTopKAccumulation(ev: DataFrame, group: String, idCol: String,
                           scoreCol: String, k: Int, checkpointDir: String,
                           maxKeys: Int = 1000)
-      : (StreamingQuery, () => Map[String, Seq[(Long, Double)]]) = {
-    val acc = new java.util.concurrent.atomic.AtomicReference(
-      Map.empty[String, Seq[(Long, Double)]])
-    // foreachBatch is at-least-once: a micro-batch whose checkpoint
-    // commit failed is REPLAYED with the same batchId. Top-k merge is
-    // not idempotent — re-inserting the same (id, score) entries into a
-    // Buf adds duplicates that can evict legitimate distinct entries
-    // (ADVICE r13) — so already-applied batch ids are skipped. In-JVM
-    // tracking is the correct scope: if the JVM died, acc died with it.
-    val lastMergedBatch = new java.util.concurrent.atomic.AtomicLong(-1L)
+      : (StreamingQuery, () => Map[String, Seq[(Long, Double)]]) =
+    accumulate(ev, checkpointDir, Map.empty[String, Seq[(Long, Double)]], "top-k", maxKeys)(
+      _.groupBy(col(group).cast("string").as("g"))
+        .agg(graft.functions.TopK.topKByScore(
+          col(idCol).cast("long"), col(scoreCol).cast("double"), k).as("tk"))
+        .orderBy(col("g"))) { (prev, rows) =>
+      mergeTopK(k)(prev, rows.toSeq.map(r =>
+        r.getString(0) -> r.getSeq[Row](1).map(e => (e.getLong(0), e.getDouble(1)))))
+    }
+
+  /** Top-k's merge: each group's held entries and the batch's go through
+    * a fresh kernel buffer (the published map is never mutated), so the
+    * kept set is the one the batch kernel keeps. Inserting the same
+    * entries twice would keep duplicates that can evict distinct ones,
+    * which is why [[mergeBatch]] never merges a batch twice. */
+  private[graft] def mergeTopK(k: Int)(m: Map[String, Seq[(Long, Double)]],
+      rows: Seq[(String, Seq[(Long, Double)])]): Map[String, Seq[(Long, Double)]] =
+    rows.foldLeft(m) { case (acc, (g, entries)) =>
+      val buf = new graft.functions.TopKAgg.Buf(k)
+      (acc.getOrElse(g, Seq.empty) ++ entries).foreach { case (i, s) => buf.insert(s, i) }
+      acc.updated(g, (0 until buf.n).map(j => (buf.id(j), buf.score(j))))
+    }
+
+  /** Runs the accumulations above. Each micro-batch's `partial` is a
+    * small aggregate: one row (CMS), or one row per key ordered by the
+    * key, so its bounded collect plans as one top-N job. Its rows are
+    * collected and `merge` folds them into a running value held in this
+    * JVM. The returned accessor reads that value, stable once the query
+    * has processed all available data.
+    *
+    * The collected state is bounded both ways: by the sketch or
+    * selection per key, and by `maxKeys` keys per batch. The key bound
+    * is enforced, not a truncation: a batch with more keys fails the
+    * query, so no partial is ever dropped. High-cardinality keys belong
+    * on a stateful operator instead. */
+  private def accumulate[S](ev: DataFrame, checkpointDir: String, zero: S,
+      what: String, maxKeys: Int)(partial: DataFrame => DataFrame)(
+      merge: (S, Array[Row]) => S): (StreamingQuery, () => S) = {
+    val acc = new AtomicReference(zero)
+    val lastMerged = new AtomicLong(-1L)
     val q = ev.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId <= lastMergedBatch.get()) ()
-        else {
-        val rows = batch
-          .groupBy(col(group).cast("string").as("g"))
-          .agg(graft.functions.TopK.topKByScore(
-            col(idCol).cast("long"), col(scoreCol).cast("double"), k).as("tk"))
-          .orderBy(col("g"))
-          .limit(maxKeys + 1)
-          .collect()
-          .map(r => r.getString(0) ->
-            r.getSeq[org.apache.spark.sql.Row](1).map(e => (e.getLong(0), e.getDouble(1))))
-        require(rows.length <= maxKeys,
-          s"top-k accumulation saw > $maxKeys groups in one batch — " +
-            "use the stateful path for high-cardinality groups")
-        mergeTopKBatch(acc, lastMergedBatch, batchId, rows.toSeq, k)
-        }
-        ()
+        mergeBatch(acc, lastMerged, batchId) {
+          val rows = partial(batch).limit(maxKeys + 1).collect()
+          require(rows.length <= maxKeys, s"$what accumulation saw more than $maxKeys " +
+            "keys in one batch; use a stateful operator for high-cardinality keys")
+          rows
+        }(merge)
       }
       .start()
     (q, () => acc.get())
   }
 
-  /** The driver-side top-k merge step, factored out so StreamingSpec can
-    * pin its replay idempotence directly: a batchId ≤ the last merged
-    * one is an at-least-once REPLAY and must leave the accumulator
-    * untouched (merging the same entries twice through a Buf inserts
-    * duplicates that can evict legitimate distinct entries). */
-  private[graft] def mergeTopKBatch(
-      acc: java.util.concurrent.atomic.AtomicReference[Map[String, Seq[(Long, Double)]]],
-      lastMergedBatch: java.util.concurrent.atomic.AtomicLong,
-      batchId: Long, rows: Seq[(String, Seq[(Long, Double)])], k: Int): Unit = {
-    if (batchId <= lastMergedBatch.get()) return
-    acc.updateAndGet { prev =>
-      rows.foldLeft(prev) { case (m, (g, entries)) =>
-        // merge through a fresh kernel buffer (never mutate the
-        // published map): same comparator, same kept set
-        val buf = new graft.functions.TopKAgg.Buf(k)
-        m.getOrElse(g, Seq.empty).foreach { case (i, s) => buf.insert(s, i) }
-        entries.foreach { case (i, s) => buf.insert(s, i) }
-        m.updated(g, (0 until buf.n).map(j => (buf.id(j), buf.score(j))))
-      }
+  /** One micro-batch's step of [[accumulate]]. foreachBatch is
+    * at-least-once: a batch whose checkpoint commit failed is replayed
+    * with the same batchId, and an additive (CMS) or multiset (top-k)
+    * merge would count it twice. So a batchId at or below the last
+    * merged one is skipped before its partial runs, and a replay
+    * launches no job. KMV's merge is idempotent, so for it the skip
+    * changes no result. The partial is computed outside `updateAndGet`,
+    * which may retry its function. In-JVM tracking is the right scope:
+    * if the JVM dies, the running value dies with it. */
+  private[graft] def mergeBatch[S, P](acc: AtomicReference[S], lastMerged: AtomicLong,
+      batchId: Long)(partial: => P)(merge: (S, P) => S): Unit =
+    if (batchId > lastMerged.get()) {
+      val p = partial
+      acc.updateAndGet(merge(_, p))
+      lastMerged.set(batchId)
     }
-    lastMergedBatch.set(batchId)
-    ()
-  }
 
   // ------------------------------------------------------------ runners
 
   /** Correct stateful mode: watermark + windowed agg, append to parquet.
-    * Windows emit exactly once when the watermark closes them. */
-  def runStateful(ev: DataFrame, sinkDir: String, checkpointDir: String): StreamingQuery =
-    engagementWindowed(ev.withWatermark("ts", "1 minute"))
+    * Windows emit exactly once when the watermark closes them.
+    * `trigger` Some(AvailableNow) drains the source and terminates. */
+  def runStateful(ev: DataFrame, sinkDir: String, checkpointDir: String,
+      trigger: Option[Trigger] = None): StreamingQuery = {
+    val w = engagementWindowed(ev.withWatermark("ts", "1 minute"))
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .format("parquet")
       .option("path", sinkDir)
-      .start()
+    trigger.fold(w)(w.trigger).start()
+  }
 
   /** T5 (graceful shutdown / multi-query await): block until any query
     * fails or all finish; on interrupt stop every active query cleanly
     * (reference: stopGracefullyOnShutdown + awaitAnyTermination,
-    * spark_streaming_new.py:11,262-267). */
-  def awaitAllGracefully(spark: SparkSession): Unit =
+    * spark_streaming_new.py:11,262-267).
+    *
+    * Once any query has ended, `awaitAnyTermination` returns at once
+    * until `resetTerminated`, so every wait starts with a reset, or the
+    * loop would spin on a core until the last query ends. The reset also
+    * drops terminations from before the call: this waits for the queries
+    * active when it is called or started while it waits. A failure that
+    * ends one of them between a wait and the next reset is not lost: the
+    * queries seen active are checked for an exception after each reset. */
+  def awaitAllGracefully(spark: SparkSession): Unit = {
+    val seen = LinkedHashSet.empty[StreamingQuery]
     try {
-      while (spark.streams.active.nonEmpty) spark.streams.awaitAnyTermination()
+      var waiting = true
+      while (waiting) {
+        spark.streams.resetTerminated()
+        val active = spark.streams.active
+        seen ++= active
+        seen.foreach(_.exception.foreach(e => throw e))
+        waiting = active.nonEmpty
+        if (waiting) spark.streams.awaitAnyTermination()
+      }
     } catch {
       case _: InterruptedException =>
         spark.streams.active.foreach(_.stop())
     }
+  }
 
   /** K1/K2 multi-sink orchestration, reference-shaped: ONE foreachBatch
     * writes the reference's four tables per micro-batch
@@ -512,6 +479,9 @@ object StreamingAnalytics {
     * for the reference's four MySQL tables; swap the `.parquet(...)`
     * calls for `.format("jdbc").options(Connectors.jdbcSinkOptions(...))`
     * unchanged otherwise).
+    *
+    * An empty micro-batch writes nothing; the guard is `isEmpty`, not the
+    * reference's `count()` (SURVEY §4 anti-pattern).
     *
     * `trigger` Some(AvailableNow) lets tests/backfills drain the source
     * and terminate — recovery tests restart from the same checkpoint. */
@@ -544,21 +514,4 @@ object StreamingAnalytics {
       }
       .start()
   }
-
-  /** Reference-faithful mode: per-microbatch aggregates appended
-    * (partial windows possible — K1/K2 semantics). The empty-batch guard
-    * uses isEmpty, not count() (SURVEY §4 anti-pattern fix). */
-  def runForeachBatchStyle(ev: DataFrame, sinkDir: String, checkpointDir: String): StreamingQuery =
-    ev.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (!batch.isEmpty) {
-          withPercentage(pageViewsCounts(batch))
-            .withColumn("epoch_id", lit(epochId))
-            .write.mode("append").parquet(sinkDir)
-        }
-        ()
-      }
-      .start()
 }

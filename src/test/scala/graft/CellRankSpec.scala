@@ -1,8 +1,12 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Similarity
+import graft.operators.Similarity.{NPROBE, QUERY_MOD, cosine, ivfCentroids, kernelParallel, withNorm}
 
 /** Contract of the round-12 IVF ranking kernel
   * (functions/CellRank.scala): the codegen'd per-row top-k loop must
@@ -23,12 +27,47 @@ import graft.operators.Similarity
 class CellRankSpec extends AnyFunSuite {
   import SparkTestSession._
 
+  /** The pre-kernel relational ranking, this spec's equality reference:
+    * broadcast NLJ fan-out, then a struct argmax (maxRank=1) or a rank
+    * window (else). The window form shuffles all |src|·K ranked rows;
+    * the struct max partial-aggregates map-side. */
+  private def rankCellsRelational(src: DataFrame, cents: DataFrame,
+                                  maxRank: Int): DataFrame = {
+    val scored = kernelParallel(src).crossJoin(broadcast(cents))
+      .select(col("vec_id"), col("embedding"), col("nrm"), col("cent_id"),
+        cosine(col("embedding"), col("nrm"), col("ce"), col("cn")).as("cos_c"))
+    if (maxRank == 1)
+      scored
+        .groupBy(col("vec_id"))
+        .agg(first(col("embedding")).as("embedding"), first(col("nrm")).as("nrm"),
+          max(struct(col("cos_c"), (-col("cent_id")).as("neg_cent"))).as("m"))
+        .select(col("vec_id"), col("embedding"), col("nrm"),
+          (-col("m.neg_cent")).as("cell"))
+    else {
+      val wVec = Window.partitionBy(col("vec_id"))
+        .orderBy(col("cos_c").desc, col("cent_id").asc)
+      scored
+        .withColumn("rk", row_number().over(wVec))
+        .filter(col("rk") <= maxRank)
+        .select(col("vec_id"), col("embedding"), col("nrm"), col("cent_id").as("cell"))
+    }
+  }
+
+  private def ivfAssignRelational(spark: SparkSession, dir: String): DataFrame =
+    rankCellsRelational(withNorm(spark, dir), ivfCentroids(spark, dir), 1)
+
+  private def ivfProbeCellsRelational(spark: SparkSession, dir: String): DataFrame =
+    rankCellsRelational(withNorm(spark, dir).filter(col("vec_id") % QUERY_MOD === 0),
+        ivfCentroids(spark, dir), NPROBE)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
+        col("nrm").as("qn"), col("cell"))
+
   test("kernel assignment ≡ relational argmax (sf0.001, sf0.01, sf0.1)") {
     for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
         "/root/testdata/sf0.1")) {
       val kernel = Similarity.ivfAssign(spark, dir)
         .select("vec_id", "cell")
-      val relational = Similarity.ivfAssignRelational(spark, dir)
+      val relational = ivfAssignRelational(spark, dir)
         .select("vec_id", "cell")
       assert(kernel.exceptAll(relational).isEmpty, s"kernel ⊄ relational at $dir")
       assert(relational.exceptAll(kernel).isEmpty, s"relational ⊄ kernel at $dir")
@@ -40,7 +79,7 @@ class CellRankSpec extends AnyFunSuite {
     for (dir <- Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")) {
       val kernel = Similarity.ivfProbeCells(spark, dir)
         .select("query_id", "cell")
-      val relational = Similarity.ivfProbeCellsRelational(spark, dir)
+      val relational = ivfProbeCellsRelational(spark, dir)
         .select("query_id", "cell")
       assert(kernel.exceptAll(relational).isEmpty, s"kernel ⊄ relational at $dir")
       assert(relational.exceptAll(kernel).isEmpty, s"relational ⊄ kernel at $dir")

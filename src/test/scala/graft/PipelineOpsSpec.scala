@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -41,15 +42,18 @@ class PipelineOpsSpec extends AnyFunSuite {
   }
 
   test("native token/stop counts equal the HOF formulas on real data") {
+    // the HOF form of the stop score: tokens that are in `words`
+    def stopScore(toks: Column, words: Seq[String]): Column =
+      size(filter(toks, t => array_contains(array(words.map(lit): _*), t)))
     val stops = TextOps.stopWordsAll
     // a mixed-language probe set exercises the multi-byte (zh) tokens too
     val bad = Tables.documents(spark, sf).select(
       (TextHash.tokenCountFast(col("text")) =!=
         size(TextHash.tokens(col("text"))).cast("long")).as("c1"),
       (TextHash.stopCountFast(col("text"), stops) =!=
-        TextOps.stopScore(TextHash.tokens(col("text")), stops).cast("long")).as("c2"),
+        stopScore(TextHash.tokens(col("text")), stops).cast("long")).as("c2"),
       (TextHash.stopCountFast(col("text"), Seq("the", "的")) =!=
-        TextOps.stopScore(TextHash.tokens(col("text")), Seq("the", "的")).cast("long")).as("c3"))
+        stopScore(TextHash.tokens(col("text")), Seq("the", "的")).cast("long")).as("c3"))
       .filter(col("c1") || col("c2") || col("c3"))
     assert(bad.isEmpty)
     // edge cases: empty string, all-whitespace, stop word at both ends

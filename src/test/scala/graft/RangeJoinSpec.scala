@@ -1,8 +1,13 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.Tables.{customer, dsum, supplier}
 import graft.operators.ScalePatterns
+import graft.operators.ScalePatterns.{CELL_W_CENTS, RANGE_W_CENTS}
 
 /** Contract of the round-11 q_range_join prefix-sum rewrite: the
   * registered aggregate readout (per-supplier match count + matched
@@ -16,10 +21,43 @@ import graft.operators.ScalePatterns
 class RangeJoinSpec extends AnyFunSuite {
   import SparkTestSession._
 
+  /** The interval-bucketing pair join, this spec's equality reference
+    * and the form to reach for when the matched pairs are the output:
+    *
+    *  - each point lands in exactly one fixed-width cell
+    *    (floor(x / CELL_W));
+    *  - each interval is replicated to the ≤2 cells it overlaps;
+    *  - the join is then a plain equi-join on cell + an exact
+    *    containment post-filter.
+    *
+    * A point's cell is unique, so no pair is produced twice. The output
+    * is quadratic when the value domain is fixed (per-cell occupancy
+    * grows with rows on both sides): that is the result's size. */
+  private def rangeJoinPairs(spark: SparkSession, dir: String): DataFrame = {
+    val cust = customer(spark, dir).select(
+        col("c_custkey"), col("c_acctbal"),
+        floor(col("c_acctbal") * 100.0 + lit(0.5)).cast("long").as("c_cents"))
+      .withColumn("cell", floor(col("c_cents").cast(DoubleType) / CELL_W_CENTS).cast("long"))
+    val supp = supplier(spark, dir).select(
+        col("s_suppkey"),
+        floor(col("s_acctbal") * 100.0 + lit(0.5)).cast("long").as("s_cents"))
+      .select(col("s_suppkey"),
+        (col("s_cents") - RANGE_W_CENTS).as("lo"),
+        (col("s_cents") + RANGE_W_CENTS).as("hi"))
+      .withColumn("cell", explode(sequence(
+        floor(col("lo").cast(DoubleType) / CELL_W_CENTS).cast("long"),
+        floor(col("hi").cast(DoubleType) / CELL_W_CENTS).cast("long"))))
+    cust.join(supp, Seq("cell"))
+      .filter(col("c_cents") >= col("lo") && col("c_cents") <= col("hi"))
+      .groupBy(col("s_suppkey"))
+      .agg(count(lit(1)).as("n_matches"), dsum(col("c_acctbal")).as("matched_bal"))
+      .orderBy("s_suppkey")
+  }
+
   test("prefix-sum form ≡ pair-materializing form (sf0.001, sf0.01)") {
     for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
       val pfx = ScalePatterns.rangeJoinBucketed(spark, dir)
-      val pairs = ScalePatterns.rangeJoinPairs(spark, dir)
+      val pairs = rangeJoinPairs(spark, dir)
       assert(pfx.schema.map(f => (f.name, f.dataType)) ===
         pairs.schema.map(f => (f.name, f.dataType)), s"schema drift at $dir")
       assert(pfx.exceptAll(pairs).isEmpty, s"prefix-sum ⊄ pairs at $dir")
@@ -75,7 +113,7 @@ class RangeJoinSpec extends AnyFunSuite {
       3L -> (2L, 400.00 + 600.00))
     for ((form, df) <- Seq(
         "prefix-sum" -> ScalePatterns.rangeJoinBucketed(spark, dir),
-        "pairs" -> ScalePatterns.rangeJoinPairs(spark, dir))) {
+        "pairs" -> rangeJoinPairs(spark, dir))) {
       val got = df.collect()
         .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
       assert(got.keySet === expected.keySet, s"$form: supplier set drift")

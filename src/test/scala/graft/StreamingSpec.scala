@@ -20,7 +20,7 @@ case class Tp(event_id: Long, ts: Timestamp, time_on_page: Double)
 /** Stream-vs-batch differential suite (SURVEY.md §5.2): the same analytic
   * run through Structured Streaming must equal the batch computation —
   * exactly for the stateful mode, as a partial-sum identity for the
-  * reference-faithful foreachBatch mode. */
+  * reference-faithful multi-sink foreachBatch mode. */
 class StreamingSpec extends AnyFunSuite {
   import SparkTestSession._
   import spark.implicits._
@@ -51,27 +51,6 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("foreachBatch partial windows sum to the batch totals (comparision.sql identity)") {
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Ev](Encoders.product[Ev], spark.sqlContext)
-    val sink = Files.createTempDirectory("graft_fb_sink").toString
-    val ckpt = Files.createTempDirectory("graft_fb_ckpt").toString
-    val rows = mkEvents(600)
-    val q = StreamingAnalytics.runForeachBatchStyle(stream.toDF(), sink, ckpt)
-    try {
-      stream.addData(rows.take(300)); q.processAllAvailable()
-      stream.addData(rows.drop(300)); q.processAllAvailable()
-    } finally q.stop()
-    val appended = spark.read.parquet(sink)
-    // one window × page_views bucket may appear once per micro-batch with
-    // partial counts; their SUM must equal the batch count exactly
-    assert(appended.select(countDistinct(col("epoch_id"))).first().getLong(0) >= 2)
-    val summed = appended.groupBy("window_start", "window_end", "page_views")
-      .agg(sum("cnt").as("cnt"))
-    val batch = StreamingAnalytics.pageViewsCounts(rows.toDF())
-    assert(summed.exceptAll(batch).isEmpty && batch.exceptAll(summed).isEmpty)
-  }
-
   test("multi-sink foreachBatch writes all four reference outputs from one persisted batch") {
     implicit val sqlCtx = spark.sqlContext
     val stream = MemoryStream[Ev](Encoders.product[Ev], spark.sqlContext)
@@ -88,7 +67,11 @@ class StreamingSpec extends AnyFunSuite {
     assert(metrics.count() == 600)
     assert(metrics.filter(col("latency_sec") < 0).isEmpty)
     // distribution + categories: per-epoch partials sum to the batch truth
-    val dist = spark.read.parquet(s"$work/out/page_views_distribution")
+    // (comparision.sql identity); one window × page_views bucket may
+    // appear once per micro-batch with partial counts
+    val distRows = spark.read.parquet(s"$work/out/page_views_distribution")
+    assert(distRows.select(countDistinct(col("epoch_id"))).first().getLong(0) >= 2)
+    val dist = distRows
       .groupBy("window_start", "window_end", "page_views").agg(sum("cnt").as("cnt"))
     val distBatch = StreamingAnalytics.pageViewsCounts(rows.toDF())
     assert(dist.exceptAll(distBatch).isEmpty && distBatch.exceptAll(dist).isEmpty)
@@ -662,29 +645,82 @@ class StreamingSpec extends AnyFunSuite {
   test("top-k accumulation skips a replayed micro-batch (at-least-once idempotence)") {
     // foreachBatch replays a batch with the SAME batchId after a failed
     // checkpoint commit; re-merging its entries through a Buf would
-    // insert duplicates that can evict legitimate distinct entries
-    // (ADVICE r13). Drive the factored-out merge step directly.
+    // insert duplicates that can evict legitimate distinct entries.
+    // Drive the accumulations' shared merge step with the top-k merge;
+    // the CMS and KMV accumulations take the same step.
     val acc = new java.util.concurrent.atomic.AtomicReference(
       Map.empty[String, Seq[(Long, Double)]])
     val last = new java.util.concurrent.atomic.AtomicLong(-1L)
     val b0 = Seq("g" -> Seq((1L, 5.0), (2L, 4.0)))
     val b1 = Seq("g" -> Seq((3L, 3.0)))
-    streaming.StreamingAnalytics.mergeTopKBatch(acc, last, 0L, b0, 2)
+    def merge(batchId: Long, rows: Seq[(String, Seq[(Long, Double)])]): Unit =
+      StreamingAnalytics.mergeBatch(acc, last, batchId)(rows)(StreamingAnalytics.mergeTopK(2))
+    merge(0L, b0)
     val afterB0 = acc.get()
     assert(afterB0("g") == Seq((1L, 5.0), (2L, 4.0)))
     // replay of batch 0: must be a no-op — with the old behavior the
     // duplicate (1,5.0)/(2,4.0) inserts would evict nothing visible at
     // k=2 here, but the state would differ after the NEXT merge; assert
     // both the no-op and the downstream selection
-    streaming.StreamingAnalytics.mergeTopKBatch(acc, last, 0L, b0, 2)
+    merge(0L, b0)
     assert(acc.get() == afterB0, "replayed batch was merged twice")
-    streaming.StreamingAnalytics.mergeTopKBatch(acc, last, 1L, b1, 2)
+    merge(1L, b1)
     assert(acc.get()("g") == Seq((1L, 5.0), (2L, 4.0)),
       "selection after replay+new batch diverged from the exactly-once result")
     // an out-of-order OLD id (replay arriving after a newer merge) is
     // also skipped — the guard is monotone, not equality-based
-    streaming.StreamingAnalytics.mergeTopKBatch(acc, last, 0L, b0, 2)
+    merge(0L, b0)
     assert(last.get() == 1L && acc.get()("g") == Seq((1L, 5.0), (2L, 4.0)))
+  }
+
+  test("awaitAllGracefully sleeps while a query outlives another") {
+    // once one query has ended, awaitAnyTermination returns at once
+    // until resetTerminated; without the reset the wait loop spins on a
+    // core until the last query ends
+    val first = MemoryStream[Ev](Encoders.product[Ev], spark.sqlContext)
+    val second = MemoryStream[Ev](Encoders.product[Ev], spark.sqlContext)
+    val q1 = first.toDF().writeStream.format("noop").start()
+    val q2 = second.toDF().writeStream.format("noop").start()
+    val stopper = new Thread(() => { Thread.sleep(2000); q2.stop() })
+    try {
+      q1.stop()
+      val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      val cpu0 = mx.getCurrentThreadCpuTime
+      val wall0 = System.nanoTime()
+      stopper.start()
+      StreamingAnalytics.awaitAllGracefully(spark)
+      val wallS = (System.nanoTime() - wall0) / 1e9
+      val cpuS = (mx.getCurrentThreadCpuTime - cpu0) / 1e9
+      assert(!q2.isActive && wallS >= 1.5, s"returned after $wallS s with a query active")
+      assert(cpuS < 0.3, s"the waiting thread burned $cpuS CPU s in a $wallS s wait")
+    } finally { stopper.join(); q1.stop(); q2.stop() }
+  }
+
+  test("awaitAllGracefully throws when a query's batch fails") {
+    val ok = MemoryStream[Ev](Encoders.product[Ev], spark.sqlContext)
+    val bad = MemoryStream[Ev](Encoders.product[Ev], spark.sqlContext)
+    val qOk = ok.toDF().writeStream.format("noop").start()
+    // the batch fails a second after it starts, so the call is already
+    // waiting: it reports the queries that end while it waits, not those
+    // that ended before it was called
+    val qBad = bad.toDF().writeStream
+      .foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
+        Thread.sleep(1000)
+        throw new IllegalStateException("batch failed on purpose")
+      }.start()
+    // if the failure were missed, stop the other query instead of hanging
+    val watchdog = java.util.concurrent.Executors.newSingleThreadScheduledExecutor()
+    val stopOk: Runnable = () => qOk.stop()
+    watchdog.schedule(stopOk, 60, java.util.concurrent.TimeUnit.SECONDS)
+    try {
+      bad.addData(mkEvents(1))
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        StreamingAnalytics.awaitAllGracefully(spark)
+      }
+      assert(Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("batch failed on purpose")))
+      assert(qOk.isActive, "a failure must not wait for the other queries")
+    } finally { watchdog.shutdownNow(); qOk.stop(); qBad.stop() }
   }
 
   test("stream-stream interval join equals the batch attribution join") {
@@ -748,7 +784,7 @@ class StreamingSpec extends AnyFunSuite {
     // stream forked into the three metric shards, the watermarked 3-way
     // join, per-epoch processing latency through latencyQuantiles — the
     // end-to-end SLO readout the reference stops short of.
-    // SLO gating (ADVICE r11): the throughput/p99 assertions measure
+    // SLO gating: the throughput/p99 assertions measure
     // wall-clock behavior of a real-time source — on a loaded box they
     // can fail with no code defect. Sample ambient load at START; when
     // loud, keep the lossless/distinct-id INVARIANTS hard (they hold at

@@ -1,9 +1,13 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.functions.TextHash.shingleHashesFast
 import graft.operators.TextOps
+import graft.operators.TextOps.WINNOW_W
 
 /** Contract of the scan-local winnowing kernel
   * (functions/Winnow.scala): the (doc_id, fp) posting list must equal
@@ -14,10 +18,29 @@ import graft.operators.TextOps
 class WinnowKernelSpec extends AnyFunSuite {
   import SparkTestSession._
 
+  /** The superseded relational formulation, this spec's equality
+    * reference: explode once, sliding window-frame min, relational
+    * distinct. */
+  private def winnowPostingsRelational(spark: SparkSession, dir: String): DataFrame = {
+    val n = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val exploded = Tables.documents(spark, dir)
+      .repartition(n, col("doc_id"))
+      .select(col("doc_id"), posexplode(shingleHashesFast(col("text"))).as(Seq("pos", "h")))
+    val wFrame = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
+      .rowsBetween(Window.currentRow, WINNOW_W - 1)
+    val byDoc = Window.partitionBy(col("doc_id"))
+    exploded
+      .withColumn("wmin", min(col("h")).over(wFrame))
+      .withColumn("nsh", count(lit(1)).over(byDoc))
+      .filter(col("pos") <= greatest(col("nsh") - WINNOW_W, lit(0)))
+      .select(col("doc_id"), col("wmin").as("fp"))
+      .distinct()
+  }
+
   test("kernel posting list ≡ relational twin (sf0.001, sf0.01)") {
     for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
       val k = TextOps.winnowFingerprint(spark, dir)
-      val r = TextOps.winnowPostingsRelational(spark, dir)
+      val r = winnowPostingsRelational(spark, dir)
       assert(k.exceptAll(r).isEmpty && r.exceptAll(k).isEmpty,
         s"winnow kernel != relational at $dir")
       assert(k.count() > 0, s"empty posting list at $dir — testdata drifted")
