@@ -133,9 +133,19 @@ object Tables {
   def davg(c: Column): Column =
     sum(c.cast(DecimalType(18, 2))).cast(DoubleType) / count(c)
 
+  /** Natural log in exact micro-units, floor(ln(x)·1e6 + 0.5) as a
+    * long: sums and differences of logs stay exact integers
+    * (partition-order-proof) and match DuckDB bit for bit. */
+  def lnMu(c: Column): Column =
+    floor(log(c.cast(DoubleType)) * 1000000.0 + lit(0.5)).cast(LongType)
+
   /** DuckDB oracle fragments mirroring dsum/davg. */
   def sqlDsum(col: String): String =
     s"CAST(sum(CAST($col AS DECIMAL(18,2))) AS DOUBLE)"
+
+  /** DuckDB oracle fragment mirroring [[lnMu]]. */
+  def sqlLnMu(e: String): String =
+    s"CAST(floor(ln(CAST($e AS DOUBLE)) * 1000000.0 + 0.5) AS BIGINT)"
 
   /** DuckDB oracle cast of an exact value (DECIMAL or HUGEINT) to DOUBLE,
     * rounded once, as Spark's cast rounds it. DuckDB's direct cast of a

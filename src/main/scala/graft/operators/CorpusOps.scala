@@ -459,8 +459,6 @@ object CorpusOps {
     Materializer.materialize(bigramPairsRaw(spark, dir))
 
   def pmiBigrams(spark: SparkSession, dir: String): DataFrame = {
-    def lnMu(c: Column): Column =
-      floor(log(c.cast("double")) * 1000000.0 + lit(0.5)).cast("long")
     val pairs = bigramPairsRaw(spark, dir).select(col("x"), col("y"))
     // both count relations are multiply referenced (cx: two annotation
     // joins + the totals agg; cxy: totals + main) — materialize so the
@@ -487,8 +485,6 @@ object CorpusOps {
   }
 
   val pmiBigramsSql: String = {
-    def lnMu(e: String): String =
-      s"CAST(floor(ln(CAST($e AS DOUBLE)) * 1000000.0 + 0.5) AS BIGINT)"
     s"""WITH t AS (SELECT ${sqlTokens("text")} AS toks FROM documents),
        |b AS (SELECT unnest(generate_series(1, len(toks) - 1)) AS i, toks
        |      FROM t WHERE len(toks) >= 2),
@@ -499,8 +495,8 @@ object CorpusOps {
        |tot AS (SELECT (SELECT CAST(sum(c) AS BIGINT) FROM cx) AS nuni,
        |               (SELECT CAST(sum(cxy) AS BIGINT) FROM cxy) AS nbi),
        |s AS (SELECT cxy.x, cxy.y, cxy.cxy,
-       |             ${lnMu("cxy.cxy")} - ${lnMu("tot.nbi")} - ${lnMu("a.c")} - ${lnMu("b2.c")}
-       |             + 2 * ${lnMu("tot.nuni")} AS pmi_mu
+       |             ${sqlLnMu("cxy.cxy")} - ${sqlLnMu("tot.nbi")} - ${sqlLnMu("a.c")} - ${sqlLnMu("b2.c")}
+       |             + 2 * ${sqlLnMu("tot.nuni")} AS pmi_mu
        |      FROM cxy JOIN cx a ON cxy.x = a.tok JOIN cx b2 ON cxy.y = b2.tok, tot
        |      WHERE cxy.cxy >= $PMI_MIN_SUP)
        |SELECT x, y, cxy, CAST(pmi_mu AS DOUBLE) / 1000000.0 AS pmi
@@ -573,8 +569,6 @@ object CorpusOps {
     * explode + two vocab-keyed equi-joins + one doc rollup; micro-unit
     * lns make the per-doc sum an exact long. */
   def bigramSurprise(spark: SparkSession, dir: String): DataFrame = {
-    def lnMu(c: Column): Column =
-      floor(log(c.cast("double")) * 1000000.0 + lit(0.5)).cast("long")
     val pairs = bigramPairs(spark, dir)
     val cxy = Materializer.materialize(
       pairs.groupBy(col("x"), col("y")).agg(count(lit(1)).as("cxy")))
@@ -601,8 +595,6 @@ object CorpusOps {
   }
 
   val bigramSurpriseSql: String = {
-    def lnMu(e: String): String =
-      s"CAST(floor(ln(CAST($e AS DOUBLE)) * 1000000.0 + 0.5) AS BIGINT)"
     s"""WITH t AS (SELECT doc_id, ${sqlTokens("text")} AS toks FROM documents),
        |b AS (SELECT doc_id, unnest(generate_series(1, len(toks) - 1)) AS i, toks
        |      FROM t WHERE len(toks) >= 2),
@@ -610,7 +602,7 @@ object CorpusOps {
        |cxy AS (SELECT x, y, CAST(count(*) AS BIGINT) AS cxy FROM pairs GROUP BY 1, 2),
        |cx AS (SELECT tok, CAST(count(*) AS BIGINT) AS c FROM (
        |         SELECT unnest(toks) AS tok FROM t) GROUP BY 1),
-       |j AS (SELECT pairs.doc_id, ${lnMu("cx.c")} - ${lnMu("cxy.cxy")} AS sur
+       |j AS (SELECT pairs.doc_id, ${sqlLnMu("cx.c")} - ${sqlLnMu("cxy.cxy")} AS sur
        |      FROM pairs JOIN cxy USING (x, y) JOIN cx ON pairs.x = cx.tok),
        |d AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_pairs,
        |             CAST(sum(sur) AS BIGINT) AS ssur FROM j GROUP BY 1),
@@ -638,8 +630,6 @@ object CorpusOps {
     * vocab-keyed join back, a 1-row ln(N) broadcast, the partitioned
     * rank — linear end to end. */
   def tfidfTerms(spark: SparkSession, dir: String): DataFrame = {
-    def lnMu(c: Column): Column =
-      floor(log(c.cast("double")) * 1000000.0 + lit(0.5)).cast("long")
     val tf = Materializer.materialize(
       documents(spark, dir)
         .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
@@ -660,14 +650,12 @@ object CorpusOps {
   }
 
   val tfidfTermsSql: String = {
-    def lnMu(e: String): String =
-      s"CAST(floor(ln(CAST($e AS DOUBLE)) * 1000000.0 + 0.5) AS BIGINT)"
     s"""WITH tf AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS c FROM (
        |  SELECT doc_id, unnest(${sqlTokens("text")}) AS tok FROM documents)
        |  GROUP BY 1, 2),
        |df AS (SELECT tok, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-       |n AS (SELECT ${lnMu("count(*)")} AS lnN FROM documents),
-       |s AS (SELECT doc_id, tok, c * (lnN - ${lnMu("df")}) AS score_mu
+       |n AS (SELECT ${sqlLnMu("count(*)")} AS lnN FROM documents),
+       |s AS (SELECT doc_id, tok, c * (lnN - ${sqlLnMu("df")}) AS score_mu
        |      FROM tf JOIN df USING (tok), n),
        |r AS (SELECT *, CAST(row_number() OVER (PARTITION BY doc_id
        |        ORDER BY score_mu DESC, tok ASC) AS INT) AS rk FROM s)
@@ -768,7 +756,7 @@ object CorpusOps {
     * by one fixed-chain double share, round again, and the per-source
     * sum is exact longs. The log-argument products c·n / ct·ns run in
     * DECIMAL(38,0) (oracle: HUGEINT): at a 10¹³-token corpus a hot
-    * token's c·n nears 10²⁵ ≫ 2⁶³ (the r10 overflow class; pinned by
+    * token's c·n nears 10²⁵ ≫ 2⁶³, which BIGINT would wrap (pinned by
     * OverflowSweepSpec driving [[jsdFromCounts]] at those counts). */
   def jsDivergence(spark: SparkSession, dir: String): DataFrame =
     jsdFromCounts(documents(spark, dir)
@@ -780,8 +768,6 @@ object CorpusOps {
     * fixture could reach by rows. */
   private[graft] def jsdFromCounts(sc: DataFrame): DataFrame = {
     val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    def lnMu(c: Column): Column =
-      floor(log(c.cast("double")) * 1000000.0 + lit(0.5)).cast("long")
     val ctab = sc.groupBy(col("tok")).agg(sum(col("c")).as("ct"))
     val nsrc = sc.groupBy(col("source")).agg(sum(col("c")).as("ns"))
     val ntot = sc.agg(sum(col("c")).as("n"))
@@ -808,8 +794,6 @@ object CorpusOps {
   }
 
   val jsDivergenceSql: String = {
-    def lnMu(e: String): String =
-      s"CAST(floor(ln(CAST($e AS DOUBLE)) * 1000000.0 + 0.5) AS BIGINT)"
     s"""WITH sc AS (
        |  SELECT source, tok, CAST(count(*) AS BIGINT) AS c
        |  FROM (SELECT source, unnest(${sqlTokens("text")}) AS tok FROM documents)
@@ -820,10 +804,10 @@ object CorpusOps {
        |terms AS (
        |  SELECT source, ns, n, ct,
        |    CAST(floor((CAST(c AS DOUBLE) / CAST(ns AS DOUBLE))
-       |      * CAST(${lnMu("CAST(c AS HUGEINT) * n * 2")} - ${lnMu("CAST(c AS HUGEINT) * n + CAST(ct AS HUGEINT) * ns")} AS DOUBLE)
+       |      * CAST(${sqlLnMu("CAST(c AS HUGEINT) * n * 2")} - ${sqlLnMu("CAST(c AS HUGEINT) * n + CAST(ct AS HUGEINT) * ns")} AS DOUBLE)
        |      + 0.5) AS BIGINT) AS p_mu,
        |    CAST(floor((CAST(ct AS DOUBLE) / CAST(n AS DOUBLE))
-       |      * CAST(${lnMu("CAST(ct AS HUGEINT) * ns * 2")} - ${lnMu("CAST(c AS HUGEINT) * n + CAST(ct AS HUGEINT) * ns")} AS DOUBLE)
+       |      * CAST(${sqlLnMu("CAST(ct AS HUGEINT) * ns * 2")} - ${sqlLnMu("CAST(c AS HUGEINT) * n + CAST(ct AS HUGEINT) * ns")} AS DOUBLE)
        |      + 0.5) AS BIGINT) AS q_mu
        |  FROM sc JOIN ctab USING (tok) JOIN nsrc USING (source), ntot),
        |per AS (

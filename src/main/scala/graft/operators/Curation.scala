@@ -294,8 +294,6 @@ object Curation {
       occ.groupBy(col("tok")).agg(
         sum(col("is_target")).as("ct"),
         sum(lit(1L) - col("is_target")).as("cr")))
-    def lnMu(c: Column): Column =
-      floor(log(c.cast("double")) * 1000000.0 + lit(0.5))
     // 1-row smoothing constant: Δmu = ln(T+V)mu - ln(R+V)mu
     val stats = tf.agg(
       (lnMu(sum(col("ct")) + count(lit(1))) -
@@ -358,8 +356,6 @@ object Curation {
     * divisions. Scale shape: one (doc, tok) count shuffle + one
     * doc-keyed rollup — linear, scan-bounded. */
   def tokenEntropy(spark: SparkSession, dir: String): DataFrame = {
-    def lnMu(c: Column): Column =
-      floor(log(c.cast("double")) * 1000000.0 + lit(0.5)).cast("long")
     documents(spark, dir)
       .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
       .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("c"))
@@ -380,20 +376,18 @@ object Curation {
   }
 
   val tokenEntropySql: String = {
-    def lnMu(e: String): String =
-      s"CAST(floor(ln(CAST($e AS DOUBLE)) * 1000000.0 + 0.5) AS BIGINT)"
     s"""WITH occ AS (SELECT doc_id, unnest(${sqlTokens("text")}) AS tok FROM documents),
        |dt AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS c FROM occ GROUP BY 1, 2),
        |d AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
        |             CAST(count(*) AS BIGINT) AS n_types,
-       |             CAST(sum(c * ${lnMu("c")}) AS BIGINT) AS slc
+       |             CAST(sum(c * ${sqlLnMu("c")}) AS BIGINT) AS slc
        |      FROM dt GROUP BY 1)
        |SELECT doc_id, n_tokens, n_types,
-       |       CAST(n_tokens * ${lnMu("n_tokens")} - slc AS DOUBLE) / n_tokens / 1000000.0
+       |       CAST(n_tokens * ${sqlLnMu("n_tokens")} - slc AS DOUBLE) / n_tokens / 1000000.0
        |         AS entropy,
        |       CASE WHEN n_types > 1 THEN
-       |         CAST(n_tokens * ${lnMu("n_tokens")} - slc AS DOUBLE) / n_tokens
-       |           / CAST(${lnMu("n_types")} AS DOUBLE)
+       |         CAST(n_tokens * ${sqlLnMu("n_tokens")} - slc AS DOUBLE) / n_tokens
+       |           / CAST(${sqlLnMu("n_types")} AS DOUBLE)
        |       ELSE CAST(0.0 AS DOUBLE) END AS norm_entropy
        |FROM d ORDER BY 1""".stripMargin
   }

@@ -302,7 +302,7 @@ object GraphOps {
     * H = ln W − (Σ w·ln w)/W over integer counts, so every ln argument
     * is an integer: Σ w·lnMu(w) is exact, accumulated in DECIMAL(38,0)
     * (oracle: HUGEINT) since a 10¹¹-count hot edge puts w·lnMu(w) past
-    * 2⁶³ (r10 overflow class); the division is one fixed IEEE chain,
+    * 2⁶³, where BIGINT would wrap; the division is one fixed IEEE chain,
     * and the final H_mu is an exact long per page. */
   def transitionEntropy(spark: SparkSession, dir: String): DataFrame =
     entropyFromEdges(Materializer.materialize(transitionEdges(spark, dir)))
@@ -310,8 +310,6 @@ object GraphOps {
   /** Entropy rollup over a prebuilt (src, dst, w) edge relation — split
     * out so the overflow sweep can drive it with 10¹¹-count hot edges. */
   private[graft] def entropyFromEdges(edges: DataFrame): DataFrame = {
-    def lnMu(c: Column): Column =
-      floor(log(c.cast("double")) * 1000000.0 + lit(0.5)).cast("long")
     val hMu = lnMu(col("wtot")) -
       floor(col("swl").cast("double") / col("wtot").cast("double") + lit(0.5)).cast("long")
     val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
@@ -329,8 +327,6 @@ object GraphOps {
   }
 
   val transitionEntropySql: String = {
-    def lnMu(e: String): String =
-      s"CAST(floor(ln(CAST($e AS DOUBLE)) * 1000000.0 + 0.5) AS BIGINT)"
     s"""WITH ev AS (SELECT user_id, ts, event_id,
        |  CAST(json_extract(props, '$$.k') AS INT) AS page FROM events),
        |sq AS (SELECT page, lag(page) OVER (
@@ -340,18 +336,18 @@ object GraphOps {
        |per AS (
        |  SELECT src AS page, CAST(count(*) AS BIGINT) AS out_degree,
        |         CAST(sum(w) AS BIGINT) AS wtot,
-       |         CAST(sum(CAST(w AS HUGEINT) * ${lnMu("w")}) AS HUGEINT) AS swl
+       |         CAST(sum(CAST(w AS HUGEINT) * ${sqlLnMu("w")}) AS HUGEINT) AS swl
        |  FROM edges GROUP BY 1),
        |h AS (
        |  SELECT page, out_degree, wtot,
-       |         ${lnMu("wtot")}
+       |         ${sqlLnMu("wtot")}
        |           - CAST(floor(CAST(swl AS DOUBLE) / CAST(wtot AS DOUBLE) + 0.5) AS BIGINT)
        |           AS h_mu
        |  FROM per)
        |SELECT page, out_degree, wtot AS n_transitions,
        |       CAST(h_mu AS DOUBLE) / 1000000.0 AS entropy_nats,
        |       CASE WHEN out_degree > 1
-       |            THEN CAST(h_mu AS DOUBLE) / CAST(${lnMu("out_degree")} AS DOUBLE)
+       |            THEN CAST(h_mu AS DOUBLE) / CAST(${sqlLnMu("out_degree")} AS DOUBLE)
        |            ELSE 0.0 END AS evenness
        |FROM h ORDER BY page""".stripMargin
   }

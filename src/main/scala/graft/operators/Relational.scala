@@ -1467,7 +1467,7 @@ object Relational {
     def rankAt(q: Double): Column =
       floor(lit(q) * (col("n") - 1).cast("double")).cast("long") + 1
     val qs = (1 to 9).map(_ / 10.0)
-    // thresholds MATERIALIZED (round 15): thr is referenced twice (the
+    // thresholds MATERIALIZED: thr is referenced twice (the
     // bucket-count join and the grid) and Spark has no cross-reference
     // subtree reuse — planned inline, the reference half's rank window
     // (the query's dominant sort at scale) ran TWICE. The split day
@@ -1496,8 +1496,6 @@ object Relational {
       .agg(sum(col("is_ref")).as("cr"), sum(lit(1) - col("is_ref")).as("cc"))
     val grid = thr.select(col("event_type"),
       explode(sequence(lit(1), lit(10))).as("bucket"))
-    def lnMu(c: Column): Column =
-      floor(log(c.cast("double")) * 1000000.0 + lit(0.5)).cast("long")
     val filled = grid.join(counts, Seq("event_type", "bucket"), "left")
       .select(col("event_type"), col("bucket"),
         coalesce(col("cr"), lit(0L)).as("cr"), coalesce(col("cc"), lit(0L)).as("cc"))
@@ -1520,7 +1518,6 @@ object Relational {
   }
 
   val driftPsiSql: String = {
-    def lnMu(e: String): String = s"CAST(floor(ln(CAST($e AS DOUBLE)) * 1000000.0 + 0.5) AS BIGINT)"
     val rks = (1 to 9).map(i => s"CAST(floor(CAST(0.${i} AS DOUBLE) * CAST(n - 1 AS DOUBLE)) AS BIGINT) + 1")
     val thrCols = (1 to 9).map(i => s"min(CASE WHEN rk = ${rks(i - 1)} THEN v_mu END) AS t$i").mkString(",\n      |    ")
     val bucketExpr = (1 to 9).map(i => s"CAST(v_mu > t$i AS INT)").mkString(" + ")
@@ -1558,8 +1555,8 @@ object Relational {
        |  SELECT event_type, nr, nc,
        |         CAST(floor((CAST(cc + 1 AS DOUBLE) / CAST(nc + 10 AS DOUBLE)
        |                     - CAST(cr + 1 AS DOUBLE) / CAST(nr + 10 AS DOUBLE))
-       |                    * CAST(${lnMu("cc + 1")} - ${lnMu("nc + 10")}
-       |                           - ${lnMu("cr + 1")} + ${lnMu("nr + 10")} AS DOUBLE)
+       |                    * CAST(${sqlLnMu("cc + 1")} - ${sqlLnMu("nc + 10")}
+       |                           - ${sqlLnMu("cr + 1")} + ${sqlLnMu("nr + 10")} AS DOUBLE)
        |                    + 0.5) AS BIGINT) AS contrib_mu
        |  FROM filled)
        |SELECT event_type, min(nr) AS n_ref, min(nc) AS n_cur,
@@ -1779,8 +1776,6 @@ object Relational {
     // ln(1 + 1/d) = ln(d+1) − ln(d): keeps every ln argument an INTEGER
     // (the only ln inputs both engines agree on bit-for-bit after
     // micro-unit rounding); lnMu(10) = 2302585
-    def lnMu(c: Column): Column =
-      floor(log(c.cast("double")) * 1000000.0 + lit(0.5)).cast("long")
     val benford = (lnMu(col("digit") + 1) - lnMu(col("digit"))).cast("double") / 2302585.0
     digits.crossJoin(broadcast(tot))
       .select(col("digit"), col("n_orders"), share.as("share"),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Materializer
 import graft.Tables._
+import graft.functions.{CellScore, ScoreAll}
 import graft.functions.PqEncode.{pqDists, pqEncode}
 import graft.functions.VectorOps._
 
@@ -138,11 +139,11 @@ object Similarity {
       .select(col("query_id"), (col("p") + 1).cast("int").as("rnk"),
         col("s.id").as("neighbor_id"), col("s.score").as(scoreName))
 
-  /** Test-only branch override: Some(true) forces the relational twins,
-    * Some(false) the kernels, None defers to the size bound.
-    * KernelBranchABSpec uses it to A/B the WHOLE registry functions —
-    * not just the *At helpers — on a corpus above the driver SFs, so the
-    * relational fallback can't rot untested (VERDICT r12 #4). */
+  /** Test-only branch override: Some(true) forces the relational
+    * branches, Some(false) the kernels, None defers to the size bound.
+    * KernelBranchABSpec A/Bs whole registry functions with it on a
+    * 20 K-vector corpus, so the relational branch, which only a
+    * >25 M-vector corpus would otherwise reach, cannot rot untested. */
   private[graft] var forceRelationalForTest: Option[Boolean] = None
 
   /** Whether the query subset is small enough to collect/broadcast —
@@ -154,36 +155,65 @@ object Similarity {
       case None => nVecOf(spark, dir) / QUERY_MOD <= QUERY_BROADCAST_MAX
     }
 
-  /** Driver-collected bounded query batch (id, vec, nrm), sorted by id —
-    * the same driver-side copy `broadcast(q)` holds, reused as the
-    * [[graft.functions.ScoreAllTopKAgg]] kernel's reference objects. */
-  private def collectQueryBatch(q: DataFrame, embName: String)
-      : (Seq[Long], Seq[Seq[Float]], Seq[Double]) = {
-    val rows = q.select(col("vec_id"), col(embName), col("nrm"))
-      .collect().sortBy(_.getLong(0))
-    (rows.map(_.getLong(0)).toSeq, rows.map(_.getSeq[Float](1)).toSeq,
-      rows.map(_.getDouble(2)).toSeq)
+  /** The query (anchor) subset: every QUERY_MOD-th vector. */
+  private val isQuery: Column = col("vec_id") % QUERY_MOD === 0
+
+  /** A top-k kernel's `tk` column, ARRAY<STRUCT<query_id, rnk, id,
+    * score>>, as (query_id, rnk, neighbor_id, `score`) rows. */
+  private def explodeTopK(agg: DataFrame, score: String): DataFrame =
+    agg.select(posexplode(col("tk")).as(Seq("p", "s")))
+      .select(col("s.query_id").as("query_id"), col("s.rnk").as("rnk"),
+        col("s.id").as("neighbor_id"), col("s.score").as(score))
+
+  /** The relational candidate tail shared by both top-k generators:
+    * drop self pairs (and, with `crossLabel`, same-label pairs), score by
+    * cosine and keep the top k per query via [[topkTail]]. */
+  private def scoreAndRank(joined: DataFrame, emb: String, k: Int, score: String,
+                           crossLabel: Boolean): DataFrame = {
+    val notSelf = col("query_id") =!= col("vec_id")
+    topkTail(joined
+      .filter(if (crossLabel) notSelf && col("label") =!= col("query_label") else notSelf)
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+        cosine(col("qe"), col("qn"), col(emb), col("nrm")).as(score)), k, score)
   }
 
-  /** Brute-force (query_id, rnk, neighbor_id, score) via the
-    * [[graft.functions.ScoreAllTopKAgg]] one-pass kernel — the
-    * BNLJ-free exact scan (the BroadcastNestedLoopJoin the relational
-    * form plans does not whole-stage-codegen, so its |corpus|·|Q| pair
-    * pipeline runs interpreted: measured ~3.9 µs/pair = 3082 CPU-s for
-    * 800 M pairs at the sf10 probe). Callers pass the corpus WITH the
-    * kernelParallel exchange applied. */
-  private def scoreAllTail(corpus: DataFrame, embName: String,
-                           qb: (Seq[Long], Seq[Seq[Float]], Seq[Double]),
-                           k: Int, scoreName: String): DataFrame =
-    corpus
-      .agg(graft.functions.ScoreAll.scoreAllTopK(col("vec_id"), col(embName),
-        col("nrm"), qb._1, qb._2, qb._3, k).as("tk"))
-      .select(posexplode(col("tk")).as(Seq("p", "s")))
-      .select(col("s.query_id").as("query_id"), col("s.rnk").as("rnk"),
-        col("s.id").as("neighbor_id"), col("s.score").as(scoreName))
+  /** Exact top-k per query, (query_id, rnk, neighbor_id, `score`) ranked
+    * by cosine DESC then neighbor_id ASC: every row of `queries` against
+    * every other row of `corpus`, both (vec_id, `emb`, nrm[, label]).
+    * With `crossLabel`, only neighbors of another label rank (hard
+    * negatives).
+    *
+    * Below the bounded-batch contract the queries are collected and the
+    * corpus streams once through the [[graft.functions.ScoreAllTopKAgg]]
+    * kernel, because the relational form's BroadcastNestedLoopJoin does
+    * not whole-stage-codegen: its |corpus|·|Q| pairs run interpreted
+    * (~3.9 µs/pair, 3082 CPU-s for 800 M pairs at the sf10 probe). Above
+    * it the queries are too many to collect and the broadcast join runs.
+    * Both branches give bit-identical rows (KernelBranchABSpec). */
+  private def exactTopK(spark: SparkSession, dir: String, queries: DataFrame,
+                        corpus: DataFrame, k: Int, emb: String = "embedding",
+                        score: String = "cosine", crossLabel: Boolean = false): DataFrame = {
+    val label = if (crossLabel) Seq("label") else Nil
+    if (queryBatchBounded(spark, dir)) {
+      val qRows = queries.select((Seq("vec_id", emb, "nrm") ++ label).map(col): _*)
+        .collect().sortBy(_.getLong(0))
+      val (ids, vecs, nrms) = (qRows.map(_.getLong(0)).toSeq,
+        qRows.map(_.getSeq[Float](1)).toSeq, qRows.map(_.getDouble(2)).toSeq)
+      val tk =
+        if (crossLabel) ScoreAll.scoreAllTopKExcludeLabel(col("vec_id"), col(emb), col("label"),
+          ids, vecs, nrms, qRows.map(_.getAs[Number](3).longValue).toSeq, k)
+        else ScoreAll.scoreAllTopK(col("vec_id"), col(emb), col("nrm"), ids, vecs, nrms, k)
+      // the labeled kernel computes corpus norms itself
+      val kernelCols = Seq("vec_id", emb, if (crossLabel) "label" else "nrm")
+      explodeTopK(kernelParallel(corpus.select(kernelCols.map(col): _*)).agg(tk.as("tk")), score)
+    } else {
+      val q = queries.select(Seq(col("vec_id").as("query_id"), col(emb).as("qe"),
+        col("nrm").as("qn")) ++ label.map(c => col(c).as("query_label")): _*)
+      scoreAndRank(broadcast(q).join(kernelParallel(corpus)), emb, k, score, crossLabel)
+    }
+  }
 
-  // Exact brute-force cosine top-k for the query subset. Queries are
-  // broadcast; the corpus side streams through a codegen'd projection.
+  // Exact brute-force cosine top-k for the query subset.
   def annBruteforce(spark: SparkSession, dir: String): DataFrame =
     annBruteforceAt(spark, dir, TOPK)
 
@@ -191,24 +221,7 @@ object Similarity {
     * sweeps the IVF probe curve against. */
   def annBruteforceAt(spark: SparkSession, dir: String, topk: Int): DataFrame = {
     val e = withNorm(spark, dir)
-    if (queryBatchBounded(spark, dir)) {
-      val qb = collectQueryBatch(e.filter(col("vec_id") % QUERY_MOD === 0), "embedding")
-      scoreAllTail(kernelParallel(e), "embedding", qb, topk, "cosine")
-        .orderBy("query_id", "rnk")
-    } else annBruteforceRelationalAt(spark, dir, topk)
-  }
-
-  /** Relational exact scan — the plan above the bounded-batch contract,
-    * and AnnKernelSpec's equality reference. */
-  private[graft] def annBruteforceRelationalAt(spark: SparkSession, dir: String,
-                                               topk: Int): DataFrame = {
-    val e = withNorm(spark, dir)
-    val q = e.filter(col("vec_id") % QUERY_MOD === 0)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("nrm").as("qn"))
-    val scored = broadcast(q).join(kernelParallel(e), col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        cosine(col("qe"), col("qn"), col("embedding"), col("nrm")).as("cosine"))
-    topkTail(scored, topk).orderBy("query_id", "rnk")
+    exactTopK(spark, dir, e.filter(isQuery), e, topk).orderBy("query_id", "rnk")
   }
 
   val annBruteforceSql: String =
@@ -309,7 +322,7 @@ object Similarity {
   // grows); equi-join on bucket replaces the quadratic pair space.
   def annLsh(spark: SparkSession, dir: String): DataFrame = {
     val e = withNormBucket(spark, dir)
-    val q = e.filter(col("vec_id") % QUERY_MOD === 0)
+    val q = e.filter(isQuery)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
         col("nrm").as("qn"), col("bucket").as("qb"))
     val scored = broadcast(q)
@@ -568,7 +581,7 @@ object Similarity {
   /** Probe-side cell ranking for one query subset: (query_id, qe, qn,
     * cell) for the `nprobe` nearest cells of each query. */
   def ivfProbeCells(spark: SparkSession, dir: String, nprobe: Int = NPROBE): DataFrame =
-    rankCells(withNorm(spark, dir).filter(col("vec_id") % QUERY_MOD === 0),
+    rankCells(withNorm(spark, dir).filter(isQuery),
         ivfCentroids(spark, dir), nprobe)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
         col("nrm").as("qn"), col("cell"))
@@ -576,56 +589,49 @@ object Similarity {
   def annIvf(spark: SparkSession, dir: String): DataFrame =
     annIvfAt(spark, dir, NPROBE, TOPK)
 
+  /** IVF top-k per query, (query_id, rnk, neighbor_id, cosine): each
+    * query of [[ivfProbeCells]] against the `pool` rows (vec_id,
+    * embedding, nrm, cell) in its `nprobe` nearest cells; `crossLabel`
+    * as in [[exactTopK]].
+    *
+    * Below the bounded-batch contract the probes are collected and the
+    * pool streams once through the [[graft.functions.CellScoreTopKAgg]]
+    * kernel, because the relational probes ⋈ pool ON cell pushes every
+    * candidate pair through join/aggregate row machinery (~21 µs/pair,
+    * 8266 CPU-s for 384 M pairs at the sf100 probe). Above it the probe
+    * relation joins the pool on cell. */
+  private def ivfTopK(spark: SparkSession, dir: String, pool: DataFrame, nprobe: Int,
+                      k: Int, crossLabel: Boolean = false): DataFrame = {
+    val probes = ivfProbeCells(spark, dir, nprobe)
+    val lbl = embeddings(spark, dir).select(col("vec_id"), col("label"))
+    val cands = if (crossLabel) pool.join(lbl, Seq("vec_id")) else pool
+    if (queryBatchBounded(spark, dir)) {
+      val byQ = probes.collect().groupBy(_.getLong(0)).toSeq.sortBy(_._1)
+      val (ids, vecs, nrms, cells) = (byQ.map(_._1), byQ.map(_._2.head.getSeq[Float](1)),
+        byQ.map(_._2.head.getDouble(2)), byQ.map(_._2.map(_.getLong(3)).toSeq.sorted))
+      val tk =
+        if (crossLabel) {
+          val lblOf = lbl.filter(isQuery).collect()
+            .map(r => r.getLong(0) -> r.getAs[Number](1).longValue).toMap
+          CellScore.cellScoreTopKExcludeLabel(col("vec_id"), col("embedding"), col("nrm"),
+            col("cell"), col("label"), ids, vecs, nrms, cells, ids.map(lblOf), k)
+        } else CellScore.cellScoreTopK(col("vec_id"), col("embedding"), col("nrm"),
+          col("cell"), ids, vecs, nrms, cells, k)
+      explodeTopK(cands.agg(tk.as("tk")), "cosine")
+    } else {
+      val q = if (!crossLabel) probes else probes.join(lbl.select(col("vec_id").as("query_id"),
+        col("label").as("query_label")), Seq("query_id"))
+      scoreAndRank(maybeBroadcastQ(spark, dir, q).join(cands, Seq("cell")), "embedding", k,
+        "cosine", crossLabel)
+    }
+  }
+
   /** annIvf with explicit probe width / k — the recall/cost knob the
     * 100 TB IVF design rests on (probes touch `nprobe` storage
     * partitions instead of the corpus). AnnRecallSpec measures
     * recall@k against [[annBruteforceAt]] across nprobe values. */
-  /** Driver-collected probe batch: per query (id, vec, nrm, probed
-    * cells), sorted by id — the driver-side copy the probe broadcast
-    * held, reused as the [[graft.functions.CellScoreTopKAgg]] kernel's
-    * reference objects. Bounded by the [[queryBatchBounded]] contract. */
-  private def collectProbeBatch(spark: SparkSession, dir: String, nprobe: Int)
-      : (Seq[Long], Seq[Seq[Float]], Seq[Double], Seq[Seq[Long]]) = {
-    val rows = ivfProbeCells(spark, dir, nprobe)
-      .select(col("query_id"), col("qe"), col("qn"), col("cell"))
-      .collect()
-    val byQ = rows.groupBy(_.getLong(0)).toSeq.sortBy(_._1)
-    (byQ.map(_._1), byQ.map(_._2.head.getSeq[Float](1)),
-      byQ.map(_._2.head.getDouble(2)),
-      byQ.map(_._2.map(_.getLong(3)).toSeq.sorted))
-  }
-
-  /** IVF probe search (query_id, rnk, neighbor_id, cosine) via the
-    * [[graft.functions.CellScoreTopKAgg]] one-pass kernel over the
-    * assignment — the join-free probe (the relational broadcast-probes
-    * ⋈ assigned ON cell pushed every candidate pair through the
-    * join/aggregate row machinery: 8266 CPU-s for 384 M pairs at the
-    * sf100 probe, ~21 µs/pair vs ~25 core-seconds of arithmetic). */
-  private def cellScoreTail(assigned: DataFrame,
-                            pb: (Seq[Long], Seq[Seq[Float]], Seq[Double], Seq[Seq[Long]]),
-                            k: Int): DataFrame =
-    assigned
-      .agg(graft.functions.CellScore.cellScoreTopK(col("vec_id"), col("embedding"),
-        col("nrm"), col("cell"), pb._1, pb._2, pb._3, pb._4, k).as("tk"))
-      .select(posexplode(col("tk")).as(Seq("p", "s")))
-      .select(col("s.query_id").as("query_id"), col("s.rnk").as("rnk"),
-        col("s.id").as("neighbor_id"), col("s.score").as("cosine"))
-
-  def annIvfAt(spark: SparkSession, dir: String, nprobe: Int, topk: Int): DataFrame = {
-    val assigned = ivfAssign(spark, dir)
-    if (queryBatchBounded(spark, dir)) {
-      cellScoreTail(assigned, collectProbeBatch(spark, dir, nprobe), topk)
-        .orderBy("query_id", "rnk")
-    } else {
-      val probes = ivfProbeCells(spark, dir, nprobe)
-      val scored = maybeBroadcastQ(spark, dir, probes)
-        .join(assigned, Seq("cell"))
-        .filter(col("query_id") =!= col("vec_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          cosine(col("qe"), col("qn"), col("embedding"), col("nrm")).as("cosine"))
-      topkTail(scored, topk).orderBy("query_id", "rnk")
-    }
-  }
+  def annIvfAt(spark: SparkSession, dir: String, nprobe: Int, topk: Int): DataFrame =
+    ivfTopK(spark, dir, ivfAssign(spark, dir), nprobe, topk).orderBy("query_id", "rnk")
 
   /** Shared oracle prefix: norms, centroid set, and the rk=1 IVF
     * assignment — used by annIvfSql and ivfRefineSql. */
@@ -930,33 +936,21 @@ object Similarity {
     * smallest label. The held-out true label is carried through so the
     * output doubles as an accuracy report.
     *
-    * Scale shape: identical to [[annBruteforce]] — the query set is
-    * broadcast and the labeled corpus streams through one codegen'd
-    * projection; the vote is a (query, label) count aggregate over
-    * K·|queries| rows. At 100 TB the exact scan swaps for [[annIvfAt]]
-    * candidates (same vote tail), trading recall for probe cost. */
+    * Scale shape: [[exactTopK]] over the labeled (non-query) corpus,
+    * then a (query, label) count aggregate over K·|queries| rows. At
+    * 100 TB [[knnClassifyIvf]] runs the same vote over [[ivfTopK]]
+    * candidates, trading recall for probe cost. */
   def knnClassify(spark: SparkSession, dir: String): DataFrame = {
     val e = embeddings(spark, dir).select(col("vec_id"), col("embedding"),
       normSq(col("embedding")).as("nrm"), col("label"))
-    val q = e.filter(col("vec_id") % QUERY_MOD === 0)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qn"))
-    val pool = e.filter(col("vec_id") % QUERY_MOD =!= 0)
-    // top-K first (labels are per-id constants, so selecting them via
-    // the Q·K-row join-back after the tail keeps the kept set and vote
-    // identical to ranking the labeled rows directly), then vote
-    val kept =
-      if (queryBatchBounded(spark, dir)) {
-        val qb = collectQueryBatch(
-          e.filter(col("vec_id") % QUERY_MOD === 0)
-            .select(col("vec_id"), col("embedding"), col("nrm")), "embedding")
-        scoreAllTail(kernelParallel(pool.select(col("vec_id"), col("embedding"),
-          col("nrm"))), "embedding", qb, KNN_K, "cosine")
-      } else topkTail(
-        broadcast(q).join(kernelParallel(pool), col("query_id") =!= col("vec_id"))
-          .select(col("query_id"), col("vec_id").as("neighbor_id"),
-            cosine(col("qe"), col("qn"), col("embedding"), col("nrm")).as("cosine")),
-        KNN_K)
+    knnVote(spark, dir, exactTopK(spark, dir, e.filter(isQuery), e.filter(!isQuery), KNN_K))
+  }
+
+  /** The majority vote over each query's kept neighbors (query_id,
+    * neighbor_id), ties to the smallest label, beside the held-out true
+    * label. Labels are per-id constants, so joining them back onto the
+    * Q·K kept rows votes exactly as ranking labeled rows would. */
+  private def knnVote(spark: SparkSession, dir: String, kept: DataFrame): DataFrame = {
     val lbl = embeddings(spark, dir).select(col("vec_id"), col("label"))
     val wVote = Window.partitionBy(col("query_id"))
       .orderBy(col("votes").desc, col("label").asc)
@@ -994,49 +988,18 @@ object Similarity {
        |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY votes DESC, label ASC) = 1
        |ORDER BY query_id""".stripMargin
 
-  /** [[knnClassify]]'s promised scale form, registered: the SAME vote
-    * tail over [[annIvfAt]]-style candidates instead of the exact scan.
-    * The round-9 full-registry sf1 sweep measured the brute-force form
-    * at slope 40 for a ×10 row step (its query set is a corpus fraction
-    * here, so it is quadratic by construction — fine as the DECLARED
-    * exactness baseline, not as the production path); this variant's
-    * candidates are the NPROBE probed cells per query, so per-query
-    * work is probe-bounded and total work is linear in the corpus at
+  /** [[knnClassify]]'s scale form: the same vote over [[ivfTopK]]
+    * candidates instead of the exact scan. The exact form is quadratic
+    * when the query set is a corpus fraction (the sf1 sweep measured
+    * slope 40 for a ×10 row step); here per-query work is bounded by the
+    * NPROBE probed cells, so total work is linear in the corpus at
     * fixed cell occupancy. Approximation contract mirrors
     * [[annIvf]]'s: a neighbor outside the probed cells is never voted,
     * AnnRecallSpec-style agreement vs the exact form is measured in
     * PipelineOpsSpec, and the oracle reproduces the probe set exactly
     * so the prediction is deterministic cross-engine. */
-  def knnClassifyIvf(spark: SparkSession, dir: String): DataFrame = {
-    val lbl = embeddings(spark, dir).select(col("vec_id"), col("label"))
-    val pool = ivfAssign(spark, dir)
-      .filter(col("vec_id") % QUERY_MOD =!= 0)
-    val kept =
-      if (queryBatchBounded(spark, dir))
-        cellScoreTail(pool, collectProbeBatch(spark, dir, NPROBE), KNN_K)
-      else topkTail(
-        maybeBroadcastQ(spark, dir, ivfProbeCells(spark, dir, NPROBE))
-          .join(pool, Seq("cell"))
-          .filter(col("query_id") =!= col("vec_id"))
-          .select(col("query_id"), col("vec_id").as("neighbor_id"),
-            cosine(col("qe"), col("qn"), col("embedding"), col("nrm")).as("cosine")),
-        KNN_K)
-    val wVote = Window.partitionBy(col("query_id"))
-      .orderBy(col("votes").desc, col("label").asc)
-    kept
-      .join(lbl.select(col("vec_id").as("query_id"), col("label").as("true_label")),
-        Seq("query_id"))
-      .join(lbl.select(col("vec_id").as("neighbor_id"), col("label")),
-        Seq("neighbor_id"))
-      .groupBy(col("query_id"), col("true_label"), col("label"))
-      .agg(count(lit(1)).as("votes"))
-      .withColumn("vr", row_number().over(wVote))
-      .filter(col("vr") === 1)
-      .select(col("query_id"), col("true_label"),
-        col("label").as("predicted_label"), col("votes"),
-        (col("label") === col("true_label")).cast("int").as("correct"))
-      .orderBy("query_id")
-  }
+  def knnClassifyIvf(spark: SparkSession, dir: String): DataFrame =
+    knnVote(spark, dir, ivfTopK(spark, dir, ivfAssign(spark, dir).filter(!isQuery), NPROBE, KNN_K))
 
   val knnClassifyIvfSql: String = {
     val cosNC = sqlCosine("n.embedding", "n.nrm", "c.ce", "c.cn")
@@ -1075,41 +1038,20 @@ object Similarity {
     * cross-label pair is either a mislabel or a genuinely hard boundary
     * case, and this is the query that surfaces them.
     *
-    * Scale shape: identical to [[annBruteforce]]/[[knnClassify]] — the
-    * anchor set is broadcast, the labeled corpus streams through one
-    * codegen'd cosine projection, and the per-anchor top-k runs as a
-    * rank window with WindowGroupLimit pushdown. At 100 TB the exact
-    * scan swaps for [[annIvfAt]] candidates (same tail), trading
-    * recall for probe cost. */
+    * Scale shape: [[exactTopK]] with the cross-label filter, like
+    * [[knnClassify]]. At 100 TB [[hardNegativesIvf]] mines [[ivfTopK]]
+    * candidates with the same tail, trading recall for probe cost. */
   def hardNegatives(spark: SparkSession, dir: String): DataFrame = {
     val e = embeddings(spark, dir).select(col("vec_id"), col("embedding"),
       normSq(col("embedding")).as("nrm"), col("label"))
-    val q = e.filter(col("vec_id") % QUERY_MOD === 0)
-      .select(col("vec_id").as("anchor_id"), col("embedding").as("qe"),
-        col("nrm").as("qn"), col("label").as("anchor_label"))
-    // cross-label filter BEFORE the tail (hard negatives only rank
-    // cross-label candidates); labels re-attach over the ≤Q·K kept rows
-    val kept =
-      if (queryBatchBounded(spark, dir)) {
-        val qRows = e.filter(col("vec_id") % QUERY_MOD === 0)
-          .select(col("vec_id"), col("embedding"), col("nrm"), col("label"))
-          .collect().sortBy(_.getLong(0))
-        kernelParallel(e)
-          .agg(graft.functions.ScoreAll.scoreAllTopKExcludeLabel(
-            col("vec_id"), col("embedding"), col("label"),
-            qRows.map(_.getLong(0)).toSeq, qRows.map(_.getSeq[Float](1)).toSeq,
-            qRows.map(_.getDouble(2)).toSeq,
-            qRows.map(_.getAs[Number](3).longValue).toSeq,
-            HARDNEG_K).as("tk"))
-          .select(posexplode(col("tk")).as(Seq("p", "s")))
-          .select(col("s.query_id").as("query_id"), col("s.rnk").as("rnk"),
-            col("s.id").as("neighbor_id"), col("s.score").as("cosine"))
-      } else topkTail(
-        broadcast(q).join(kernelParallel(e),
-            col("anchor_id") =!= col("vec_id") && col("label") =!= col("anchor_label"))
-          .select(col("anchor_id").as("query_id"), col("vec_id").as("neighbor_id"),
-            cosine(col("qe"), col("qn"), col("embedding"), col("nrm")).as("cosine")),
-        HARDNEG_K)
+    withPairLabels(spark, dir,
+      exactTopK(spark, dir, e.filter(isQuery), e, HARDNEG_K, crossLabel = true))
+  }
+
+  /** Kept hard negatives (query_id, rnk, neighbor_id, cosine) as
+    * anchor/neighbor rows with both labels. The cross-label filter ran
+    * before the tail; labels re-attach over the ≤Q·K kept rows only. */
+  private def withPairLabels(spark: SparkSession, dir: String, kept: DataFrame): DataFrame = {
     val lbl = embeddings(spark, dir).select(col("vec_id"), col("label"))
     kept
       .join(lbl.select(col("vec_id").as("query_id"), col("label").as("anchor_label")),
@@ -1138,56 +1080,21 @@ object Similarity {
        |QUALIFY rnk <= $HARDNEG_K
        |ORDER BY anchor_id, rnk""".stripMargin
 
-  /** [[hardNegatives]]'s promised scale form, registered: the same
-    * cross-label top-k tail over [[annIvfAt]]-style probed-cell
-    * candidates instead of the exact corpus scan. The round-9 sf1 sweep
-    * measured the brute-force form at slope 39 for a ×10 row step —
-    * quadratic by construction when the anchor set is a corpus fraction
-    * (fine as the DECLARED exactness baseline; the production contract
-    * is a bounded anchor batch). Here per-anchor work is bounded by the
-    * NPROBE probed cells, so total work is linear in the corpus at fixed
-    * cell occupancy — the same contract as [[knnClassifyIvf]].
+  /** [[hardNegatives]]'s scale form: the same cross-label top-k over
+    * [[ivfTopK]] probed-cell candidates instead of the exact corpus
+    * scan. The exact form is quadratic when the anchor set is a corpus
+    * fraction (the sf1 sweep measured slope 39 for a ×10 row step).
+    * Here per-anchor work is bounded by the NPROBE probed cells, so
+    * total work is linear in the corpus at fixed cell occupancy — the
+    * same contract as [[knnClassifyIvf]].
     * Approximation: a cross-label neighbor outside the probed cells is
     * never mined; recovered-pair agreement vs the exact form is measured
     * in PipelineOpsSpec, and the oracle reproduces the probe set exactly
     * so the mined set is deterministic cross-engine. An anchor whose
     * probed cells hold no cross-label vector drops out (both engines). */
-  def hardNegativesIvf(spark: SparkSession, dir: String): DataFrame = {
-    val lbl = embeddings(spark, dir).select(col("vec_id"), col("label"))
-    val pool = ivfAssign(spark, dir).join(lbl, Seq("vec_id"))
-    val kept =
-      if (queryBatchBounded(spark, dir)) {
-        val pb = collectProbeBatch(spark, dir, NPROBE)
-        val lblOf = lbl.filter(col("vec_id") % QUERY_MOD === 0)
-          .collect().map(r => r.getLong(0) -> r.getAs[Number](1).longValue).toMap
-        pool
-          .agg(graft.functions.CellScore.cellScoreTopKExcludeLabel(
-            col("vec_id"), col("embedding"), col("nrm"), col("cell"), col("label"),
-            pb._1, pb._2, pb._3, pb._4, pb._1.map(lblOf), HARDNEG_K).as("tk"))
-          .select(posexplode(col("tk")).as(Seq("p", "s")))
-          .select(col("s.query_id").as("query_id"), col("s.rnk").as("rnk"),
-            col("s.id").as("neighbor_id"), col("s.score").as("cosine"))
-      } else {
-        val q = ivfProbeCells(spark, dir, NPROBE)
-          .join(lbl.select(col("vec_id").as("query_id"),
-            col("label").as("anchor_label")), Seq("query_id"))
-        topkTail(
-          maybeBroadcastQ(spark, dir, q).join(pool, Seq("cell"))
-            .filter(col("query_id") =!= col("vec_id") &&
-              col("label") =!= col("anchor_label"))
-            .select(col("query_id"), col("vec_id").as("neighbor_id"),
-              cosine(col("qe"), col("qn"), col("embedding"), col("nrm")).as("cosine")),
-          HARDNEG_K)
-      }
-    kept
-      .join(lbl.select(col("vec_id").as("query_id"), col("label").as("anchor_label")),
-        Seq("query_id"))
-      .join(lbl.select(col("vec_id").as("neighbor_id"),
-        col("label").as("neighbor_label")), Seq("neighbor_id"))
-      .select(col("query_id").as("anchor_id"), col("anchor_label"), col("rnk"),
-        col("neighbor_id"), col("neighbor_label"), col("cosine"))
-      .orderBy("anchor_id", "rnk")
-  }
+  def hardNegativesIvf(spark: SparkSession, dir: String): DataFrame =
+    withPairLabels(spark, dir,
+      ivfTopK(spark, dir, ivfAssign(spark, dir), NPROBE, HARDNEG_K, crossLabel = true))
 
   val hardNegativesIvfSql: String = {
     val cosNC = sqlCosine("n.embedding", "n.nrm", "c.ce", "c.cn")
@@ -1238,13 +1145,12 @@ object Similarity {
     // per-dim corpus range: a 1-row aggregate (2×dim doubles) collected
     // driver-side like a broadcast copy — bounded at ANY corpus size,
     // so the decode kernel needs no relational fallback. The decode
-    // itself is [[graft.functions.Sq8DecodeExpr]]: the former
-    // transform()+element_at() column form was a higher-order function
-    // Spark never codegens, so the whole projection ran interpreted
-    // (round-12 sf10: 19.6-27.1 s where the same corpus brute-force
-    // scored in 8.61); the kernel is one generated static call per row
-    // with the identical IEEE op chain (annSq8Sql unchanged — cosines
-    // still hash-verify against DuckDB).
+    // itself is [[graft.functions.Sq8DecodeExpr]]: a transform() +
+    // element_at() column form is a higher-order function Spark never
+    // codegens, so the projection would run interpreted (19.6-27.1 s at
+    // sf10 where the same corpus brute-force scored in 8.61); the kernel
+    // is one generated static call per row with the identical IEEE op
+    // chain, so cosines still hash-verify against DuckDB.
     val statRows = d.select(posexplode(col("embedding")).as(Seq("pos", "v")))
       .groupBy(col("pos"))
       .agg(min(col("v").cast("double")).as("mn"), max(col("v").cast("double")).as("mx"))
@@ -1256,18 +1162,8 @@ object Similarity {
         graft.functions.Sq8Decode.sq8RoundTrip(col("embedding"), mins, maxs).as("dq"))
       .select(col("vec_id"), col("dq"), normSq(col("dq")).as("nrm"))
     val qz = Materializer.materialize(decoded)
-    if (queryBatchBounded(spark, dir)) {
-      val qb = collectQueryBatch(qz.filter(col("vec_id") % QUERY_MOD === 0), "dq")
-      scoreAllTail(kernelParallel(qz), "dq", qb, TOPK, "qcos")
-        .orderBy("query_id", "rnk")
-    } else {
-      val q = qz.filter(col("vec_id") % QUERY_MOD === 0)
-        .select(col("vec_id").as("query_id"), col("dq").as("qc"), col("nrm").as("qn"))
-      val scored = broadcast(q).join(qz, col("query_id") =!= col("vec_id"))
-        .select(col("query_id"), col("vec_id").as("neighbor_id"),
-          cosine(col("qc"), col("qn"), col("dq"), col("nrm")).as("qcos"))
-      topkTail(scored, TOPK, "qcos").orderBy("query_id", "rnk")
-    }
+    exactTopK(spark, dir, qz.filter(isQuery), qz, TOPK, emb = "dq", score = "qcos")
+      .orderBy("query_id", "rnk")
   }
 
   val annSq8Sql: String =
@@ -1439,22 +1335,18 @@ object Similarity {
   }
 
   /** (vec_id, m, packed) rows from the encode kernel over the
-    * repartitioned corpus (the materialized d is one small parquet
-    * split at test SF; at real scale the scan is already split and the
-    * exchange is a cheap no-op relative to the N·K·M kernel work). */
-  private def pqPacked(spark: SparkSession, dir: String, d: DataFrame,
-                       centIds: Seq[Long], centVecs: Seq[Seq[Float]]): DataFrame = {
-    val nPart = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    d.repartition(nPart, col("vec_id"))
-      .select(col("vec_id"),
-        posexplode(pqEncode(col("embedding"), centIds, centVecs,
-          PQ_M, PQ_SUB, PQ_PACK)).as(Seq("m", "packed")))
-  }
+    * [[kernelParallel]] corpus (the materialized d is one small parquet
+    * split at test SF). */
+  private def pqPacked(d: DataFrame, centIds: Seq[Long], centVecs: Seq[Seq[Float]]): DataFrame =
+    kernelParallel(d).select(col("vec_id"),
+      posexplode(pqEncode(col("embedding"), centIds, centVecs,
+        PQ_M, PQ_SUB, PQ_PACK)).as(Seq("m", "packed")))
 
-  def annPq(spark: SparkSession, dir: String): DataFrame = {
-    if (queryBatchBounded(spark, dir)) return annPqKernel(spark, dir)
-    annPqRelational(spark, dir)
-  }
+  /** PQ ADC search. It branches on [[queryBatchBounded]] itself rather
+    * than through [[exactTopK]] because its kernel scores codes, not
+    * vectors. */
+  def annPq(spark: SparkSession, dir: String): DataFrame =
+    if (queryBatchBounded(spark, dir)) annPqKernel(spark, dir) else annPqRelational(spark, dir)
 
   /** ADC search via [[graft.functions.PqAdcTopKAgg]] — one pass over
     * per-vector code arrays with a per-executor ADC table built from
@@ -1465,7 +1357,7 @@ object Similarity {
     val codesRel = kernelParallel(d).select(col("vec_id"),
       transform(pqEncode(col("embedding"), centIds, centVecs, PQ_M, PQ_SUB, PQ_PACK),
         p => p.mod(lit(PQ_PACK))).as("codes"))
-    val qRows = d.filter(col("vec_id") % QUERY_MOD === 0)
+    val qRows = d.filter(isQuery)
       .select(col("vec_id"), col("embedding")).collect().sortBy(_.getLong(0))
     codesRel
       .agg(graft.functions.PqAdc.pqAdcTopK(col("vec_id"), col("codes"),
@@ -1480,16 +1372,15 @@ object Similarity {
   /** The join-formulated ADC search — above the bounded-batch contract,
     * and PqKernelSpec's equality reference. */
   private[graft] def annPqRelational(spark: SparkSession, dir: String): DataFrame = {
-    val nPart = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     // Encode via the [[graft.functions.PqEncodeExpr]] kernel: the
     // K-centroid packed-long argmin runs as one tight generated loop
     // per (vector, subspace) — the faiss IndexPQ assignment shape —
     // instead of an N×K×M row fan-out through a join + hash aggregate
-    // (whose struct-min round-5 form fell all the way back to a
-    // single-core SortAggregate over 20M rows).
+    // (whose struct-min form falls back to a single-core SortAggregate
+    // over 20M rows).
     val (d, centIds, centVecs) = pqSetup(spark, dir)
     val codes = Materializer.materialize(
-      pqPacked(spark, dir, d, centIds, centVecs)
+      pqPacked(d, centIds, centVecs)
         .select(col("vec_id"), col("m"), (col("packed") % PQ_PACK).as("code")))
     // Query-side ADC table via the [[graft.functions.PqDistsExpr]]
     // kernel sibling (one flat Q·M·K long array per query, posexploded
@@ -1501,8 +1392,7 @@ object Similarity {
     val K = centIds.length
     val centIdLit = typedlit(centIds)
     val qdist = Materializer.materialize(
-      d.filter(col("vec_id") % QUERY_MOD === 0)
-        .repartition(nPart, col("vec_id"))
+      kernelParallel(d.filter(isQuery))
         .select(col("vec_id").as("query_id"),
           posexplode(pqDists(col("embedding"), centVecs, PQ_M, PQ_SUB))
             .as(Seq("idx", "qdm")))
@@ -1513,7 +1403,7 @@ object Similarity {
     // codes re-spread after the scan-back: the materialized copy is a
     // handful of AQE-coalesced splits, and the ADC probe below fans
     // each code row ×Q — the exchange is 2 longs/row, the fan-out isn't
-    val scored = codes.repartition(nPart, col("vec_id")).join(broadcast(qdist),
+    val scored = kernelParallel(codes).join(broadcast(qdist),
         codes("m") === qdist("m") && codes("code") === qdist("cent_id"))
       .filter(col("query_id") =!= col("vec_id"))
       .groupBy(col("query_id"), col("vec_id"))
@@ -1569,7 +1459,7 @@ object Similarity {
     * aggregate; output constant-size in the corpus. */
   def pqDistortion(spark: SparkSession, dir: String): DataFrame = {
     val (d, centIds, centVecs) = pqSetup(spark, dir)
-    pqPacked(spark, dir, d, centIds, centVecs)
+    pqPacked(d, centIds, centVecs)
       .select(col("m"), expr(s"packed div $PQ_PACK").as("dist_mu"))
       .groupBy(col("m"))
       .agg(count(lit(1)).as("n_vectors"),
@@ -1768,7 +1658,7 @@ object Similarity {
   def jlProjection(spark: SparkSession, dir: String): DataFrame = {
     // repartition the filtered subset: the JL_K-dot projection AND the
     // |queries|² pair kernel below both run over `a`'s partitioning
-    val q = kernelParallel(embeddings(spark, dir).filter(col("vec_id") % QUERY_MOD === 0))
+    val q = kernelParallel(embeddings(spark, dir).filter(isQuery))
       .select(col("vec_id"), col("embedding"),
         array((0 until JL_K).map(j =>
           dotF(col("embedding"), jlPlaneLit(j)).cast("float")): _*).as("proj"))
@@ -1828,20 +1718,7 @@ object Similarity {
     * count, and the selection path is hash-oracle-able in DuckDB. */
   def mmrDiversify(spark: SparkSession, dir: String): DataFrame = {
     val e = withNorm(spark, dir)
-    val q = e.filter(col("vec_id") % QUERY_MOD === 0)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qn"))
-    val pool0 =
-      if (queryBatchBounded(spark, dir)) {
-        val qb = collectQueryBatch(
-          e.filter(col("vec_id") % QUERY_MOD === 0)
-            .select(col("vec_id"), col("embedding"), col("nrm")), "embedding")
-        scoreAllTail(kernelParallel(e), "embedding", qb, MMR_POOL, "cosine")
-      } else topkTail(
-        broadcast(q).join(kernelParallel(e), col("query_id") =!= col("vec_id"))
-          .select(col("query_id"), col("vec_id").as("neighbor_id"),
-            cosine(col("qe"), col("qn"), col("embedding"), col("nrm")).as("cosine")),
-        MMR_POOL)
+    val pool0 = exactTopK(spark, dir, e.filter(isQuery), e, MMR_POOL)
     val cand = Materializer.materialize(
       pool0.select(col("query_id"), col("neighbor_id").as("cid"),
         floor(col("cosine") * 1000000.0 + lit(0.5)).cast("long").as("rel_mu")))
@@ -2001,7 +1878,7 @@ object Similarity {
   def negativePairs(spark: SparkSession, dir: String): DataFrame = {
     val e = embeddings(spark, dir)
     val nRow = e.agg(count(lit(1)).as("nn"))
-    val cands = e.filter(col("vec_id") % QUERY_MOD === 0)
+    val cands = e.filter(isQuery)
       .select(col("vec_id").as("anchor_id"), col("label").as("anchor_label"))
       .crossJoin(broadcast(nRow))
       .select(col("anchor_id"), col("anchor_label"), col("nn"),
@@ -2047,32 +1924,24 @@ object Similarity {
     * ≤K-element sequence on the ≤|queries|-row aggregate) are exact
     * longs; rr and ndcg are single IEEE divisions of exact integers.
     *
-    * Scale shape: the scoring scan is [[annBruteforce]]'s broadcast-
-    * query codegen'd projection; per-label corpus counts are a tiny
-    * aggregate broadcast back; everything after the top-K filter
-    * operates on ≤ K·|queries| rows. */
+    * Scale shape: the ranking is [[exactTopK]]; per-label corpus
+    * counts are a tiny aggregate broadcast back; everything after the
+    * top-K operates on ≤ K·|queries| rows. */
   def retrievalEval(spark: SparkSession, dir: String): DataFrame = {
     val e = embeddings(spark, dir).select(col("vec_id"), col("embedding"),
       normSq(col("embedding")).as("nrm"), col("label"))
-    val q = e.filter(col("vec_id") % QUERY_MOD === 0)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
-        col("nrm").as("qn"))
-    val labelCnt = e.groupBy(col("label")).agg(count(lit(1)).as("lblN"))
+    retrievalMetrics(spark, dir, exactTopK(spark, dir, e.filter(isQuery), e, EVAL_K))
+  }
+
+  /** Per-query rr, precision@K and NDCG@K of a ranking (query_id, rnk,
+    * neighbor_id). The denominators come from the full per-label counts
+    * (a tiny broadcast aggregate), so an approximate ranking is graded
+    * against what an exact retriever could reach. */
+  private def retrievalMetrics(spark: SparkSession, dir: String, kept: DataFrame): DataFrame = {
+    val lbl = embeddings(spark, dir).select(col("vec_id"), col("label"))
+    val labelCnt = lbl.groupBy(col("label")).agg(count(lit(1)).as("lblN"))
     val gainMu = floor(log(lit(2.0)) / log(lit(1.0) + col("rnk")) *
       1000000.0 + lit(0.5)).cast("long")
-    val lbl = embeddings(spark, dir).select(col("vec_id"), col("label"))
-    val kept =
-      if (queryBatchBounded(spark, dir)) {
-        val qb = collectQueryBatch(
-          e.filter(col("vec_id") % QUERY_MOD === 0)
-            .select(col("vec_id"), col("embedding"), col("nrm")), "embedding")
-        scoreAllTail(kernelParallel(e.select(col("vec_id"), col("embedding"),
-          col("nrm"))), "embedding", qb, EVAL_K, "cosine")
-      } else topkTail(
-        broadcast(q).join(kernelParallel(e), col("query_id") =!= col("vec_id"))
-          .select(col("query_id"), col("vec_id").as("neighbor_id"),
-            cosine(col("qe"), col("qn"), col("embedding"), col("nrm")).as("cosine")),
-        EVAL_K)
     val ranked = kept
       .join(lbl.select(col("vec_id").as("query_id"), col("label").as("qlabel")),
         Seq("query_id"))
@@ -2139,64 +2008,17 @@ object Similarity {
        |FROM f ORDER BY query_id""".stripMargin
   }
 
-  /** [[retrievalEval]] over the IVF index instead of the exact scan —
-    * the scaladoc-promised "swap in [[annIvfAt]]'s output to grade that
-    * index" form, registered. The round-9 sf1 sweep measured the exact
-    * form at slope 30 for a ×10 row step (quadratic by construction when
-    * the eval-query set is a corpus fraction); here the scoring scan is
-    * probe-bounded per query, linear in the corpus at fixed cell
-    * occupancy. The metric DENOMINATORS stay exact: `n_rel_corpus` and
-    * the ideal DCG come from the full per-label counts (a tiny broadcast
-    * aggregate), so the numbers grade the IVF index against what an
-    * exact retriever could achieve — recall lost to un-probed cells
-    * shows up as lower ndcg/precision, which is the point of the eval.
-    * A query whose probed cells hold no other vector drops out (both
-    * engines, deterministically). */
-  def retrievalEvalIvf(spark: SparkSession, dir: String): DataFrame = {
-    val lbl = embeddings(spark, dir).select(col("vec_id"), col("label"))
-    val labelCnt = lbl.groupBy(col("label")).agg(count(lit(1)).as("lblN"))
-    val pool = ivfAssign(spark, dir)
-    val gainMu = floor(log(lit(2.0)) / log(lit(1.0) + col("rnk")) *
-      1000000.0 + lit(0.5)).cast("long")
-    val kept =
-      if (queryBatchBounded(spark, dir))
-        cellScoreTail(pool, collectProbeBatch(spark, dir, NPROBE), EVAL_K)
-      else topkTail(
-        maybeBroadcastQ(spark, dir, ivfProbeCells(spark, dir, NPROBE))
-          .join(pool, Seq("cell"))
-          .filter(col("query_id") =!= col("vec_id"))
-          .select(col("query_id"), col("vec_id").as("neighbor_id"),
-            cosine(col("qe"), col("qn"), col("embedding"), col("nrm")).as("cosine")),
-        EVAL_K)
-    val ranked = kept
-      .join(lbl.select(col("vec_id").as("query_id"), col("label").as("qlabel")),
-        Seq("query_id"))
-      .join(lbl.select(col("vec_id").as("neighbor_id"), col("label")),
-        Seq("neighbor_id"))
-      .withColumn("rel", (col("label") === col("qlabel")).cast("long"))
-    val perQ = ranked
-      .groupBy(col("query_id"), col("qlabel"))
-      .agg(sum(col("rel")).as("n_rel_topk"),
-        sum(col("rel") * gainMu).as("dcg_mu"),
-        min(when(col("rel") === 1L, col("rnk"))).as("first_rel"))
-      .join(broadcast(labelCnt), col("qlabel") === col("label"))
-      .withColumn("n_rel_corpus", col("lblN") - 1)
-    val idcgMu = when(col("n_rel_corpus") >= 1,
-      aggregate(sequence(lit(1), least(col("n_rel_corpus"), lit(EVAL_K)).cast("int")),
-        lit(0L), (acc, i) =>
-          acc + floor(log(lit(2.0)) / log(lit(1.0) + i) * 1000000.0 + lit(0.5))
-            .cast("long"))).otherwise(lit(0L))
-    perQ
-      .withColumn("idcg_mu", idcgMu)
-      .select(col("query_id"), col("qlabel").as("label"),
-        col("n_rel_corpus"), col("n_rel_topk"),
-        coalesce(lit(1.0) / col("first_rel"), lit(0.0)).as("rr"),
-        (col("n_rel_topk").cast("double") / EVAL_K).as("precision_k"),
-        when(col("idcg_mu") > 0,
-          col("dcg_mu").cast("double") / col("idcg_mu").cast("double"))
-          .otherwise(lit(0.0)).as("ndcg"))
-      .orderBy("query_id")
-  }
+  /** [[retrievalEval]] over the IVF index instead of the exact scan:
+    * the same [[retrievalMetrics]] over [[ivfTopK]]'s ranking. The exact
+    * form is quadratic when the eval-query set is a corpus fraction (the
+    * sf1 sweep measured slope 30 for a ×10 row step); here the scoring
+    * scan is probe-bounded per query, linear in the corpus at fixed cell
+    * occupancy. The metric denominators stay exact, so recall lost to
+    * un-probed cells shows up as lower ndcg/precision, which is the
+    * point of the eval. A query whose probed cells hold no other vector
+    * drops out (both engines, deterministically). */
+  def retrievalEvalIvf(spark: SparkSession, dir: String): DataFrame =
+    retrievalMetrics(spark, dir, ivfTopK(spark, dir, ivfAssign(spark, dir), NPROBE, EVAL_K))
 
   val retrievalEvalIvfSql: String = {
     val cosNC = sqlCosine("n.embedding", "n.nrm", "c.ce", "c.cn")

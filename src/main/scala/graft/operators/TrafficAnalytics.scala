@@ -7,6 +7,8 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 import graft.Materializer
 import graft.Tables._
+import graft.streaming.StreamingAnalytics
+import graft.streaming.StreamingAnalytics.{pageViewsCounts, sessionCategoryCounts, withPercentage}
 
 /** Reference-parity web-traffic analytics, re-expressed over the testbed
   * `events` table (`value` = metric, `event_type` = category, `ts` = event
@@ -37,18 +39,10 @@ object TrafficAnalytics {
   val MEDIUM_MAX = 150.0
 
   // A3 engagement avg/min/max per 5-min window
-  // (spark_streaming_new.py:198-212 / batch_stream.sql:57-74)
+  // (spark_streaming_new.py:198-212 / batch_stream.sql:57-74); the
+  // streaming transform is the one formulation, sorted for presentation
   def engagementWindowed(spark: SparkSession, dir: String): DataFrame =
-    events(spark, dir)
-      .groupBy(window(col("ts"), "5 minutes").as("w"))
-      .agg(
-        davg(col("value")).as("avg_score"),
-        min(col("value")).as("min_score"),
-        max(col("value")).as("max_score"))
-      .select(
-        col("w.start").as("window_start"), col("w.end").as("window_end"),
-        col("avg_score"), col("min_score"), col("max_score"))
-      .orderBy("window_start")
+    StreamingAnalytics.engagementWindowed(events(spark, dir)).orderBy("window_start")
 
   val engagementWindowedSql: String =
     s"""SELECT time_bucket(INTERVAL '5 minutes', ts) AS window_start,
@@ -84,21 +78,8 @@ object TrafficAnalytics {
 
   // A1+W1 page-views distribution per window with percentage-of-partition
   // (spark_streaming_new.py:142-153 / batch_stream.sql:6-21)
-  def pageViewsDistribution(spark: SparkSession, dir: String): DataFrame = {
-    val byW = Window.partitionBy(col("w"))
-    events(spark, dir)
-      .select(
-        window(col("ts"), "5 minutes").as("w"),
-        floor(col("value") / 10).cast("int").as("page_views"))
-      .groupBy(col("w"), col("page_views"))
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("percentage",
-        col("cnt") * 100.0 / sum(col("cnt")).over(byW))
-      .select(
-        col("w.start").as("window_start"), col("w.end").as("window_end"),
-        col("page_views"), col("cnt"), col("percentage"))
-      .orderBy("window_start", "page_views")
-  }
+  def pageViewsDistribution(spark: SparkSession, dir: String): DataFrame =
+    withPercentage(pageViewsCounts(events(spark, dir))).orderBy("window_start", "page_views")
 
   val pageViewsDistributionSql: String =
     """WITH b AS (
@@ -119,21 +100,9 @@ object TrafficAnalytics {
 
   // P6+A2+W1 session categorization per window
   // (spark_streaming_new.py:168-183 / batch_stream.sql:27-50)
-  def sessionCategories(spark: SparkSession, dir: String): DataFrame = {
-    val byW = Window.partitionBy(col("w"))
-    events(spark, dir)
-      .select(
-        window(col("ts"), "5 minutes").as("w"),
-        sessionCategory(col("value")).as("session_category"))
-      .groupBy(col("w"), col("session_category"))
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("percentage",
-        col("cnt") * 100.0 / sum(col("cnt")).over(byW))
-      .select(
-        col("w.start").as("window_start"), col("w.end").as("window_end"),
-        col("session_category"), col("cnt"), col("percentage"))
+  def sessionCategories(spark: SparkSession, dir: String): DataFrame =
+    withPercentage(sessionCategoryCounts(events(spark, dir)))
       .orderBy("window_start", "session_category")
-  }
 
   val sessionCategoriesSql: String =
     s"""WITH b AS (

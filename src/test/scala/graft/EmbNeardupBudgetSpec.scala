@@ -32,13 +32,8 @@ class EmbNeardupBudgetSpec extends AnyFunSuite {
   }
 
   test("budget ⊆ ball with recall ≥ 0.7 where p > PROBE_PLANES (sf1_synth)") {
-    // needs the round-9 synthetic ×10 replica (20k vectors → p = 8);
-    // regenerate with `runMain graft.ScaleProbe /root/testdata/sf0.1
-    // target/sf1_synth 10` if absent
-    val dir = "target/sf1_synth"
-    assume(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$dir/embeddings.parquet")),
-      s"$dir not generated — skipping the p > PROBE_PLANES recall check")
+    // the synthetic ×10 replica: 20k vectors → p = 8 planes
+    val dir = Synth20k.dir
     val budget = Similarity.embeddingNeardup(spark, dir).select("v1", "v2")
     val ball = Similarity.embeddingNeardupBall(spark, dir).select("v1", "v2")
     assert(budget.exceptAll(ball).isEmpty, "budget emitted a pair outside the ball")

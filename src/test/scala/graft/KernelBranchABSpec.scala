@@ -26,19 +26,7 @@ class KernelBranchABSpec extends AnyFunSuite {
     "q_hard_negatives", "q_hardneg_ivf", "q_ann_sq8", "q_ann_pq",
     "q_mmr_diversify", "q_retrieval_eval", "q_retrieval_ivf")
 
-  /** 20 K-vector corpus: sf0.1 embeddings ×10 via the ScaleProbe
-    * fidelity contract (key remap + circular-shift decorrelation).
-    * Generated once per workspace; the _SUCCESS marker makes reruns
-    * free. Embeddings only — the Similarity family reads no other
-    * table. */
-  private lazy val dir: String = {
-    val out = "target/ab20k_synth"
-    val marker = java.nio.file.Paths.get(s"$out/embeddings.parquet/_SUCCESS")
-    if (!java.nio.file.Files.exists(marker))
-      ScaleProbe.synthesize(spark, "/root/testdata/sf0.1", out, 10,
-        Some(Set("embeddings")))
-    out
-  }
+  private def dir: String = Synth20k.dir
 
   test("kernel ≡ relational for every gated registry query at 20k vectors") {
     val fns = SparkEntry.queries
